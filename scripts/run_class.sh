@@ -1,5 +1,6 @@
 #!/bin/bash
-# Direct JVM runner for graft mains (no sbt lock): scripts/run_class.sh graft.Bench [args...]
+# Direct JVM runner for graft mains (no sbt lock):
+#   scripts/run_class.sh graft.Inspect q_sim_ivf --sf <dir> [--reps n]
 # JVM flags mirror build.sbt's forked run settings so timings are
 # comparable with `sbt runMain`.
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"

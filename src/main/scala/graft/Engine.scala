@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Session facade for the engine.
   *
@@ -10,18 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * MR/Tez/Spark-RDD). On Spark, that whole lifecycle IS Catalyst + Tungsten,
   * so the engine owns only what Hive's `SessionState`/`HiveConf` owned:
   * session configuration, catalog/view bootstrap, and function registration
-  * (ref: `ql/exec/FunctionRegistry.java:193-533`).
-  *
-  * Scale posture (targets a 1000-executor / 100 TB deployment even though
-  * tests run on local[32]):
-  *   - AQE on: runtime join re-planning replaces Hive's
-  *     `CommonJoinResolver` (runtime mapjoin conversion) and
-  *     `SkewJoinResolver` (runtime skew splits).
-  *   - autoBroadcastJoinThreshold 64m: dimension tables (region, nation,
-  *     supplier, part at TPC-H shape) broadcast instead of shuffling the
-  *     fact table.
-  *   - shuffle.partitions is a session-level default only; AQE coalesces
-  *     to the data's real size at runtime.
+  * (ref: `ql/exec/FunctionRegistry.java:193-533`). The scale posture in
+  * `conf` targets a 1000-executor / 100 TB deployment even though tests
+  * run locally.
   */
 object Engine {
 
@@ -30,34 +24,61 @@ object Engine {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The engine's dialect and planner posture, all runtime SQLConf:
+    * `session()` builds it in (`newSession()` and Spark Connect sessions
+    * inherit it) and `prepare()` re-applies it to any session. */
+  val conf: Seq[(String, String)] = Seq(
+    // Hive 2.x arithmetic is non-ANSI: '' casts to NULL, overflow wraps
+    // (SURVEY.md §7.3 dialect list)
+    "spark.sql.ansi.enabled" -> "false",
+    // Hive char(n) semantics: CAST pads and comparisons see the padded
+    // value (serde2/typeinfo/CharTypeInfo.java); without this Spark
+    // treats CHAR(n)/VARCHAR(n) casts as plain STRING.
+    "spark.sql.preserveCharVarcharTypeInfo" -> "true",
+    // Hive's LazyMap keeps the LAST duplicate key (LinkedHashMap put)
+    "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
+    // (decimal allowPrecisionLoss stays at Spark's default: that IS
+    // Hive 2.x's deriveResultDecimalTypeInfo rule)
+    // AQE: runtime join re-planning replaces Hive's CommonJoinResolver
+    // (runtime mapjoin) and SkewJoinResolver; it also coalesces the
+    // session-default shuffle partitions to the data's real size
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // dimension tables (region, nation, supplier, part at TPC-H shape)
+    // broadcast instead of shuffling the fact table
+    "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+    // Local-bench sizing: testdata tables are single ~1-40 MB parquet
+    // files; the 128m default would scan each in ONE task, idling the
+    // other cores. (A 100 TB deployment keeps the default — files
+    // there are many and block-sized.)
+    "spark.sql.files.maxPartitionBytes" -> "8m",
+    "spark.sql.files.openCostInBytes" -> "1m",
+    // ObjectHashAggregate (collect_list/percentile/sketches) falls back
+    // to SORT-based aggregation after 128 distinct keys per task, which
+    // for inverted-index builds (collect_list over ~30k shingles) sorts
+    // the whole exploded stream; 64k small buffers fit in task memory
+    // and the sort fallback stays the safety valve beyond that.
+    // Measured: the jaccard postings stage 4.1 s -> 1.6 s at sf0.1.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536")
+
+  /** Local core budget; `SPARK_GRAFT_CPUS` sizes the deployment. */
+  private val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def session(appName: String = "graft",
-              master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int =
-                sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-                  .toInt): SparkSession = {
+              master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus): SparkSession = {
     val spark = SparkSession.builder()
+      .config(conf.toMap)
       .appName(appName)
       .master(master)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // Local-bench sizing: testdata tables are single ~1-40 MB parquet
-      // files; the 128m default would scan each in ONE task, idling 31
-      // cores. 4m splits sf0.1 scans across the box. (A 100 TB deployment
-      // keeps the default — files there are many and block-sized.)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // AQE coalesces shuffles to actual data size at runtime; keep the
-      // pre-AQE partition count modest so stage task counts match the
-      // local core budget rather than a cluster's.
-      // scale-dependent: default matches the local core budget; a
-      // cluster deployment sets SPARK_GRAFT_SHUFFLE_PARTITIONS to
-      // 2-3x total executor cores and AQE coalesces downward from it
+      // AQE coalesces shuffles to actual data size at runtime; the
+      // pre-AQE partition count matches the local core budget, and a
+      // cluster deployment passes 2-3x total executor cores
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         shufflePartitions.toString)
       // iterative operators localCheckpoint transient state; the
@@ -65,50 +86,38 @@ object Engine {
       // and the default periodic GC (30 min) lets them pile up across
       // many short queries in one JVM
       .config("spark.cleaner.periodicGC.interval", "1min")
-      // ObjectHashAggregate (collect_list/percentile/sketches) falls back
-      // to SORT-based aggregation after only 128 distinct keys per task —
-      // for inverted-index builds (collect_list over ~30k shingles) that
-      // means sorting the full exploded stream per task. 64k keys of
-      // small object buffers fit comfortably in task memory; beyond that
-      // the sort fallback still engages as the safety valve. Measured:
-      // the jaccard postings stage dropped 4.1 s -> 1.6 s at sf0.1.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536"))
-      // Hive 2.x arithmetic is non-ANSI (overflow wraps, bad casts -> NULL);
-      // keep ANSI off so dialect-sensitive expressions match the reference.
-      .config("spark.sql.ansi.enabled", "false")
-      // Hive char(n) semantics: CAST pads and comparisons see the padded
-      // value (serde2/typeinfo/CharTypeInfo.java); without this Spark
-      // treats CHAR(n)/VARCHAR(n) casts as plain STRING.
-      .config("spark.sql.preserveCharVarcharTypeInfo", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.Registry.registerAll(spark)
     spark
   }
 
-  /** Ensure gap functions + the engine's dialect/runtime posture on any
-    * session, including externally-built ones (the driver's smoke test
-    * hands us its own). Everything set here is runtime-settable SQLConf. */
+  /** Ensure gap functions + the engine's `conf` table on any session,
+    * including externally-built ones (the driver's smoke test hands us
+    * its own); per-session settings stay as the caller set them. */
   def prepare(spark: SparkSession): SparkSession = {
     functions.Registry.registerAll(spark)
-    // Hive 2.x is non-ANSI: '' casts to NULL, overflow wraps
-    // (SURVEY.md §7.3 dialect list)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.preserveCharVarcharTypeInfo", "true")
-    // Hive's LazyMap keeps the LAST duplicate key (LinkedHashMap put)
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    // Spark's default decimal scale-trim rule (allowPrecisionLoss=
-    // true) IS Hive 2.x's deriveResultDecimalTypeInfo rule — keep it
-    // (the no-loss mode NULLs large products Hive can represent)
-    spark.conf.set("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536"))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
+  }
+
+  /** The one leaf rule behind `spread` and `Present.provablyLarge`: what
+    * a scan leaf proves from metadata alone — `bytes`, the relation's own
+    * `sizeInBytes` (`Long.MaxValue` when the source cannot say), and
+    * `tasks`, a lower bound on its scan tasks. A checkpointed
+    * intermediate (LogicalRDD) proves only its partition count. */
+  private[graft] final case class LeafScale(bytes: Option[Long], tasks: () => Option[Int])
+
+  private[graft] def leafScale(p: LogicalPlan): Option[LeafScale] = p match {
+    case l: LogicalRDD => Some(LeafScale(None, () => Some(l.rdd.getNumPartitions)))
+    case r: LogicalRelation => Some(LeafScale(Some(r.relation.sizeInBytes),
+      () => r.relation match {
+        // file count is a LOWER bound on scan tasks (block splitting
+        // only raises parallelism, never lowers it)
+        case fs: HadoopFsRelation => Some(fs.location.inputFiles.length)
+        case _ => None
+      }))
+    case _ => None
   }
 
   /** Scale-adaptive spread after an unsplittable read (optimization
@@ -122,36 +131,23 @@ object Engine {
     * when parallelism is already ample — the 100 TB case: block-sized
     * files >> total cores — this is a NO-OP and no shuffle is added.
     *
-    * The decision reads plan metadata only (file counts / checkpointed
-    * RDD partition counts), never runs a job, and deliberately returns
-    * the input unchanged for plan shapes whose parallelism it cannot
-    * prove cheaply (joins, aggregates): repartitioning those at scale
-    * could coalesce a huge intermediate. Results are unaffected at any
-    * decision: `key`-hash placement feeds only order-insensitive
+    * The decision reads plan metadata only (`leafScale` at the end of a
+    * narrow Project/Filter chain), never runs a job, and deliberately
+    * returns the input unchanged for plan shapes whose parallelism it
+    * cannot prove cheaply (joins, aggregates): repartitioning those at
+    * scale could coalesce a huge intermediate. Results are unaffected
+    * at any decision: `key`-hash placement feeds only order-insensitive
     * aggregations downstream.
     */
-  def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    // dev A/B toggle: SPARK_GRAFT_NOSPREAD=1 disables every conditional
-    // spread so a spread's win can be measured in isolation
-    if (sys.env.get("SPARK_GRAFT_NOSPREAD").contains("1")) return df
+  def spread(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    def leafParallelism(p: LogicalPlan): Option[Int] = p match {
-      case l: LogicalRDD => Some(l.rdd.getNumPartitions)
-      case r: LogicalRelation => r.relation match {
-        // file count is a LOWER bound on scan tasks (block splitting
-        // only raises parallelism, never lowers it)
-        case fs: HadoopFsRelation => Some(fs.location.inputFiles.length)
-        case _ => None
-      }
-      case p: Project => leafParallelism(p.child)
-      case f: Filter => leafParallelism(f.child)
-      case s: SubqueryAlias => leafParallelism(s.child)
-      case _ => None
+    def scanTasks(p: LogicalPlan): Option[Int] = p match {
+      case p: Project => scanTasks(p.child)
+      case f: Filter => scanTasks(f.child)
+      case s: SubqueryAlias => scanTasks(s.child)
+      case leaf => leafScale(leaf).flatMap(_.tasks())
     }
-    leafParallelism(df.queryExecution.analyzed) match {
+    scanTasks(df.queryExecution.analyzed) match {
       case Some(n) if n * 2 <= target => df.repartition(target, key)
       case _ => df
     }

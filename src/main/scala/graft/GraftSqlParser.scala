@@ -32,9 +32,6 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
   override def parsePlan(sqlText: String): LogicalPlan =
     if (!engaged) delegate.parsePlan(sqlText)
     else {
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(s"[graftparser] session=${System.identityHashCode(session)} " +
-          s"q=${sqlText.linesIterator.mkString(" ").take(60)}")
       reentrant.set(true)
       try statements(session).plan(sqlText)
       finally reentrant.set(false)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 
 /** Deterministic presentation ordering for verification outputs.
   *
@@ -13,7 +14,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the same total order with the query executed exactly once.
   *
   * The single-partition form is applied ONLY when the input is provably
-  * presentation-small (metadata probe below, same discipline as
+  * presentation-small (metadata probe below, the same leaf rule as
   * Engine.spread); a provably large input keeps the scalable range sort
   * — identical total order, it just parallelizes — so no declared query
   * funnels a cluster-scale result through one task. Every call site uses
@@ -22,49 +23,38 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Present {
 
-  /** Above this provable input size (bytes summed over file-scan
-    * leaves, metadata only) the presentation sort stays a range sort.
-    * Local testdata is ≤ tens of MB, so the default never flips a
-    * local plan; a 100 TB table flips every scan-shaped pipeline.
-    * Overridable for tests/deployments via system property
-    * `graft.present.maxbytes` or env SPARK_GRAFT_PRESENT_MAXBYTES. */
-  private def maxSmallBytes: Long =
-    sys.props.get("graft.present.maxbytes")
-      .orElse(sys.env.get("SPARK_GRAFT_PRESENT_MAXBYTES"))
-      .map(_.toLong).getOrElse(1L << 30)
+  /** Above this provable input size (bytes summed over scan leaves,
+    * metadata only) the presentation sort stays a range sort. Local
+    * testdata is ≤ tens of MB, so the bound never flips a local plan;
+    * a 100 TB table flips every scan-shaped pipeline. */
+  private[graft] val MaxSmallBytes: Long = 1L << 30
 
-  /** Metadata-only largeness probe: file-scan leaves contribute their
-    * FileIndex size; a checkpointed intermediate (LogicalRDD) counts as
-    * large when its partition count says it was produced by a far wider
-    * cluster than this session (a local checkpoint of a small
-    * intermediate has at most `defaultParallelism` partitions). Never
-    * runs a job. Unknown shapes stay "small" — the status quo — because
-    * every such call site is an aggregate/pair output bounded well
-    * below its input. */
-  private[graft] def provablyLarge(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val bound = maxSmallBytes
+  /** Metadata-only largeness probe over `Engine.leafScale`: leaf bytes
+    * sum, saturating (a source that cannot say reports `Long.MaxValue`);
+    * a checkpoint is large when it has over 4x the partitions a local
+    * one ever gets (≤ `defaultParallelism`): a far wider cluster made
+    * it. Shapes with no scan leaf stay "small": every such call site is
+    * an aggregate/pair output bounded well below its input. */
+  private[graft] def provablyLarge(df: DataFrame, maxSmallBytes: Long): Boolean = {
     val wide = 4L * df.sparkSession.sparkContext.defaultParallelism
-    var bytes = 0L
-    var large = false
-    df.queryExecution.analyzed.foreach {
-      case r: LogicalRelation => r.relation match {
-        case fs: HadoopFsRelation => bytes += fs.location.sizeInBytes
-        case _ =>
-      }
-      case l: LogicalRDD => if (l.rdd.getNumPartitions > wide) large = true
-      case _ =>
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+      .flatMap(Engine.leafScale)
+    val bytes = leaves.flatMap(_.bytes).foldLeft(0L) { (sum, b) =>
+      if (b > Long.MaxValue - sum) Long.MaxValue else sum + b
     }
-    large || bytes > bound
+    bytes > maxSmallBytes ||
+      leaves.exists(l => l.bytes.isEmpty && l.tasks().exists(_ > wide))
   }
 
+  /** `cols` order for presentation under an explicit size bound. */
+  private[graft] def sorted(df: DataFrame, maxSmallBytes: Long,
+                            cols: Seq[Column]): DataFrame =
+    if (provablyLarge(df, maxSmallBytes)) df.orderBy(cols: _*)
+    else df.repartition(1).sortWithinPartitions(cols: _*)
+
   implicit class PresentOps(private val df: DataFrame) extends AnyVal {
-    def presentSorted(cols: Column*): DataFrame =
-      if (Present.provablyLarge(df)) df.orderBy(cols: _*)
-      else df.repartition(1).sortWithinPartitions(cols: _*)
+    def presentSorted(cols: Column*): DataFrame = sorted(df, MaxSmallBytes, cols)
     def presentSorted(c: String, cs: String*): DataFrame =
-      if (Present.provablyLarge(df)) df.orderBy(c, cs: _*)
-      else df.repartition(1).sortWithinPartitions(c, cs: _*)
+      sorted(df, MaxSmallBytes, (c +: cs).map(col))
   }
 }

@@ -127,7 +127,7 @@ object Dedup {
     *   None (the default) keeps AQE coalescing for pipelines whose
     *   pair stage is provably tiny (post-dedup chains), where extra
     *   task launches cost more than the parallelism wins — both
-    *   choices measured, see OPTIMIZATION_r14.md. */
+    *   choices measured, see CHANGES.md. */
   def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3,
                    maxShingleFreq: Option[Int] = None,
                    textCol: String = "text",
@@ -367,8 +367,6 @@ object Dedup {
       labels = next.select("node", "label")
       converged = !anyChange
       i += 1
-      if (sys.props.contains("graft.cc.log"))
-        System.err.println(s"[cc] round $i changed=$anyChange")
     }
     labels.select(col("node").as("doc_id"), col("label").as("group_id"))
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Present._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -238,37 +238,33 @@ object Similarity {
     // The training loop's queries shuffle nothing but k-row aggregates;
     // AQE's per-query re-planning jobs are pure overhead there (guide
     // §2.4 — the fixed driver cost per stage IS the cost at kilobyte
-    // state). Scope it off for the loop only and restore after: this
-    // only ever changes scheduling of the tiny training queries, never
-    // a result. The serving-side query below keeps AQE.
-    val aqeBefore = c.sparkSession.conf.get("spark.sql.adaptive.enabled")
-    c.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
-    var centroids: Array[(Long, Array[Double])] = null
-    try {
-      // deterministic seeds: k smallest hashes of the id — the centroid
-      // label is the hash itself (any distinct label works; contiguity
-      // is not needed). Plans as TakeOrderedAndProject: parallel
-      // partial top-k, only k rows ever reach the driver.
-      centroids = c
-        .select(xxhash64(col("cid")).as("centroid_id"), col("v").as("cv"))
-        .orderBy("centroid_id").limit(nCentroids)
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val dim = centroids.head._2.length
-      (1 to iters).foreach { _ =>
-        // one aggregation per Lloyd step: group by nearest centroid,
-        // per-dimension mean as dim codegen'd avg expressions (same
-        // sum/count merge the posexplode+avg formulation computed,
-        // minus its 64x row fanout and two extra shuffles)
-        val means = (0 until dim).map(i => avg(col("v")(i)).as(s"m$i"))
-        centroids = c.groupBy(nearest(centroids)(col("v")).as("centroid_id"))
-          .agg(means.head, means.tail: _*)
-          .collect()
-          .map(r => (r.getLong(0),
-            Array.tabulate(dim)(i => r.getDouble(i + 1))))
-      }
-    } finally
-      c.sparkSession.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    // state). Scope it off for the loop's collects only: the session,
+    // other threads' queries and the serving-side query below keep AQE,
+    // and no result depends on it. Deterministic seeds: the k smallest
+    // hashes of the id, the label being the hash itself (any distinct
+    // label works). Plans as TakeOrderedAndProject: parallel partial
+    // top-k, only k rows ever reach the driver.
+    val seeds = GraftSqlShim.collectNonAdaptive(c
+      .select(xxhash64(col("cid")).as("centroid_id"), col("v").as("cv"))
+      .orderBy("centroid_id").limit(nCentroids))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    if (seeds.isEmpty) { // empty corpus: no lists, nothing to score
+      c.unpersist()
+      return bruteForceTopK(corpus, queries, k, idCol, vecCol)
+    }
+    // one aggregation per Lloyd step: group by nearest centroid,
+    // per-dimension mean as dim codegen'd avg expressions (same
+    // sum/count merge the posexplode+avg formulation computed,
+    // minus its 64x row fanout and two extra shuffles)
+    val dim = seeds.head._2.length
+    val means = (0 until dim).map(i => avg(col("v")(i)).as(s"m$i"))
+    val centroids = (1 to iters).foldLeft(seeds) { (cs, _) =>
+      GraftSqlShim.collectNonAdaptive(
+        c.groupBy(nearest(cs)(col("v")).as("centroid_id"))
+          .agg(means.head, means.tail: _*))
+        .map(r => (r.getLong(0),
+          Array.tabulate(dim)(i => r.getDouble(i + 1))))
+    }
     // inverted lists: a pure projection over the corpus scan with the
     // final centroids — no shuffle, no checkpoint; vectors stay on the
     // row so scoring needs no re-join

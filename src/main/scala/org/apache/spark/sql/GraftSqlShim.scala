@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan
 
 /** Bridge to `private[sql]` Catalyst plumbing (Column <-> Expression).
   * Lives under org.apache.spark.sql solely for access; no Spark internals
@@ -28,4 +32,17 @@ object GraftSqlShim {
     * ColumnNodeExpression wrapper would never be converted there. */
   def eagerExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Collects `df` through a plan that never goes adaptive, without
+    * touching any conf: the session, and every query other threads plan
+    * on it meanwhile, keep their AQE setting. (A cloned session would
+    * do too, but each clone misses the generated-code cache.) */
+  def collectNonAdaptive(df: DataFrame): Array[Row] = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = new QueryExecution(session, df.queryExecution.logical) {
+      override protected def preparations: Seq[Rule[SparkPlan]] =
+        super.preparations.filterNot(_.isInstanceOf[InsertAdaptiveSparkPlan])
+    }
+    new classic.Dataset[Row](qe, ExpressionEncoder(qe.analyzed.schema)).collect()
+  }
 }

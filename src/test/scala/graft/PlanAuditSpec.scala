@@ -326,16 +326,49 @@ class PlanAuditSpec extends SparkSpec {
     val small = df.presentSorted("l_orderkey", "l_linenumber")
     assert(small.queryExecution.executedPlan.toString
       .contains("Exchange SinglePartition, REPARTITION_BY_NUM"))
-    // shrink the bound below the file size: the SAME call now plans the
+    // a bound below the file size: the SAME sort now plans the
     // parallel range sort (what a 100 TB input gets)
-    sys.props.put("graft.present.maxbytes", "16")
+    val large = Present.sorted(df, maxSmallBytes = 16,
+      Seq(col("l_orderkey"), col("l_linenumber")))
+    val p = large.queryExecution.executedPlan.toString
+    assert(p.contains("rangepartitioning"), p.take(800))
+    assert(!p.contains("Exchange SinglePartition"), p.take(800))
+    assert(large.collect().toSeq === small.collect().toSeq)
+  }
+
+  test("presentSorted over a JDBC storage-handler table: the scale probe " +
+      "reads the relation's own size, so a source that cannot say keeps " +
+      "the range sort") {
+    import graft.Present._
+    val dbDir = java.nio.file.Files.createTempDirectory("graft_derby_probe")
+    val url = s"jdbc:derby:$dbDir/db;create=true"
+    Class.forName("org.apache.derby.iapi.jdbc.AutoloadedDriver")
+    val conn = java.sql.DriverManager.getConnection(url)
     try {
-      val large = df.presentSorted("l_orderkey", "l_linenumber")
-      val p = large.queryExecution.executedPlan.toString
+      val st = conn.createStatement()
+      st.execute("CREATE TABLE EMP (ID INT NOT NULL, NAME VARCHAR(32))")
+      st.execute("INSERT INTO EMP VALUES (3,'cat'), (1,'ann'), (2,'bob')")
+    } finally conn.close()
+    val h = new HiveStatements(spark)
+    h.sql("DROP TABLE IF EXISTS jdbc_probe_t")
+    h.sql(s"""CREATE EXTERNAL TABLE jdbc_probe_t
+      STORED BY 'org.apache.hive.storage.jdbc.JdbcStorageHandler'
+      TBLPROPERTIES ('hive.sql.jdbc.url' = '$url',
+        'hive.sql.table' = 'EMP')""")
+    try {
+      val df = spark.table("jdbc_probe_t")
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+        .flatMap(Engine.leafScale)
+      assert(leaves.map(_.bytes) === Seq(Some(Long.MaxValue)))
+      // two unknown-size leaves saturate the sum, never overflow it
+      val twice = df.union(df)
+      assert(Present.provablyLarge(twice, Present.MaxSmallBytes))
+      val sorted = df.presentSorted("id")
+      val p = sorted.queryExecution.executedPlan.toString
       assert(p.contains("rangepartitioning"), p.take(800))
       assert(!p.contains("Exchange SinglePartition"), p.take(800))
-      assert(large.collect().toSeq === small.collect().toSeq)
-    } finally sys.props.remove("graft.present.maxbytes")
+      assert(sorted.collect().map(_.getInt(0)).toSeq === Seq(1, 2, 3))
+    } finally h.sql("DROP TABLE jdbc_probe_t")
   }
 
   test("semi/anti joins plan as joins, not subquery re-execution") {

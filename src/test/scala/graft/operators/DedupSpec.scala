@@ -130,6 +130,29 @@ class DedupSpec extends SparkSpec {
     assert(groups(7L) === 7L && groups(8L) === 7L && groups(9L) === 7L)
   }
 
+  test("connectedComponents matches driver-side union-find on the " +
+      "testdata Jaccard pair graph") {
+    val real = spark.read.parquet(s"$sfDir/documents.parquet")
+    val pairs = Dedup
+      .jaccardPairs(real, threshold = 0.05, maxShingleFreq = Some(1000))
+      .select("doc_a", "doc_b").localCheckpoint()
+    val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(edges.nonEmpty)
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    val truth = parent.keys.toSeq.map(k => k -> find(k)).toMap
+    val got = Dedup.connectedComponents(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === truth)
+  }
+
   test("dedupCorpus keeps one representative per near-dup group") {
     val out = Dedup.dedupCorpus(docs, threshold = 0.4)
     val ids = out.select("doc_id").as[Long].collect().toSet

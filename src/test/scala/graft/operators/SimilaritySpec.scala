@@ -1,7 +1,27 @@
 package graft.operators
 
 import graft.SparkSpec
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+/** Holds the first task that reaches it until another thread has
+  * planned a query (local mode: tasks run in this JVM). */
+private object IvfGate {
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  private val first = new AtomicBoolean(false)
+  def hold(): Unit = if (first.compareAndSet(false, true)) {
+    entered.countDown()
+    release.await(60, TimeUnit.SECONDS)
+  }
+}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -128,5 +148,59 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 3), k = 3,
       nCentroids = 4, nprobe = 2).collect()
     assert(spark.conf.get("spark.sql.adaptive.enabled") === before)
+  }
+
+  test("ivfTopK on an empty corpus returns an empty result with the " +
+      "output schema") {
+    val q = emb.filter(col("vec_id") < 3)
+    val out = Similarity.ivfTopK(emb.limit(0), q, k = 3, nCentroids = 4,
+      nprobe = 2)
+    assert(out.collect().isEmpty)
+    val expected = Similarity.ivfTopK(emb, q, k = 3, nCentroids = 4,
+      nprobe = 2).schema
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      expected.map(f => f.name -> f.dataType))
+  }
+
+  test("ivfTopK scopes AQE-off to its own training collects: the " +
+      "session conf is unchanged (unset keys stay unset), another thread " +
+      "planning during training gets an AdaptiveSparkPlan, and the " +
+      "training plans stay non-adaptive") {
+    val s = spark.newSession()
+    s.conf.unset("spark.sql.adaptive.enabled")
+    val before = s.conf.getAll
+    val trainingPlans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect") trainingPlans.add(qe.executedPlan.nodeName)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    // the corpus ids pass through a UDF whose first row holds the first
+    // training job open while another thread plans on the same session
+    val gate = udf { (id: Long) => IvfGate.hold(); id }
+    val vecs = s.read.parquet(s"$sfDir/embeddings.parquet")
+    val corpus = vecs.withColumn("vec_id", gate(col("vec_id")))
+    val other = Future {
+      assert(IvfGate.entered.await(60, TimeUnit.SECONDS),
+        "training never reached the gate")
+      try s.range(100).groupBy(col("id") % 3).count()
+        .queryExecution.executedPlan
+      finally IvfGate.release.countDown()
+    }
+    try {
+      Similarity.ivfTopK(corpus, vecs.filter(col("vec_id") < 3), k = 3,
+        nCentroids = 4, nprobe = 2, iters = 2)
+      val planned = Await.result(other, 2.minutes)
+      assert(planned.isInstanceOf[AdaptiveSparkPlanExec], planned)
+      assert(s.conf.getAll === before)
+      // listener events are async: seed + 2 Lloyd steps
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (trainingPlans.size < 3 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(trainingPlans.size === 3)
+      assert(!trainingPlans.contains("AdaptiveSparkPlan"), trainingPlans)
+    } finally s.listenerManager.unregister(listener)
   }
 }
