@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{Fingerprint64, DotProduct, HiveHash}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: makes graft's native expressions
   * available to ANY session built with
@@ -12,8 +11,9 @@ import graft.functions.{Fingerprint64, DotProduct, HiveHash}
   * how the reference registers built-ins once in FunctionRegistry's
   * static block (ql/exec/FunctionRegistry.java:193).
   *
-  * `Engine.prepare` additionally registers at runtime for sessions built
-  * without the config (e.g. the test driver's own session).
+  * `Engine.prepare` registers the same function lists at runtime for
+  * sessions built without the config (e.g. one handed in by a caller
+  * that built its own).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -21,18 +21,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("fingerprint64"),
-      info("fingerprint64", "fingerprint64(str) - 64-bit FNV-1a fingerprint"),
-      (exprs: Seq[Expression]) => Fingerprint64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - array<double> dot product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("hive_hash"),
-      info("hive_hash", "hive_hash(...) - Hive-bit-compatible hash"),
-      (exprs: Seq[Expression]) => HiveHash(exprs)))
-    graft.functions.TableFunctions.all.foreach { case (name, builder, usage) =>
-      e.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-    }
+    (graft.functions.Registry.native ++ graft.functions.TableFunctions.all)
+      .foreach { case (name, builder, usage) =>
+        e.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
+      }
     // the HiveQL dialect surface as a session parser (inert until the
     // session sets spark.graft.dialect=true) — the Spark Connect /
     // JDBC-gateway remote entry, mirroring HiveServer2's SQLOperation

@@ -1,29 +1,51 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import java.util.regex.Pattern
+import scala.util.matching.Regex
 
 /** HiveQL → Spark SQL dialect pre-processor: the pure text rewrites
   * that make Hive-2.3 query text parse — and mean what Hive meant —
   * under Spark's parser/analyzer. One instance per session; the
   * statement dispatcher ([[HiveStatements]]) owns one and routes SQL
-  * text through [[rewrite]] before dispatch.
+  * text through [[rewrite]] before dispatch, on both dialect entries
+  * (`HiveStatements.sql` and the session parser, [[GraftSqlParser]]).
+  *
+  * Lexical contract: like Hive's lexer (HiveLexer.g StringLiteral,
+  * COMMENT), one rule decides what a string literal or comment is —
+  * [[HiveStatements.maskStringLiterals]] — and no rewrite finds its
+  * trigger inside one.
+  * Every step and scanner here finds code in the masked text and
+  * splices into the original at the same offsets
+  * ([[HiveStatements.replaceInCode]], [[HiveStatements.matchesInCode]])
+  * or scans structure through [[HiveStatements.balancedBody]],
+  * [[HiveStatements.splitTop]] and [[HiveStatements.topMatches]]. A
+  * step whose operand is a literal (a `USING '<script>'` command, a
+  * JsonPath, `sum('<text>')`, `rlike ''`, TRANSFORM serde classes)
+  * matches the literal's quotes in code, `'[^']*'`, and reads its text
+  * through the match group, which indexes the original; only such an
+  * operand is ever rewritten, never a literal that merely contains
+  * the step's trigger.
   *
   * Surface covered (reference grammar: ql/parse/HiveParser.g,
-  * IdentifiersParser.g, ql/parse/WindowingSpec.java):
+  * IdentifiersParser.g, ql/parse/WindowingSpec.java), as the named
+  * steps of [[rewrite]]:
   *  - WINDOW-clause inheritance, forward refs and aliases, inlined
-  *    into OVER sites ([[inlineWindowClauses]]);
+  *    into OVER sites ([[inlineWindowClauses]]); temporary macros;
   *  - `LIMIT offset,count`, FLOOR(ts TO unit), charset literals,
-  *    `GROUP BY ()`, IN-predicate comparisons, Hive interval sugar
-  *    ([[intervalSugar]]), `||` precedence, TABLESAMPLE(BUCKET..),
+  *    `GROUP BY ()`, IN-predicate comparisons, TABLESAMPLE(BUCKET..),
   *    MAP/REDUCE → TRANSFORM sugar ([[mapReduceSugar]]);
   *  - Hive function semantics spelled onto Spark equivalents
   *    (hash→hive_hash, population stddev/variance, struct field
-  *    names, GROUPING__ID encoding, char/varchar truncating casts);
-  *  - union-limit round-robin splits ([[unionLimitSplit]]), MatchPath
-  *    PTF invocation, noop-PTF stripping, TRANSFORM tab-delimited IO;
-  *  - error-driven retries ([[errorRewrites]], [[windowRewrites]]) for
-  *    coercions Spark rejects outright (timestamp-vs-number compares,
-  *    DISTINCT window aggregates, RANGE frame value semantics).
+  *    names, GROUPING SETS dedup, qtest session identity);
+  *  - the session namespace ([[resolveNamespace]]), MatchPath PTF
+  *    invocation, noop-PTF stripping, TRANSFORM tab-delimited IO.
+  * Outside [[rewrite]]: union-limit round-robin splits
+  * ([[unionLimitSplit]]), Hive interval sugar ([[intervalSugar]]) and
+  * the error-driven retries ([[errorRewrites]], [[windowRewrites]])
+  * for coercions Spark rejects outright (timestamp-vs-number compares,
+  * DISTINCT window aggregates, RANGE frame value semantics,
+  * char/varchar truncating casts).
   *
   * Session state (current database, known databases, temporary macros,
   * matchpath function aliases) is mutated by the statement layer as
@@ -32,7 +54,8 @@ import org.apache.spark.sql.SparkSession
   * shims; production callers leave the identity defaults.
   */
 class HiveDialect(val spark: SparkSession) {
-  import HiveStatements.splitTop
+  import HiveStatements.{balancedBody, matchesInCode, replaceInCode,
+    splitTop, topMatch, topMatches}
 
   /** Database the session is USE-ing (current_database() folds to
     * this under the flat temp-view namespace). */
@@ -121,20 +144,6 @@ class HiveDialect(val spark: SparkSession) {
     }
   }
 
-  /** The span of the balanced paren group opening at `q(open)`. */
-  private def balancedSpan(q: String, open: Int): Option[(Int, Int)] = {
-    var d = 0; var i = open
-    while (i < q.length) {
-      q(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return Some((open, i + 1))
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
   /** Mask the COLUMN-definition lists of CREATE/ALTER DDL (the parens
     * after the target name and after PARTITIONED/CLUSTERED/SORTED/
     * SKEWED BY / COLUMNS) so the unqualified namespace pass can't
@@ -164,11 +173,11 @@ class HiveDialect(val spark: SparkSession) {
       var i = m.end
       while (i < q.length && (q(i).isWhitespace || q(i) == '`')) i += 1
       if (i < q.length && q(i) == '(')
-        balancedSpan(q, i).foreach(spans += _)
+        balancedBody(q, i).foreach(b => spans += ((i, b._2)))
     }
     ("(?is)\\b(?:(?:partitioned|clustered|sorted|skewed)\\s+by|" +
       "columns)\\s*\\(").r.findAllMatchIn(q).foreach { m =>
-      balancedSpan(q, m.end - 1).foreach(spans += _)
+      balancedBody(q, m.end - 1).foreach(b => spans += ((m.end - 1, b._2)))
     }
     if (spans.isEmpty) return (q, Nil)
     var out = q
@@ -194,70 +203,33 @@ class HiveDialect(val spark: SparkSession) {
           "(?s)^(?:create|drop|alter)\\s+(?:database|schema)\\b.*"))
       return q00
     val (q0, restore) = maskDdlColumnLists(q00)
-    val resolved = mapOutsideLiterals(q0) { seg0 =>
-      var seg = seg0
-      val cur = currentDb.toLowerCase
-      // 1. unqualified references under USE <db> resolve to the
-      //    current database's physical bindings (`t` → `db__t`) —
-      //    FIRST, so pass 2's bare fallbacks aren't re-mangled
-      if (cur != "default")
-        dbTables.getOrElse(cur, Set.empty[String]).foreach { t =>
-          seg = (s"(?i)(?<![\\w.$$])`?$t`?(?![\\w$$])").r
-            .replaceAllIn(seg, m => {
-              // `name1.x` where name1 is ALSO a database: the
-              // qualifier wins — leave it for pass 2
-              // (describe_table.q: DESCRIBE name1.name1 under name1)
-              val qualifier = m.end < seg.length &&
-                seg.charAt(m.end) == '.' &&
-                knownDbs.contains(t)
-              scala.util.matching.Regex.quoteReplacement(
-                if (qualifier) m.matched else s"${cur}__$t")
-            })
+    var q = q0
+    val cur = currentDb.toLowerCase
+    // 1. unqualified references under USE <db> resolve to the current
+    //    database's physical bindings (`t` → `db__t`) — FIRST, so pass
+    //    2's bare fallbacks aren't re-mangled
+    if (cur != "default")
+      dbTables.getOrElse(cur, Set.empty[String]).foreach { t =>
+        q = replaceInCode(q, s"(?i)(?<![\\w.$$])`?$t`?(?![\\w$$])".r) { m =>
+          // `name1.x` where name1 is ALSO a database: the qualifier
+          // wins — leave it for pass 2 (describe_table.q: DESCRIBE
+          // name1.name1 under name1)
+          val qualifier = m.end < m.source.length &&
+            m.source.charAt(m.end) == '.' && knownDbs.contains(t)
+          if (qualifier) m.matched else s"${cur}__$t"
         }
-      // 2. db-qualified references resolve through dbResolver
-      knownDbs.foreach { db =>
-        seg = (s"(?i)(?<![\\w.`])`?$db`?\\.`?(\\w+)`?").r
-          .replaceAllIn(seg, m =>
-            scala.util.matching.Regex.quoteReplacement(
-              dbResolver(seg0, db, m.group(1))))
       }
-      // 3. `default.`-qualified names → the bare binding (deferred
-      //    here under USE <db> so pass 1 can't capture them)
-      if (cur != "default")
-        seg = seg.replaceAll(
-          "(?i)(?<![\\w.`])`?default`?\\.(?=`?\\w)", "")
-      seg
+    // 2. db-qualified references resolve through dbResolver
+    knownDbs.foreach { db =>
+      q = replaceInCode(q, s"(?i)(?<![\\w.`])`?$db`?\\.`?(\\w+)`?".r)(m =>
+        dbResolver(q00, db, m.group(1)))
     }
-    restore.foldLeft(resolved) { case (acc, (token, body)) =>
+    // 3. `default.`-qualified names → the bare binding (deferred here
+    //    under USE <db> so pass 1 can't capture them)
+    if (cur != "default") q = replaceInCode(q, defaultQualRe)(_ => "")
+    restore.foldLeft(q) { case (acc, (token, body)) =>
       acc.replace(token, body)
     }
-  }
-
-  /** Apply `f` to the segments of `s` OUTSIDE single/double-quoted
-    * string literals (backslash escapes respected) — the namespace
-    * rewrites must never touch `db.t` text inside a literal. */
-  private def mapOutsideLiterals(s: String)(f: String => String)
-      : String = {
-    if (!s.contains('\'') && !s.contains('"')) return f(s)
-    val out = new StringBuilder(s.length)
-    val seg = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == '\\' && i + 1 < s.length) {
-          out.append(s.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') {
-        out.append(f(seg.result())); seg.clear()
-        quote = c; out.append(c); i += 1
-      } else { seg.append(c); i += 1 }
-    }
-    out.append(f(seg.result()))
-    out.result()
   }
 
   /** hive.cbo.returnpath.hiveop struct-field naming (expr$0..) — the
@@ -288,265 +260,260 @@ class HiveDialect(val spark: SparkSession) {
           _.contains(t.toLowerCase))) s"${db.toLowerCase}__$t"
       else t
 
-  private val usingRe = "(?is)using\\s+'([^']*)'".r
+  private val usingRe = "(?is)using\\s+'([^']*)'"
 
   private val tsOnRe = ("(?is)([\\w.]+)\\s+tablesample\\s*\\(\\s*bucket" +
     "\\s+(\\d+)\\s+out\\s+of\\s+(\\d+)\\s+on\\s+" +
     "((?:[^()]|\\([^()]*\\))+)\\)").r
   private val mrRe = "(?is)\\s*(?:map|reduce)\\s+(.+?)\\s+(using\\s+.*)".r
+  private val defaultQualRe = "(?i)(?<![\\w.`])`?default`?\\.(?=`?\\w)".r
 
-  /** Hive dialect shims applied to every replayed statement:
-    *  - `hash(` → `hive_hash(` (goldens sum Hive's
-    *    ObjectInspectorUtils hash contract, not Murmur3);
-    *  - backslash escapes inside `USING '<script>'`: Hive splits the
-    *    script on spaces only, so a parser-unescaped tab survives as
-    *    one argv element — Spark hands the script to `bash -c`, which
-    *    would re-split on it. Re-quote the escape (`tr \t _` →
-    *    `"tr '\t' _"`) so the subprocess sees Hive's argv;
-    *  - `t TABLESAMPLE (BUCKET x OUT OF y ON cols)` → Hive's own
-    *    deterministic sample predicate `(hash & MAX_INT) % y = x-1`
-    *    (ref ql/parse/SemanticAnalyzer genSamplePredicate);
-    *  - `default.`-qualified names → bare (fixtures are temp views). */
-  def rewrite(q000: String): String = {
-    val q00 = preRewrite(q000)
+  /** Rewrite one HiveQL statement into Spark SQL: [[preRewrite]], then
+    * each named step of [[steps]] in order, folded over the text. No
+    * step matches inside a string literal or comment (see the class
+    * doc). */
+  def rewrite(q: String): String =
+    steps.foldLeft(preRewrite(q)) { case (t, (_, step)) => step(t) }
+
+  /** A step that replaces each match of `re` in code by `f` of it
+    * ([[HiveStatements.replaceInCode]]). */
+  private def code(re: String)(f: Regex.Match => String): String => String = {
+    val r = re.r
+    q => replaceInCode(q, r)(f)
+  }
+
+  /** The named text steps of [[rewrite]], in the order they apply.
+    * Each matches code only: its pattern runs over the masked text
+    * ([[HiveStatements.maskStringLiterals]]), so no trigger inside a
+    * string literal or comment matches, and its result is spliced into
+    * the original text at the same offsets. A literal operand is
+    * matched by its quotes and read through the match group. */
+  private val steps: Seq[(String, String => String)] = Seq(
     // table names with '/' (backticked in HiveQL) can't name a temp
     // view — sanitize consistently across every statement
-    val q0s0 =
-      if (q00.contains("`")) {
-        // pair backticks from the start: odd split-segments are the
-        // quoted names (a regex over `...` spans would also match the
-        // text BETWEEN two adjacent names)
-        val parts = q00.split("`", -1)
-        if (parts.length > 2) {
-          for (i <- 1 until parts.length by 2)
-            if (parts(i).contains("/"))
-              parts(i) = parts(i).replace("/", "_")
-          parts.mkString("`")
-        } else q00
-      } else q00
+    "slash-in-backticked-name" ->
+      code("`[^`]*`")(_.matched.replace("/", "_")),
     // derived index-table names embed the sanitized base name but the
     // goldens reference them bare (default__s/c_src_index__)
-    val q0s = "[\\w/]*/[\\w/]*__".r.replaceAllIn(q0s0,
-      m => scala.util.matching.Regex.quoteReplacement(
-        m.matched.replace("/", "_")))
-    val q0 = expandMacros(q0s)
-    val q0w =
-      if (q0.toLowerCase.contains("window")) inlineWindowClauses(q0)
-      else q0
-    val q1 = q0w.replaceAll("(?i)(?<![\\w_])hash\\(", "hive_hash(")
-      // Hive's stddev/std/variance/var are the POPULATION variants
-      // (FunctionRegistry: GenericUDAFStd/GenericUDAFVariance);
-      // Spark's same-named functions are the SAMPLE variants
-      .replaceAll("(?i)(?<![\\w_])(?:stddev|std)\\s*\\(", "stddev_pop(")
-      .replaceAll("(?i)(?<![\\w_])variance\\s*\\(", "var_pop(")
-    val q1s = usingRe.replaceAllIn(q1, m =>
-      scala.util.matching.Regex.quoteReplacement(scriptResolver(
-        m.group(1).trim) match {
+    "slash-in-index-table-name" ->
+      code("[\\w/]*/[\\w/]*__")(_.matched.replace("/", "_")),
+    "temporary-macros" -> expandMacros _,
+    "window-clauses" -> (q =>
+      if (q.toLowerCase.contains("window")) inlineWindowClauses(q) else q),
+    // goldens sum Hive's ObjectInspectorUtils hash contract, not Murmur3
+    "hash" -> code("(?i)(?<![\\w_])hash\\(")(_ => "hive_hash("),
+    // Hive's stddev/std/variance are the POPULATION variants
+    // (FunctionRegistry: GenericUDAFStd/GenericUDAFVariance); Spark's
+    // same-named functions are the SAMPLE variants
+    "stddev-population" ->
+      code("(?i)(?<![\\w_])(?:stddev|std)\\s*\\(")(_ => "stddev_pop("),
+    "variance-population" ->
+      code("(?i)(?<![\\w_])variance\\s*\\(")(_ => "var_pop("),
+    // resolve the `USING '<script>'` command (the match group reads the
+    // literal's text)
+    "script-resolver" -> code(usingRe)(m =>
+      scriptResolver(m.group(1).trim) match {
         case Some(abs) => s"USING '$abs'"
-        case None => m.group(0)
-      }))
-    val q2 = usingRe.replaceAllIn(q1s, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        // an escape already inside embedded quotes (`tr "\t" "_"`)
-        // reaches bash intact — requoting would nest quote marks and
-        // shatter the SQL literal; leave those scripts alone
-        if (!m.group(1).contains("\\") ||
-            m.group(1).contains("\"")) m.group(0)
-        else "USING \"" +
-          m.group(1).replaceAll("\\\\(.)", "'\\\\\\\\$1'") + "\""))
-    // DOUBLE-quoted scripts carry the same escape hazard
-    // (`using "tr _ \n"` — Hive's argv holds a literal newline; bash
-    // would treat it as a command terminator). Requote each escape.
-    val q2b = "(?is)using\\s+\"([^\"]*)\"".r.replaceAllIn(q2, m =>
-      scala.util.matching.Regex.quoteReplacement(
+        case None => m.matched
+      }),
+    // Hive splits the `USING '<script>'` command on spaces only, so a
+    // parser-unescaped tab survives as one argv element — Spark hands
+    // the script to `bash -c`, which would re-split on it. Re-quote
+    // the escape (`tr \t _` → `"tr '\t' _"`).
+    // An escape already inside embedded quotes (`tr "\t" "_"`) reaches
+    // bash intact — requoting would nest quote marks and shatter the
+    // SQL literal; leave those scripts alone.
+    "script-escape-requote" -> code(usingRe)(m =>
+      if (!m.group(1).contains("\\") || m.group(1).contains("\"")) m.matched
+      else "USING \"" +
+        m.group(1).replaceAll("\\\\(.)", "'\\\\\\\\$1'") + "\""),
+    // DOUBLE-quoted scripts carry the same escape hazard (`using
+    // "tr _ \n"` — Hive's argv holds a literal newline; bash would
+    // treat it as a command terminator)
+    "script-escape-requote-double" ->
+      code("(?is)using\\s+\"([^\"]*)\"")(m =>
         if (!m.group(1).contains("\\") || m.group(1).contains("'"))
-          m.group(0)
+          m.matched
         else "USING \"" +
-          m.group(1).replaceAll("\\\\(.)", "'\\\\\\\\$1'") + "\""))
-    val q3 = tsOnRe.replaceAllIn(q2b, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        // BUCKET 1 OUT OF 1 keeps every row — the identity case also
-        // covers sampling ON rand() deterministically (still wrapped,
-        // to keep the original's paren balance)
-        if (m.group(3).toInt == 1) s"(select * from ${m.group(1)})"
-        else s"(select * from ${m.group(1)} where (hive_hash(${m.group(4).trim})" +
-          s" & 2147483647) % ${m.group(3)} = ${m.group(2).toInt - 1})"))
-    // `default.`-qualified names → bare — but under USE <db> the
-    // strip waits for resolveNamespace pass 3: stripping early would
-    // let the unqualified pass mangle `default.t` into the CURRENT
-    // db's binding (show_partitions.q: default.srcpart from db1)
-    var q4 =
+          m.group(1).replaceAll("\\\\(.)", "'\\\\\\\\$1'") + "\""),
+    // `t TABLESAMPLE (BUCKET x OUT OF y ON cols)` → Hive's own
+    // deterministic sample predicate `(hash & MAX_INT) % y = x-1`
+    // (ref ql/parse/SemanticAnalyzer genSamplePredicate). BUCKET 1 OUT
+    // OF 1 keeps every row — the identity case also covers sampling ON
+    // rand() deterministically (still wrapped, to keep the original's
+    // paren balance)
+    "tablesample-bucket" -> (q => replaceInCode(q, tsOnRe)(m =>
+      if (m.group(3).toInt == 1) s"(select * from ${m.group(1)})"
+      else s"(select * from ${m.group(1)} where (hive_hash(${m.group(4).trim})" +
+        s" & 2147483647) % ${m.group(3)} = ${m.group(2).toInt - 1})")),
+    // `default.`-qualified names → bare (fixtures are temp views) — but
+    // under USE <db> the strip waits for resolveNamespace pass 3:
+    // stripping early would let the unqualified pass mangle `default.t`
+    // into the CURRENT db's binding (show_partitions.q: default.srcpart
+    // from db1)
+    "default-db-qualifier" -> (q =>
       if (currentDb.equalsIgnoreCase("default"))
-        q3.replaceAll("(?i)(?<![\\w.`])`?default`?\\.(?=`?\\w)", "")
-      else q3
+        replaceInCode(q, defaultQualRe)(_ => "")
+      else q),
     // bare ROW__ID virtual column: NULL on non-transactional tables
     // (every golden fixture here) — TableScanOperator.java:110 context
-    q4 = q4.replaceAll(
-      "(?i)(?<![\\w`(.])(?:\\w+\\.)?row__id\\b(?!\\s*\\()",
-      "cast(null as struct<transactionid:bigint,bucketid:int," +
-        "rowid:bigint>)")
+    "row-id" -> code("(?i)(?<![\\w`(.])(?:\\w+\\.)?row__id\\b(?!\\s*\\()")(
+      _ => "cast(null as struct<transactionid:bigint,bucketid:int," +
+        "rowid:bigint>)"),
     // Hive `LIMIT offset,count` sugar → standard LIMIT/OFFSET
-    q4 = q4.replaceAll("(?i)\\blimit\\s+(\\d+)\\s*,\\s*(\\d+)",
-      "limit $2 offset $1")
+    "limit-offset-count" -> code("(?i)\\blimit\\s+(\\d+)\\s*,\\s*(\\d+)")(
+      m => s"limit ${m.group(2)} offset ${m.group(1)}"),
     // Hive's JsonPath accepts `$.[0]` as `$[0]` (UDFJson pathExprs);
     // normalize inside $-prefixed path literals
-    q4 = "'(\\$[^']*)'".r.replaceAllIn(q4, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        "'" + m.group(1).replace(".[", "[") + "'"))
+    "jsonpath-dot-bracket" -> code("'[^']*'")(m =>
+      if (m.matched.startsWith("'$")) m.matched.replace(".[", "[")
+      else m.matched),
     // a bare LIMIT directly over GROUP BY takes the FIRST n groups of
     // the single reducer's SORTED stream — make that order explicit so
     // materializations (CTAS/INSERT) pick Hive's subset
-    q4 = "(?is)\\bgroup\\s+by\\s+([^()]+?)\\s+limit\\s+(\\d+)".r
-      .replaceAllIn(q4, m =>
-        scala.util.matching.Regex.quoteReplacement(
-          if (m.group(1).toLowerCase.contains("order by") ||
-              m.group(1).toLowerCase.contains("sort by")) m.group(0)
-          else s"group by ${m.group(1)} order by ${m.group(1)} " +
-            s"limit ${m.group(2)}"))
+    "group-by-limit-order" ->
+      code("(?is)\\bgroup\\s+by\\s+([^()]+?)\\s+limit\\s+(\\d+)") { m =>
+        if (m.group(1).toLowerCase.contains("order by") ||
+            m.group(1).toLowerCase.contains("sort by")) m.matched
+        else s"group by ${m.group(1)} order by ${m.group(1)} " +
+          s"limit ${m.group(2)}"
+      },
     // Hive FLOOR(ts TO unit) (HiveParser floorExpression) — Spark
     // spells it date_trunc
-    q4 = q4.replaceAll(
-      "(?i)\\bfloor\\s*\\(\\s*([^()]+?)\\s+to\\s+" +
-        "(year|quarter|month|week|day|hour|minute|second)\\s*\\)",
-      "date_trunc('$2', $1)")
-    // Hive charset literals `_UTF-8 0x<hex>` (HiveParser charSetLiteral)
-    q4 = q4.replaceAll(
-      "(?i)_UTF-8\\s+0x([0-9A-Fa-f]+)",
-      "decode(unhex('$1'), 'UTF-8')")
+    "floor-to-unit" -> code("(?i)\\bfloor\\s*\\(\\s*([^()]+?)\\s+to\\s+" +
+      "(year|quarter|month|week|day|hour|minute|second)\\s*\\)")(
+      m => s"date_trunc('${m.group(2)}', ${m.group(1)})"),
     // qtest identity: QTestUtil runs as hive_test_user with no
     // authenticated session user (logged_in_user() is NULL there),
     // and current_database tracks the harness's USE state
-    q4 = q4.replaceAll("(?i)\\bcurrent_user\\s*\\(\\s*\\)",
-      "'hive_test_user'")
-    q4 = q4.replaceAll("(?i)\\blogged_in_user\\s*\\(\\s*\\)",
-      "cast(null as string)")
-    q4 = q4.replaceAll("(?i)\\bcurrent_database\\s*\\(\\s*\\)",
-      s"'$currentDb'")
-    // Hive's sum() marks the group non-empty BEFORE converting, so
-    // sum of an unparseable string constant is 0.0, not NULL
+    "current-user" -> code("(?i)\\bcurrent_user\\s*\\(\\s*\\)")(
+      _ => "'hive_test_user'"),
+    "logged-in-user" -> code("(?i)\\blogged_in_user\\s*\\(\\s*\\)")(
+      _ => "cast(null as string)"),
+    "current-database" -> code("(?i)\\bcurrent_database\\s*\\(\\s*\\)")(
+      _ => s"'$currentDb'"),
+    // Hive's sum() marks the group non-empty BEFORE converting, so sum
+    // of an unparseable string constant is 0.0, not NULL
     // (GenericUDAFSumDouble.iterate sets empty=false, then the
     // NumberFormatException is swallowed)
-    q4 = "(?i)\\bsum\\s*\\(\\s*'([^']*)'\\s*\\)".r.replaceAllIn(q4, m =>
-      if (m.group(1).nonEmpty && m.group(1).toDoubleOption.isEmpty)
-        "if(count(1) = 0, cast(null as double), 0.0d)"
-      else scala.util.matching.Regex.quoteReplacement(m.matched))
-    // Hive UDFRegExp: an EMPTY regex pattern never matches
-    // (UDFRegExp.java evaluate); Java find("") matches everywhere.
-    // `(?!)` is the always-failing pattern.
-    q4 = q4.replaceAll("(?i)\\b(rlike|regexp)\\s+''", "$1 '(?!)'")
+    "sum-unparseable-string" ->
+      code("(?i)\\bsum\\s*\\(\\s*'([^']*)'\\s*\\)")(m =>
+        if (m.group(1).nonEmpty && m.group(1).toDoubleOption.isEmpty)
+          "if(count(1) = 0, cast(null as double), 0.0d)"
+        else m.matched),
+    // Hive UDFRegExp's EMPTY pattern never matches (UDFRegExp.java
+    // evaluate); Java find("") matches everywhere. `(?!)` is the
+    // always-failing pattern.
+    "rlike-empty-pattern" -> code("(?i)\\b(rlike|regexp)\\s+''")(m =>
+      s"${m.group(1)} '(?!)'"),
     // Hive's struct() names fields col1..colN (GenericUDFStruct);
     // Spark's parser claims `struct(` itself, so route to the
     // engine's hive_struct. `named_struct(` survives via the
     // lookbehind; type syntax uses `struct<`. Under CBO the Calcite
     // plan names the fields expr$0..expr$N instead.
-    q4 = q4.replaceAll("(?i)(?<![\\w_.`])struct\\s*\\(",
-      if (cboStructNames) "hive_struct_cbo(" else "hive_struct(")
-    // Hive charset literals `_UTF-8 0xHEX` (HiveLexer.g CharSetName +
-    // CharSetLiteral) → a plain string literal with the bytes decoded
-    q4 = "(?i)_utf-?8\\s+0x([0-9a-f]+)".r.replaceAllIn(q4, m => {
-      val hex = m.group(1)
-      val bytes = hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    "struct-field-names" -> code("(?i)(?<![\\w_.`])struct\\s*\\(")(_ =>
+      if (cboStructNames) "hive_struct_cbo(" else "hive_struct("),
+    // Hive charset literals `_UTF-8 0xHEX` / `_utf8 0xHEX` (HiveLexer.g
+    // CharSetName + CharSetLiteral) → a plain string literal with the
+    // bytes decoded
+    "charset-literal" -> code("(?i)_utf-?8\\s+0x([0-9a-f]+)") { m =>
+      val bytes = m.group(1).grouped(2)
+        .map(Integer.parseInt(_, 16).toByte).toArray
       val s = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      scala.util.matching.Regex.quoteReplacement(
-        "'" + s.flatMap(c => f"\\u$c%04x") + "'")
-    })
+      "'" + s.flatMap(c => f"\\u$c%04x") + "'"
+    },
     // Hive parses `x IN (...) = true` (a comparison whose left side is
     // an IN predicate); Spark's grammar wants the IN wrapped
-    q4 = ("(?i)((?:[\\w.`']+|\\([^()]*\\)))\\s*(not\\s+)?" +
-      "(in\\s*\\([^()]*\\))\\s*=\\s*(true|false)\\b").r
-      .replaceAllIn(q4, m =>
-        scala.util.matching.Regex.quoteReplacement(
-          s"(${m.group(1)} ${Option(m.group(2)).getOrElse("")}" +
-            s"${m.group(3)}) = ${m.group(4)}"))
+    "in-predicate-compare" -> code("(?i)((?:[\\w.`]+|'[^']*'|\"[^\"]*\"" +
+      "|\\([^()]*\\)))" +
+      "\\s*(not\\s+)?(in\\s*\\([^()]*\\))\\s*=\\s*(true|false)\\b")(m =>
+      s"(${m.group(1)} ${Option(m.group(2)).getOrElse("")}" +
+        s"${m.group(3)}) = ${m.group(4)}"),
     // `GROUP BY ()` = the empty grouping set (a plain global
     // aggregate); Spark rejects the empty parens
-    q4 = q4.replaceAll("(?i)\\bgroup\\s+by\\s+\\(\\s*\\)", "")
+    "group-by-empty" -> code("(?i)\\bgroup\\s+by\\s+\\(\\s*\\)")(_ => ""),
     // Hive's extract(second) is an INT (UDFSecond); Spark 4 returns
     // DECIMAL(8,6) carrying the fraction
-    q4 = q4.replaceAll(
-      "(?i)\\bextract\\s*\\(\\s*second\\s+from\\s+([\\w.`]+)\\s*\\)",
-      "cast(extract(second from $1) as int)")
+    "extract-second-int" ->
+      code("(?i)\\bextract\\s*\\(\\s*second\\s+from\\s+([\\w.`]+)\\s*\\)")(
+        m => s"cast(extract(second from ${m.group(1)}) as int)"),
     // histogram_numeric bins over DOUBLE in the reference
     // (GenericUDAFHistogramNumeric converts); Spark preserves a
     // decimal input's type in the x field — force the double view
-    q4 = q4.replaceAll(
-      "(?i)\\bhistogram_numeric\\s*\\(\\s*([\\w.`]+)\\s*,",
-      "histogram_numeric(cast($1 as double),")
+    "histogram-numeric-double" ->
+      code("(?i)\\bhistogram_numeric\\s*\\(\\s*([\\w.`]+)\\s*,")(
+        m => s"histogram_numeric(cast(${m.group(1)} as double),"),
     // sample stddev/variance of a SINGLE row is 0.0 in the reference
     // (GenericUDAFVariance terminate: count==1 → 0), NULL in Spark —
     // gate on count. Window uses keep the plain function (the rewrite
     // would detach the OVER clause).
-    q4 = {
-      val m = "(?i)\\b(stddev_samp|var_samp)\\s*\\(([^()]*)\\)".r
-      m.replaceAllIn(q4, mm => {
-        val tail = q4.substring(mm.end)
-        if (tail.matches("(?is)\\s*over\\b.*")) mm.group(0)
-        else scala.util.matching.Regex.quoteReplacement(
-          s"if(count(${mm.group(2)}) = 1, 0.0d, " +
-            s"${mm.group(1)}(${mm.group(2)}))")
-      })
-    }
+    "sample-variance-single-row" ->
+      code("(?i)\\b(stddev_samp|var_samp)\\s*\\(([^()]*)\\)") { m =>
+        if (m.after.toString.matches("(?is)\\s*over\\b.*")) m.matched
+        else s"if(count(${m.group(2)}) = 1, 0.0d, " +
+          s"${m.group(1)}(${m.group(2)}))"
+      },
     // flatten script-created databases into the temp-view namespace
     // (always-mangle: CREATEd-under-db tables live as `db__name`)
-    q4 = resolveNamespace(q4)
-    // Hive expands `*` inside a UDF call from the operator's column
-    // list WITHOUT partition pseudo-columns — hash(*) on a partitioned
-    // table hashes data columns only (verified against
-    // dynpart_sort_optimization.q's recorded sum: si,b,f, not s,t,i;
-    // ref SemanticAnalyzer TOK_ALLCOLREF expansion). Spark's star
-    // includes partition columns, so expand explicitly.
-    if ("(?is).*\\bhive_hash\\s*\\(\\s*\\*\\s*\\).*".r
-        .matches(q4))
-      "(?is)\\bfrom\\s+`?([\\w.]+)`?".r.findFirstMatchIn(q4)
-        .foreach { m =>
-          val t = m.group(1)
-          val pcs = partColsOf(t).map(_.toLowerCase)
-          if (pcs.nonEmpty)
-            scala.util.Try(spark.table(t).columns).toOption.foreach {
-              cols =>
-                val data = cols.filterNot(c =>
-                  pcs.contains(c.toLowerCase))
-                if (data.nonEmpty && data.length < cols.length)
-                  q4 = q4.replaceAll(
-                    "(?i)\\bhive_hash\\s*\\(\\s*\\*\\s*\\)",
-                    "hive_hash(" + data.mkString(", ") + ")")
-            }
-        }
+    "namespace" -> resolveNamespace _,
+    "hash-star-data-columns" -> hashStarDataColumns _,
     // SORT BY + LIMIT: Hive's qtest runs one reducer, so its partial
     // sort IS total and LIMIT takes the global extremes; Spark's
     // partition-local sort would feed LIMIT arbitrary rows. ORDER BY
     // reproduces the single-reducer golden. (Multiset comparison makes
     // the rewrite a no-op for queries without LIMIT.)
-    val q4l = q4.toLowerCase
-    val q5 =
-      if (q4l.contains("sort by") && q4l.matches("(?s).*\\blimit\\s+\\d.*") &&
-          !q4l.contains("distribute by") && !q4l.contains("cluster by"))
-        q4.replaceAll("(?i)\\bsort\\s+by\\b", "order by")
-      else q4
+    "sort-by-limit-order" -> { q =>
+      val l = HiveStatements.maskStringLiterals(q).toLowerCase
+      if (l.contains("sort by") && l.matches("(?s).*\\blimit\\s+\\d.*") &&
+          !l.contains("distribute by") && !l.contains("cluster by"))
+        replaceInCode(q, sortByRe)(_ => "order by")
+      else q
+    },
+    "transform-escaped-io" -> escapeTransformRewrite _,
     // MAP/REDUCE sugar is TRANSFORM too (HiveParser.g selectClause) —
     // its script IO needs the same explicit tab-delimited contract.
     // INSERT statements are excluded: their bodies go through
     // mapReduceSugar LATER, which wraps TRANSFORM(...) around the
     // expression list — a ROW FORMAT inserted here would end up
     // inside the parens
-    val q5e = escapeTransformRewrite(q5)
-    val q5l2 = q5e.toLowerCase
-    val q6a =
-      if (q5l2.contains("transform") ||
-          (!q5l2.contains("insert") &&
-            q5e.matches("(?is).*\\b(?:map|reduce)\\b.*\\busing\\s+['\"].*")))
-        fixTransformIo(q5e)
-      else q5e
-    // GROUPING__ID itself is NOT rewritten here: goldens were
-    // recorded across Hive versions straddling the encoding change,
-    // so the legacy-encoding variant runs as an assert-time fallback
-    val q6 = hiveGroupingShim(q6a, rewriteGid = false)
-    // Hive's noop/noopwithmap test PTFs pass rows through unchanged
-    // (ql/udf/ptf/Noop.java); strip to the underlying relation — the
-    // goldens' window functions re-declare their own specs. Fixpoint
-    // loop unwraps nested calls innermost-first.
-    defaultOverOrder(rewriteMatchPath(stripNoops(q6)))
-  }
+    "transform-tab-io" -> { q =>
+      val l = HiveStatements.maskStringLiterals(q).toLowerCase
+      if (l.contains("transform") || (!l.contains("insert") &&
+          l.matches("(?s).*\\b(?:map|reduce)\\b.*\\busing\\s+['\"].*")))
+        fixTransformIo(q)
+      else q
+    },
+    // GROUPING__ID itself is NOT rewritten here: goldens were recorded
+    // across Hive versions straddling the encoding change, so the
+    // legacy-encoding variant runs as an assert-time fallback
+    "grouping-sets-dedup" -> (q => hiveGroupingShim(q, rewriteGid = false)),
+    "noop-ptf" -> stripNoops _,
+    "matchpath-ptf" -> rewriteMatchPath _,
+    "over-default-order" -> defaultOverOrder _)
+
+  private val sortByRe = "(?i)\\bsort\\s+by\\b".r
+  private val hashStarRe = "(?i)\\bhive_hash\\s*\\(\\s*\\*\\s*\\)".r
+
+  /** Hive expands `*` inside a UDF call from the operator's column
+    * list WITHOUT partition pseudo-columns — hash(*) on a partitioned
+    * table hashes data columns only (verified against
+    * dynpart_sort_optimization.q's recorded sum: si,b,f, not s,t,i;
+    * ref SemanticAnalyzer TOK_ALLCOLREF expansion). Spark's star
+    * includes partition columns, so expand explicitly. */
+  private def hashStarDataColumns(q: String): String =
+    if (matchesInCode(q, hashStarRe).isEmpty) q
+    else matchesInCode(q, "(?is)\\bfrom\\s+`?([\\w.]+)`?".r).nextOption()
+      .flatMap { m =>
+        val t = m.group(1)
+        val pcs = partColsOf(t).map(_.toLowerCase)
+        if (pcs.isEmpty) None
+        else scala.util.Try(spark.table(t).columns).toOption.flatMap { cols =>
+          val data = cols.filterNot(c => pcs.contains(c.toLowerCase))
+          Option.when(data.nonEmpty && data.length < cols.length)(data)
+        }
+      }
+      .fold(q)(data => replaceInCode(q, hashStarRe)(_ =>
+        "hive_hash(" + data.mkString(", ") + ")"))
 
   /** Hive 2.x `GROUPING__ID` encodes bit i (LSB-first over the GROUP
     * BY list) as 1 when column i is PRESENT in the grouping set
@@ -666,43 +633,19 @@ class HiveDialect(val spark: SparkSession) {
     val fnAlt = matchpathFns.map(java.util.regex.Pattern.quote)
       .mkString("|")
     val callRe = s"(?i)\\b($fnAlt)\\s*\\(\\s*on\\b".r
-    def closeOf(s: String, open: Int): Int = {
-      var depth = 0; var j = open; var close = -1
-      while (j < s.length && close < 0) {
-        s(j) match { case '(' => depth += 1
-                     case ')' => depth -= 1; if (depth == 0) close = j
-                     case _ => }
-        j += 1
-      }
-      close
-    }
-    var m = callRe.findFirstMatchIn(q)
+    val argRe = "(?i)\\barg\\d+\\s*\\(".r
+    var m = matchesInCode(q, callRe).nextOption()
     while (m.isDefined) {
-      val open = q.indexOf('(', m.get.start)
-      val close = closeOf(q, open)
-      if (close < 0) return q
-      val body = q.substring(open + 1, close).trim
-        .replaceFirst("(?is)^on\\s+", "")
-      val bl = body.toLowerCase
-      // top-level clause offsets
-      def topIdx(kw: String): Int = {
-        var d = 0; var k = 0; var hit = -1
-        while (k < body.length && hit < 0) {
-          body(k) match { case '(' => d += 1; case ')' => d -= 1
-                          case _ => }
-          if (d == 0 && (k == 0 || body(k - 1).isWhitespace) &&
-              bl.startsWith(kw, k)) hit = k
-          k += 1
-        }
-        hit
-      }
-      val argRe = "(?i)\\barg\\d+\\s*\\(".r
-      val firstArg = argRe.findFirstMatchIn(body).map(_.start)
+      val (inner, end) = balancedBody(q, q.indexOf('(', m.get.start))
         .getOrElse(return q)
-      val partIdx0 = Seq(topIdx("distribute by"), topIdx("partition by"))
-        .filter(_ >= 0).minOption
-      val sortIdx0 = Seq(topIdx("sort by"), topIdx("order by"))
-        .filter(_ >= 0).minOption
+      val body = inner.trim.replaceFirst("(?is)^on\\s+", "")
+      val firstArg = matchesInCode(body, argRe).nextOption().map(_.start)
+        .getOrElse(return q)
+      // top-level clause offsets
+      def topIdx(kws: String) =
+        topMatch(body, s"(?i)\\b(?:$kws) by".r).map(_.start)
+      val partIdx0 = topIdx("distribute|partition")
+      val sortIdx0 = topIdx("sort|order")
       val relEnd = Seq(partIdx0, sortIdx0, Some(firstArg))
         .flatten.min
       val rel = body.substring(0, relEnd).trim
@@ -711,9 +654,8 @@ class HiveDialect(val spark: SparkSession) {
           val after = body.indexOf("by", s0) + 2
           val end = endCands.filter(_ > after).minOption
             .getOrElse(body.length)
-          body.substring(after, end).split(',')
-            .map(_.trim.replaceAll("(?i)\\s+(asc|desc)$", ""))
-            .filter(_.nonEmpty).toSeq
+          splitTop(body.substring(after, end), ',')
+            .map(_.replaceAll("(?i)\\s+(asc|desc)$", ""))
         }.getOrElse(Nil)
       val partCols = colsAt(partIdx0,
         Seq(sortIdx0, Some(firstArg)).flatten)
@@ -721,14 +663,12 @@ class HiveDialect(val spark: SparkSession) {
       // positional argN(...) values
       val args = scala.collection.mutable.ArrayBuffer[String]()
       var from = firstArg
-      var am = argRe.findFirstMatchIn(body.substring(from))
+      var am = matchesInCode(body, argRe).find(_.start >= from)
       while (am.isDefined) {
-        val o = body.indexOf('(', from + am.get.start)
-        val c = closeOf(body, o)
-        if (c < 0) return q
-        args += body.substring(o + 1, c).trim
-        from = c + 1
-        am = argRe.findFirstMatchIn(body.substring(from))
+        val (a, next) = balancedBody(body, am.get.end - 1).getOrElse(return q)
+        args += a.trim
+        from = next
+        am = matchesInCode(body, argRe).find(_.start >= from)
       }
       if (args.length < 4 || args.length % 2 != 0) return q
       def unq(s: String): String =
@@ -745,13 +685,13 @@ class HiveDialect(val spark: SparkSession) {
       graft.operators.MatchPath
         .hiveMatchPath(df, partCols, orderCols, syms, pattern)
         .createOrReplaceTempView("__matchpath")
-      val tail = q.substring(close + 1)
+      val tail = q.substring(end)
       val needsAlias =
         !tail.dropWhile(_.isWhitespace).headOption.exists(_.isLetter)
       q = q.substring(0, m.get.start) +
         s"(select $resultExprs from __matchpath)" +
         (if (needsAlias) " __mp" else "") + tail
-      m = callRe.findFirstMatchIn(q)
+      m = matchesInCode(q, callRe).nextOption()
     }
     q
   }
@@ -765,43 +705,20 @@ class HiveDialect(val spark: SparkSession) {
     * aware so subquery inputs survive. Innermost-first via fixpoint. */
   private def stripNoops(q0: String): String = {
     var q = q0
-    var m = noopCallRe.findFirstMatchIn(q)
+    var m = matchesInCode(q, noopCallRe).nextOption()
     while (m.isDefined) {
-      val open = q.indexOf('(', m.get.start)
-      var depth = 0; var j = open; var close = -1
-      while (j < q.length && close < 0) {
-        q(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
-      if (close < 0) return q
-      var body = q.substring(open + 1, close).trim
-        .replaceFirst("(?is)^on\\s+", "")
+      val (inner, after) = balancedBody(q, m.get.end - 1).getOrElse(return q)
+      val body = inner.trim.replaceFirst("(?is)^on\\s+", "")
       // cut at the first top-level partitioning/ordering clause
-      val bl = body.toLowerCase
-      var d = 0; var cut = -1; var k = 0
-      while (k < body.length && cut < 0) {
-        body(k) match {
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        if (d == 0 && (k == 0 || body(k - 1).isWhitespace) &&
-            (bl.startsWith("partition by", k) ||
-              bl.startsWith("distribute by", k) ||
-              bl.startsWith("sort by", k) ||
-              bl.startsWith("order by", k))) cut = k
-        k += 1
-      }
-      if (cut >= 0) body = body.substring(0, cut).trim
-      q = q.substring(0, m.get.start) + body + q.substring(close + 1)
-      m = noopCallRe.findFirstMatchIn(q)
+      val rel = topMatch(body, noopClauseRe)
+        .fold(body)(c => body.substring(0, c.start).trim)
+      q = q.substring(0, m.get.start) + rel + q.substring(after)
+      m = matchesInCode(q, noopCallRe).nextOption()
     }
     q
   }
+  private val noopClauseRe =
+    "(?i)\\b(?:partition|distribute|sort|order) by".r
 
   /** Hive defaults a window spec with PARTITION BY but no ORDER BY to
     * ordering on the partition key (ql/parse/PTFTranslator
@@ -810,18 +727,19 @@ class HiveDialect(val spark: SparkSession) {
   private val unorderedOverRe = ("(?is)\\bover\\s*\\(\\s*" +
     "(?:partition|distribute)\\s+by\\s+" +
     "((?:[^()]|\\([^()]*\\))+?)\\s*\\)").r
-  private def defaultOverOrder(q: String): String =
-    unorderedOverRe.replaceAllIn(q, m => {
+  private def defaultOverOrder(q: String): String = {
+    val q1 = replaceInCode(q, unorderedOverRe) { m =>
       val cols = m.group(1).trim
-      val cl = cols.toLowerCase
-      scala.util.matching.Regex.quoteReplacement(
-        if (cl.contains("order by") || cl.contains("sort by") ||
-            cl.contains(" rows") || cl.contains(" range")) m.group(0)
-        else s"over (partition by $cols order by $cols)")
-    })
-      // empty over(): one partition, engine-defined order — order by a
-      // constant for Spark's ranking functions (same multiset)
-      .replaceAll("(?i)\\bover\\s*\\(\\s*\\)", "over (order by 1)")
+      val cl = HiveStatements.maskStringLiterals(cols).toLowerCase
+      if (cl.contains("order by") || cl.contains("sort by") ||
+          cl.contains(" rows") || cl.contains(" range")) m.matched
+      else s"over (partition by $cols order by $cols)"
+    }
+    // empty over(): one partition, engine-defined order — order by a
+    // constant for Spark's ranking functions (same multiset)
+    replaceInCode(q1, "(?i)\\bover\\s*\\(\\s*\\)".r)(_ =>
+      "over (order by 1)")
+  }
 
   // `AS name [type], ...` — a bare type word must not swallow the
   // next clause keyword (`as key from t`)
@@ -853,47 +771,25 @@ class HiveDialect(val spark: SparkSession) {
   private def escapeTransformRewrite(q: String): String = {
     if (!escapeTransform) return q
     if (q.toLowerCase.contains("hive_transform_field")) return q
-    val m = "(?is)\\bselect\\s+transform\\s*\\(".r
-      .findFirstMatchIn(q).getOrElse(return q)
-    var j = m.end; var depth = 1
-    while (j < q.length && depth > 0) {
-      q(j) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      j += 1
-    }
-    if (depth != 0) return q
-    val args = q.substring(m.end, j - 1)
-    val afterArgs = q.substring(j)
-    val um = "(?is)^\\s*using\\s+('[^']*'|\"[^\"]*\")\\s+as\\s+".r
-      .findFirstMatchIn(afterArgs).getOrElse(return q)
+    val m = matchesInCode(q, "(?is)\\bselect\\s+transform\\s*\\(".r)
+      .nextOption().getOrElse(return q)
+    val (args, after) = balancedBody(q, m.end - 1).getOrElse(return q)
+    val afterArgs = q.substring(after)
+    val um = matchesInCode(afterArgs,
+      "(?is)^\\s*using\\s+('[^']*'|\"[^\"]*\")\\s+as\\s+".r)
+      .nextOption().getOrElse(return q)
     val cmd = um.group(1)
     val afterAs = afterArgs.substring(um.end)
     // the AS column list runs to the first depth-0 FROM
-    var d2 = 0; var k = 0; var fromIdx = -1
-    while (k < afterAs.length && fromIdx < 0) {
-      afterAs(k) match {
-        case '(' => d2 += 1
-        case ')' => d2 -= 1
-        case 'f' | 'F' if d2 == 0 &&
-            (k == 0 || !afterAs(k - 1).isLetterOrDigit) &&
-            afterAs.regionMatches(true, k, "from", 0, 4) &&
-            (k + 4 >= afterAs.length ||
-              !afterAs(k + 4).isLetterOrDigit) => fromIdx = k
-        case _ =>
-      }
-      k += 1
-    }
-    if (fromIdx < 0) return q
+    val fromIdx = topMatch(afterAs, "(?i)\\bfrom\\b".r).map(_.start)
+      .getOrElse(return q)
     val colsRaw = afterAs.substring(0, fromIdx).trim
     val tail = afterAs.substring(fromIdx)
     val cols0 =
       if (colsRaw.startsWith("(") && colsRaw.endsWith(")"))
         colsRaw.substring(1, colsRaw.length - 1)
       else colsRaw
-    val cols = splitTop(cols0, ',').map(_.trim).filter(_.nonEmpty)
+    val cols = splitTop(cols0, ',')
     if (cols.isEmpty) return q
     val outs = cols.zipWithIndex.map { case (c, i) =>
       val parts = c.split("\\s+", 2)
@@ -916,14 +812,14 @@ class HiveDialect(val spark: SparkSession) {
   private def fixTransformIo(q0: String): String = {
     // Spark's parser rejects optimizer hints ahead of TRANSFORM —
     // Hive's MAPJOIN hints are advisory anyway
-    val q = q0.replaceAll("/\\*\\+[^*]*\\*/", " ")
+    val q = replaceInCode(q0, "/\\*\\+[^*]*\\*/".r)(_ => " ")
     // `ROW FORMAT SERDE LazySimpleSerDe` with no properties IS Hive's
     // default script serde — strip it so the explicit tab-delimited
     // contract below applies (Spark's TRANSFORM grammar rejects the
     // SERDE spelling)
-    val q1 = q.replaceAll(
-      "(?is)row\\s+format\\s+serde\\s+'[^']*LazySimpleSerDe'" +
-        "(?!\\s*with\\s+serdeproperties)", " ")
+    val q1 = replaceInCode(q, ("(?is)row\\s+format\\s+serde\\s+('[^']*')" +
+      "(?!\\s*with\\s+serdeproperties)").r)(m =>
+      if (isLazySimple(m.group(1))) " " else m.matched)
     // `AS col ROW FORMAT SERDE LazySimpleSerDe WITH SERDEPROPERTIES
     // ('serialization.last.column.takes.rest'='true') RECORDREADER
     // BinaryRecordReader`: the single output column takes the WHOLE
@@ -933,12 +829,16 @@ class HiveDialect(val spark: SparkSession) {
     val lastRest = ("(?is)\\bselect\\s+transform\\s*\\(" +
       "(\\*|[^()]*)\\)\\s*using\\s+('[^']*')\\s+as\\s+" +
       "`?(\\w+)`?(?:\\s+(\\w+))?\\s*" +
-      "row\\s+format\\s+serde\\s+'[^']*LazySimpleSerDe'\\s*" +
-      "with\\s+serdeproperties\\s*\\(\\s*" +
-      "'serialization\\.last\\.column\\.takes\\.rest'\\s*=\\s*" +
-      "'true'\\s*\\)\\s*" +
-      "recordreader\\s+'[^']*BinaryRecordReader'\\s*(from\\b.*)").r
-    val lastRestHit = lastRest.findFirstMatchIn(q1)
+      "row\\s+format\\s+serde\\s+('[^']*')\\s*" +
+      "with\\s+serdeproperties\\s*\\(\\s*('[^']*')\\s*=\\s*" +
+      "('[^']*')\\s*\\)\\s*" +
+      "recordreader\\s+('[^']*')\\s*(from\\b.*)").r
+    val lastRestHit = matchesInCode(q1, lastRest).find(m =>
+      isLazySimple(m.group(5)) &&
+        m.group(6).equalsIgnoreCase(
+          "'serialization.last.column.takes.rest'") &&
+        m.group(7).equalsIgnoreCase("'true'") &&
+        m.group(8).toLowerCase.endsWith("binaryrecordreader'"))
     if (lastRestHit.isDefined) {
       val m = lastRestHit.get
       val colExpr =
@@ -954,28 +854,30 @@ class HiveDialect(val spark: SparkSession) {
         // use \u0002 (never in the data) so the raw line, tabs
         // included, lands whole in __gline
         "row format delimited fields terminated by '\u0002' " +
-        s"${m.group(5)}) __gbin"
+        s"${m.group(9)}) __gbin"
     }
-    else if (q1.toLowerCase.contains("row format")) q1
-    else transformIoRe.replaceAllIn(q1, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        // no AS clause: Hive's contract is (key, value) split at the
-        // FIRST tab with value = REST OF LINE, tabs preserved
-        // (ScriptOperator + TextRecordReader); a delimited serde can't
-        // express that, so pipe through a filter that rewrites just
-        // the first tab to \x01 and split on that
-        if (m.group(2) == null) {
-          val quote = m.group(1).head
-          val inner = m.group(1).substring(1, m.group(1).length - 1)
-          val repo = HiveDialect.helperScriptDir
-          "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' USING " +
-            s"$quote$inner | python3 $repo/first_tab_to_soh.py$quote" +
-            " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\u0001' "
-        } else
-          "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' USING " +
-            m.group(1) + m.group(2) +
-            " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' "))
+    else if (HiveStatements.maskStringLiterals(q1).toLowerCase
+        .contains("row format")) q1
+    else replaceInCode(q1, transformIoRe)(m =>
+      // no AS clause: Hive's contract is (key, value) split at the
+      // FIRST tab with value = REST OF LINE, tabs preserved
+      // (ScriptOperator + TextRecordReader); a delimited serde can't
+      // express that, so pipe through a filter that rewrites just
+      // the first tab to \x01 and split on that
+      if (m.group(2) == null) {
+        val quote = m.group(1).head
+        val inner = m.group(1).substring(1, m.group(1).length - 1)
+        val repo = HiveDialect.helperScriptDir
+        "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' USING " +
+          s"$quote$inner | python3 $repo/first_tab_to_soh.py$quote" +
+          " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\u0001' "
+      } else
+        "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' USING " +
+          m.group(1) + m.group(2) +
+          " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' ")
   }
+  private def isLazySimple(serde: String) =
+    serde.toLowerCase.endsWith("lazysimpleserde'")
 
   /** Hive's `MAP exprs USING ...` / `REDUCE exprs USING ...` insert
     * bodies are sugar for `SELECT TRANSFORM(exprs) USING ...`
@@ -988,7 +890,7 @@ class HiveDialect(val spark: SparkSession) {
       // Word-boundary TRANSFORM( only: an alias like transform_ratio
       // or a string literal must not trip the IO rewrite (which also
       // strips hints and row-format clauses)
-      if ("(?is)\\btransform\\s*\\(".r.findFirstIn(sel).isDefined)
+      if (matchesInCode(sel, "(?is)\\btransform\\s*\\(".r).nonEmpty)
         fixTransformIo(sel)
       else sel
     case mrRe(exprs, rest) =>
@@ -1015,40 +917,26 @@ class HiveDialect(val spark: SparkSession) {
     var q = q0
     // udtfCount2() FROM t → the total count, twice
     udtfCount2Names.foreach { n =>
-      q = ("(?is)select\\s+" + java.util.regex.Pattern.quote(n) +
-        "\\s*\\(\\s*\\)\\s+from\\s+([\\w.]+)").r.replaceAllIn(q, m =>
-        scala.util.matching.Regex.quoteReplacement(
-          s"select c0 from (select count(*) as c0 from ${m.group(1)} " +
-            s"union all select count(*) as c0 from ${m.group(1)}) tc2"))
+      q = replaceInCode(q, ("(?is)select\\s+" + Pattern.quote(n) +
+        "\\s*\\(\\s*\\)\\s+from\\s+([\\w.]+)").r)(m =>
+        s"select c0 from (select count(*) as c0 from ${m.group(1)} " +
+          s"union all select count(*) as c0 from ${m.group(1)}) tc2")
     }
     var guard = 0
     var changed = true
     while (changed && guard < 8) {
       changed = false; guard += 1
       macros.foreach { case (name, (params, body)) =>
-        val callRe = ("(?i)\\b" + java.util.regex.Pattern.quote(name) +
-          "\\s*\\(").r
-        callRe.findFirstMatchIn(q).foreach { m =>
-          val open = q.indexOf('(', m.start)
-          var depth = 0; var j = open; var close = -1
-          while (j < q.length && close < 0) {
-            q(j) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ =>
-            }
-            j += 1
-          }
-          if (close > 0) {
-            val args = splitTop(q.substring(open + 1, close), ',')
-            var expanded = body
-            params.zip(args).foreach { case (p, a) =>
-              expanded = expanded.replaceAll(
-                "(?i)\\b" + java.util.regex.Pattern.quote(p) + "\\b",
-                scala.util.matching.Regex.quoteReplacement(s"($a)"))
+        val callRe = ("(?i)\\b" + Pattern.quote(name) + "\\s*\\(").r
+        matchesInCode(q, callRe).nextOption().foreach { m =>
+          balancedBody(q, m.end - 1).foreach { case (argText, after) =>
+            val args = splitTop(argText, ',')
+            val expanded = params.zip(args).foldLeft(body) {
+              case (e, (p, a)) => replaceInCode(e,
+                ("(?i)\\b" + Pattern.quote(p) + "\\b").r)(_ => s"($a)")
             }
             q = q.substring(0, m.start) + "(" + expanded + ")" +
-              q.substring(close + 1)
+              q.substring(after)
             changed = true
           }
         }
@@ -1075,7 +963,7 @@ class HiveDialect(val spark: SparkSession) {
     * a full alias (ref ql/parse/WindowingSpec fill-in-defaults
     * semantics, forward references included). */
   def inlineWindowClauses(q0: String): String =
-    windowClauseRe.findFirstMatchIn(q0) match {
+    matchesInCode(q0, windowClauseRe).nextOption() match {
       case None => q0
       case Some(m) =>
         val raw =
@@ -1099,15 +987,14 @@ class HiveDialect(val spark: SparkSession) {
         var q = (q0.substring(0, m.start) + q0.substring(m.end)).trim
         raw.keys.foreach { n =>
           val full = resolve(n, Set(n))
-          val repl = java.util.regex.Matcher
-            .quoteReplacement(s"over ($full)")
-          q = q.replaceAll(s"(?is)\\bover\\s*\\(\\s*$n\\s*\\)", repl)
-          q = q.replaceAll(s"(?is)\\bover\\s+$n\\b", repl)
+          q = replaceInCode(q, s"(?is)\\bover\\s*\\(\\s*$n\\s*\\)".r)(
+            _ => s"over ($full)")
+          q = replaceInCode(q, s"(?is)\\bover\\s+$n\\b".r)(
+            _ => s"over ($full)")
           // inline inherited spec: over (wN <own frame>)
           val noFrame = specFrameRe.replaceAllIn(full, "").trim
-          q = s"(?is)\\bover\\s*\\(\\s*$n\\s+([^()]+)\\)".r
-            .replaceAllIn(q, w => java.util.regex.Matcher
-              .quoteReplacement(s"over ($noFrame ${w.group(1).trim})"))
+          q = replaceInCode(q, s"(?is)\\bover\\s*\\(\\s*$n\\s+([^()]+)\\)".r)(
+            w => s"over ($noFrame ${w.group(1).trim})")
         }
         inlineWindowClauses(q)
     }
@@ -1470,15 +1357,8 @@ class HiveDialect(val spark: SparkSession) {
   private def sampleAggZero(q0: String): String = {
     val fnRe =
       "(?i)\\b(stddev_samp|var_samp|variance_samp|covar_samp)\\s*\\(".r
-    def closeParen(s: String, openEnd: Int): Int = {
-      var depth = 1; var j = openEnd
-      while (depth > 0 && j < s.length) {
-        s(j) match { case '(' => depth += 1; case ')' => depth -= 1
-                     case _ => }
-        j += 1
-      }
-      j
-    }
+    def closeParen(s: String, openEnd: Int): Int =
+      balancedBody(s, openEnd - 1).fold(s.length)(_._2)
     var q = q0
     var from = 0
     var continue = true
@@ -1543,53 +1423,19 @@ class HiveDialect(val spark: SparkSession) {
     * (Hive renders int operands without a decimal tail). */
   private def pipeConcat(q: String): String = {
     if (!q.contains("||")) return q
-    val kw = Set("from", "where", "group", "order", "sort", "having",
-      "limit", "union", "select", "on", "when", "then", "else", "end",
-      "and", "or", "by", "distribute", "cluster", "as")
     // boundaries: top-level commas and keywords
-    val bounds = scala.collection.mutable.ArrayBuffer[Int](0)
-    var depth = 0; var i = 0; var quote: Char = 0
-    while (i < q.length) {
-      val c = q(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => bounds += i; bounds += (i + 1)
-        case _ if c.isLetter && depth == 0 &&
-            (i == 0 || !(q(i - 1).isLetterOrDigit || q(i - 1) == '_')) =>
-          val w = q.substring(i).takeWhile(ch =>
-            ch.isLetterOrDigit || ch == '_').toLowerCase
-          if (kw.contains(w)) { bounds += i; bounds += (i + w.length) }
-        case _ =>
-      }
-      i += 1
-    }
-    bounds += q.length
-    val segs = bounds.toSeq.sorted.sliding(2).collect {
+    val bounds = 0 +: topMatches(q, pipeBoundRe).flatMap(m =>
+      Seq(m.start, m.end)).toSeq :+ q.length
+    val segs = bounds.sorted.sliding(2).collect {
       case scala.collection.Seq(a, b) if b > a => (a, b) }.toSeq
     var out = q
     segs.sortBy(-_._1).foreach { case (a, b) =>
       val seg = out.substring(a, b)
       // split THIS segment at its top-level ||
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      var d = 0; var qt: Char = 0; var last = 0; var j = 0
-      while (j < seg.length) {
-        val c = seg(j)
-        if (qt != 0) { if (c == qt) qt = 0 }
-        else c match {
-          case '\'' | '"' => qt = c
-          case '(' => d += 1
-          case ')' => d -= 1
-          case '|' if d == 0 && j + 1 < seg.length && seg(j + 1) == '|' =>
-            parts += seg.substring(last, j); last = j + 2; j += 1
-          case _ =>
-        }
-        j += 1
-      }
-      if (parts.nonEmpty) {
-        parts += seg.substring(last)
+      val bars = topMatches(seg, "\\|\\|".r).map(_.start).toSeq
+      if (bars.nonEmpty) {
+        val parts = (-2 +: bars).zip(bars :+ seg.length)
+          .map { case (x, y) => seg.substring(x + 2, y) }
         val trimmed = parts.map(_.trim).filter(_.nonEmpty)
         if (trimmed.length == parts.length)
           out = out.substring(0, a) + " concat(" +
@@ -1599,6 +1445,9 @@ class HiveDialect(val spark: SparkSession) {
     }
     out
   }
+  private val pipeBoundRe = ("(?i),|\\b(?:from|where|group|order|sort|" +
+    "having|limit|union|select|on|when|then|else|end|and|or|by|" +
+    "distribute|cluster|as)\\b").r
 
   /** Hive allows lag/lead INSIDE a windowed aggregate with no OVER of
     * their own — they inherit the enclosing window's partition/order
@@ -1610,13 +1459,8 @@ class HiveDialect(val spark: SparkSession) {
     val callRe = "(?i)\\b(lag|lead)\\s*\\(".r
     val calls = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
     callRe.findAllMatchIn(q).foreach { m =>
-      var depth = 1; var j = m.end
-      while (depth > 0 && j < q.length) {
-        q(j) match { case '(' => depth += 1; case ')' => depth -= 1
-                     case _ => }
-        j += 1
-      }
-      val after = q.substring(math.min(j, q.length)).trim
+      val j = balancedBody(q, m.end - 1).fold(q.length)(_._2)
+      val after = q.substring(j).trim
       if (!after.toLowerCase.startsWith("over")) calls += ((m.start, j))
     }
     if (calls.isEmpty) return None
@@ -1634,30 +1478,10 @@ class HiveDialect(val spark: SparkSession) {
     if (spec.isEmpty) return None
     // top-level FROM segment (WHERE stays inside: Hive filters before
     // windowing)
-    var depth = 0; var fromIdx = -1; var i = 0
-    val lq = q.toLowerCase
-    while (i < q.length && fromIdx < 0) {
-      q(i) match { case '(' => depth += 1; case ')' => depth -= 1
-                   case _ => }
-      if (depth == 0 && lq.startsWith("from", i) &&
-          (i == 0 || !q(i - 1).isLetterOrDigit) &&
-          (i + 4 >= q.length || !q(i + 4).isLetterOrDigit))
-        fromIdx = i
-      i += 1
-    }
+    val fromIdx = topMatch(q, "(?i)\\bfrom\\b".r).fold(-1)(_.start)
     if (fromIdx < 0 || calls.exists(_._1 > fromIdx)) return None
-    val tailKw = Seq("window", "group", "order", "sort", "cluster",
-      "distribute", "limit", "having")
-    depth = 0; var endIdx = q.length; i = fromIdx + 4
-    while (i < q.length && endIdx == q.length) {
-      q(i) match { case '(' => depth += 1; case ')' => depth -= 1
-                   case _ => }
-      if (depth == 0 && tailKw.exists(k => lq.startsWith(k, i) &&
-          !q(i - 1).isLetterOrDigit &&
-          (i + k.length >= q.length || !q(i + k.length).isLetterOrDigit)))
-        endIdx = i
-      i += 1
-    }
+    val endIdx = topMatch(q, ("(?i)\\b(?:window|group|order|sort|cluster|" +
+      "distribute|limit|having)\\b").r, fromIdx + 4).fold(q.length)(_.start)
     val fromPart = q.substring(fromIdx + 4, endIdx).trim
     if (fromPart.isEmpty) return None
     val liftCols = calls.zipWithIndex.map { case ((s, e), n) =>
@@ -1677,22 +1501,11 @@ class HiveDialect(val spark: SparkSession) {
     var from = 0
     var m = callRe.findFirstMatchIn(q.substring(from))
     while (m.isDefined) {
-      val open = q.indexOf('(', from + m.get.start)
-      var depth = 0; var j = open; var close = -1
-      while (j < q.length && close < 0) {
-        q(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
-      if (close < 0) return q
-      val args = splitTop(q.substring(open + 1, close), ',')
-        .map(a => s"cast($a as $typ)")
+      val (inner, after) = balancedBody(q, from + m.get.end - 1)
+        .getOrElse(return q)
+      val args = splitTop(inner, ',').map(a => s"cast($a as $typ)")
       val repl = fn + "(" + args.mkString(", ") + ")"
-      q = q.substring(0, from + m.get.start) + repl +
-        q.substring(close + 1)
+      q = q.substring(0, from + m.get.start) + repl + q.substring(after)
       from = from + m.get.start + repl.length
       m = callRe.findFirstMatchIn(q.substring(from))
     }
@@ -1727,20 +1540,7 @@ class HiveDialect(val spark: SparkSession) {
       // one replace per pass, scanning right to left so the balanced
       // spans computed against the current text stay valid
       sites.reverseIterator.takeWhile(_ => !changed).foreach { mm =>
-        val open = q.indexOf('(', mm.start)
-        var depth = 0
-        var i = open
-        var close = -1
-        while (i < q.length && close < 0) {
-          q(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (close > 0) {
-          val body = q.substring(open + 1, close)
+        balancedBody(q, mm.end - 1).foreach { case (body, after) =>
           "(?is)^(.*)\\s+as\\s+(char|varchar)\\s*\\(\\s*(\\d+)\\s*\\)\\s*$".r
             .findFirstMatchIn(body).foreach { b =>
               val expr = b.group(1)
@@ -1749,7 +1549,7 @@ class HiveDialect(val spark: SparkSession) {
                 if (b.group(2).equalsIgnoreCase("varchar"))
                   s"substr(cast($expr as string), 1, $n)"
                 else s"rpad(cast($expr as string), $n, ' ')"
-              q = q.substring(0, mm.start) + repl + q.substring(close + 1)
+              q = q.substring(0, mm.start) + repl + q.substring(after)
               changed = true
             }
         }
@@ -2046,25 +1846,12 @@ class HiveDialect(val spark: SparkSession) {
   def unionLimitSplit(sql: String): String = {
     val low = sql.toLowerCase
     if (!low.contains("union all") || !low.contains("limit")) return sql
-    var i = sql.indexOf('(')
+    val code = HiveStatements.maskStringLiterals(sql)
+    var i = code.indexOf('(')
     while (i >= 0) {
-      // balanced-paren scan, quote-aware
-      var d = 0; var j = i; var quote = '\u0000'; var close = -1
-      while (j < sql.length && close < 0) {
-        val c = sql.charAt(j)
-        if (quote != '\u0000') { if (c == quote) quote = '\u0000' }
-        else c match {
-          case '\'' | '"' => quote = c
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
-      if (close > i) {
-        val body = sql.substring(i + 1, close)
-        "(?is)^(.*\\S)\\s+limit\\s+(\\d+)\\s*$".r.findFirstMatchIn(body)
-          .foreach { m =>
+      balancedBody(sql, i).foreach { case (body, after) =>
+        matchesInCode(body, "(?is)^(.*\\S)\\s+limit\\s+(\\d+)\\s*$".r)
+          .nextOption().foreach { m =>
             val branches = splitTopUnionAll(m.group(1))
             if (branches.size > 1) {
               val tot = m.group(2).toInt
@@ -2079,36 +1866,19 @@ class HiveDialect(val spark: SparkSession) {
                 s"select * from ($b limit $share) __ulim$bi"
               }
               return sql.substring(0, i + 1) +
-                parts.mkString(" union all ") + sql.substring(close)
+                parts.mkString(" union all ") + sql.substring(after - 1)
             }
           }
       }
-      i = sql.indexOf('(', i + 1)
+      i = code.indexOf('(', i + 1)
     }
     sql
   }
 
   private def splitTopUnionAll(s: String): Seq[String] = {
-    val parts = Vector.newBuilder[String]
-    var d = 0; var quote = '\u0000'; var start = 0; var i = 0
-    val l = s.toLowerCase
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != '\u0000') { if (c == quote) quote = '\u0000'; i += 1 }
-      else c match {
-        case '\'' | '"' => quote = c; i += 1
-        case '(' => d += 1; i += 1
-        case ')' => d -= 1; i += 1
-        case _ if d == 0 && l.startsWith("union all", i) &&
-            (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-            (i + 9 >= s.length ||
-              !Character.isLetterOrDigit(s.charAt(i + 9))) =>
-          parts += s.substring(start, i); start = i + 9; i += 9
-        case _ => i += 1
-      }
-    }
-    parts += s.substring(start)
-    parts.result().map(_.trim).filter(_.nonEmpty)
+    val cuts = topMatches(s, "(?i)\\bunion all\\b".r).toSeq
+    (0 +: cuts.map(_.end)).zip(cuts.map(_.start) :+ s.length)
+      .map { case (a, b) => s.substring(a, b).trim }.filter(_.nonEmpty)
   }
 }
 

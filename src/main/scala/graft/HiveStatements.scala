@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField,
 
 import graft.HiveTypes.cvCast
 import graft.operators.MergeInto
+import scala.util.matching.Regex
 
 /** Hive SQL statement dialect: the statement surface Hive accepts but
   * Spark's parser rejects — ACID `UPDATE`/`DELETE`/`MERGE INTO`
@@ -2293,26 +2294,11 @@ class HiveStatements(val spark: SparkSession) {
       "`?[\\w.]+`?\\s*").r.findFirstMatchIn(q).getOrElse(return q)
     val open = q.indexOf('(', m.end - 1)
     if (open < 0) return q
-    var i = open + 1
-    var depth = 1
-    var inStr = '\u0000'
-    while (i < q.length && depth > 0) {
-      val c = q.charAt(i)
-      if (inStr != '\u0000') { if (c == inStr) inStr = '\u0000' }
-      else c match {
-        case '\'' | '"' => inStr = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    if (depth != 0) return q
-    val body = q.substring(open + 1, i - 1)
+    val (body, after) = balancedBody(q, open).getOrElse(return q)
     val entries = splitTop(body, ',')
     val kept = entries.filterNot(meta.isConstraintEntry)
     if (kept.size == entries.size) return q
-    q.substring(0, open + 1) + kept.mkString(", ") + q.substring(i - 1)
+    q.substring(0, open + 1) + kept.mkString(", ") + q.substring(after - 1)
   }
 
   /** Hive-format CREATE TABLE → Spark datasource CREATE. Spark's
@@ -3445,97 +3431,147 @@ object HiveStatements {
   val DefaultPartitionName = "__HIVE_DEFAULT_PARTITION__"
 
   /** Split on `sep` at paren/angle-bracket depth 0 (decimal(p,s) and
-    * complex types nest; backticked names pass through). */
+    * complex types nest), outside string literals, comments and
+    * backticked names ([[structureOf]]). */
   def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
+    val m = structureOf(s)
     var depth = 0
-    var tick = false
-    s.foreach {
-      case '`' => tick = !tick; cur.append('`')
-      case c if tick => cur.append(c)
-      case c @ ('<' | '(') => depth += 1; cur.append(c)
-      case c @ ('>' | ')') => depth -= 1; cur.append(c)
-      case `sep` if depth == 0 => out += cur.result(); cur.clear()
-      case c => cur.append(c)
-    }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
+    cutAt(s, m.indices.filter { i =>
+      m(i) match {
+        case '<' | '(' => depth += 1
+        case '>' | ')' => depth -= 1
+        case _ =>
+      }
+      m(i) == sep && depth == 0
+    })
   }
 
-  /** `q` with the CONTENTS of quoted string literals blanked to
-    * spaces (quote chars kept, 1:1 length — offsets into the masked
-    * text index the original) so clause keywords can be located
-    * without matching text INSIDE literals (`SELECT 'stored by x'`
-    * must not trip the STORED BY dispatch). Handles backslash
-    * escapes and SQL-doubled quotes. */
+  /** Split on `sep` outside string literals, comments and backticked
+    * names, at any paren depth (a static partition value may contain
+    * the separator: `hr='file,'`). */
+  def splitQuoted(s: String, sep: Char): Seq[String] = {
+    val m = structureOf(s)
+    cutAt(s, m.indices.filter(m(_) == sep))
+  }
+
+  /** The trimmed, non-empty pieces of `s` between the `cuts` offsets. */
+  private def cutAt(s: String, cuts: Seq[Int]): Seq[String] =
+    (-1 +: cuts).zip(cuts :+ s.length)
+      .map { case (a, b) => s.substring(a + 1, b).trim }.filter(_.nonEmpty)
+
+  /** The engine's one lexical rule for HiveQL text (HiveLexer.g
+    * StringLiteral and COMMENT): `q` with the body of every '…' or "…"
+    * string literal filled with [[LiteralFill]] (quotes kept, so
+    * `'[^']*'` spans a literal and a regex group reads it back from
+    * `q`) and the body of every line (`--`) and block comment blanked.
+    * A literal ends at its first quote that is neither
+    * backslash-escaped nor SQL-doubled.
+    * Optimizer hints (block comments opening with `+`) stay visible as
+    * code, and so do backticked names, whose quotes open no literal.
+    * The length is kept, so an offset into the masked text indexes the
+    * same character of `q`; every rewrite and scanner of the dialect
+    * locates code this way (`SELECT 'stored by x'` must not trip the
+    * STORED BY dispatch). */
   def maskStringLiterals(q: String): String = {
     val sb = new StringBuilder(q)
+    def fill(from: Int, to: Int, c: Char): Unit =
+      (from until math.min(to, q.length)).foreach(sb.setCharAt(_, c))
+    def endOf(at: Int) = if (at < 0) q.length else at
     var i = 0
     while (i < q.length) {
       val c = q.charAt(i)
       if (c == '\'' || c == '"') {
         var j = i + 1
-        var closed = false
-        while (j < q.length && !closed) {
-          val cj = q.charAt(j)
-          if (cj == '\\' && j + 1 < q.length) {
-            sb.setCharAt(j, ' '); sb.setCharAt(j + 1, ' '); j += 2
-          } else if (cj == c && j + 1 < q.length &&
-              q.charAt(j + 1) == c) {
-            sb.setCharAt(j, ' '); sb.setCharAt(j + 1, ' '); j += 2
-          } else if (cj == c) { closed = true; j += 1 }
-          else { sb.setCharAt(j, ' '); j += 1 }
-        }
-        i = j
+        while (j < q.length && (q.charAt(j) != c ||
+            j + 1 < q.length && q.charAt(j + 1) == c))
+          j += (if (q.charAt(j) == '\\' || q.charAt(j) == c) 2 else 1)
+        fill(i + 1, j, LiteralFill)
+        i = j + 1
+      } else if (c == '`') i = endOf(q.indexOf('`', i + 1)) + 1
+      else if (q.startsWith("--", i)) {
+        val e = endOf(q.indexOf('\n', i))
+        fill(i + 2, e, ' ')
+        i = e
+      } else if (q.startsWith("/*", i) && !q.startsWith("/*+", i)) {
+        val e = endOf(q.indexOf("*/", i + 2))
+        fill(i + 2, e, ' ')
+        i = e + 2
       } else i += 1
     }
     sb.toString
   }
 
-  /** Split on `sep` outside single/double quotes (a static partition
-    * value may contain the separator: `hr='file,'`). */
-  def splitQuoted(s: String, sep: Char): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    s.foreach {
-      case c @ ('\'' | '"') =>
-        if (quote == 0) quote = c else if (quote == c) quote = 0
-        cur.append(c)
-      case `sep` if quote == 0 => out += cur.result(); cur.clear()
-      case c => cur.append(c)
-    }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
+  /** What a masked literal body holds: neither a word nor a space
+    * character, so no identifier, keyword or `\s` pattern matches
+    * inside a literal (`concat(x, '-')` must not read `x` twice). */
+  val LiteralFill = '\u0001'
+
+  /** [[maskStringLiterals]] with backticked names filled too: the
+    * text the structural scanners read, where a paren, comma or
+    * keyword inside a literal, comment or name is not structure. */
+  private def structureOf(s: String): String =
+    backticked.replaceAllIn(maskStringLiterals(s),
+      m => m.matched.map(c => if (c == '`') c else LiteralFill))
+  private val backticked = "`[^`]*`?".r
+
+  /** Every match of `re` in the code of `q` — found in its masked text,
+    * so no literal or comment matches — with groups that read `q`
+    * itself at the same offsets. */
+  def matchesInCode(q: String, re: Regex): Iterator[Regex.Match] = {
+    val mt = re.pattern.matcher(maskStringLiterals(q))
+    Iterator.continually(mt.find()).takeWhile(identity)
+      .map(_ => new Regex.Match(q, mt, Nil).force)
   }
 
-  /** Balanced-paren body starting at the '(' at `open` — quote-aware
-    * (parens inside '...'/"..." literals, e.g. column COMMENT text,
-    * don't count). Returns (body, indexAfterClose). */
+  /** `q` with each [[matchesInCode]] match replaced by `f` of it (the
+    * result is spliced in as is: no `$n` expansion). */
+  def replaceInCode(q: String, re: Regex)(f: Regex.Match => String)
+      : String = {
+    val sb = new java.lang.StringBuilder
+    var last = 0
+    matchesInCode(q, re).foreach { m =>
+      sb.append(q, last, m.start).append(f(m))
+      last = m.end
+    }
+    sb.append(q, last, q.length).toString
+  }
+
+  /** The matches of `re` at or after `from` that start at paren depth 0
+    * (counted from `from`) in the structure of `s` — outside literals,
+    * comments, backticked names and nested parens — with groups that
+    * read `s`. */
+  def topMatches(s: String, re: Regex, from: Int = 0)
+      : Iterator[Regex.Match] = {
+    val m = structureOf(s)
+    val mt = re.pattern.matcher(m).region(from, m.length)
+      .useTransparentBounds(true).useAnchoringBounds(false)
+    var depth = 0
+    var at = from
+    // the filter counts parens up to the matcher's current match, so
+    // each match is taken before the next find()
+    Iterator.continually(mt.find()).takeWhile(identity).filter { _ =>
+      (at until mt.start).foreach(i =>
+        if (m(i) == '(') depth += 1 else if (m(i) == ')') depth -= 1)
+      at = mt.start
+      depth == 0
+    }.map(_ => new Regex.Match(s, mt, Nil).force)
+  }
+
+  /** The first of [[topMatches]]. */
+  def topMatch(s: String, re: Regex, from: Int = 0): Option[Regex.Match] =
+    topMatches(s, re, from).nextOption()
+
+  /** Balanced-paren body starting at the '(' at `open`, counted in the
+    * structure of `s` (parens inside literals, e.g. column COMMENT
+    * text, don't count). Returns (body, indexAfterClose). */
   def balancedBody(s: String, open: Int): Option[(String, Int)] = {
     var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) {
-        // Hive string literals backslash-escape the delimiter
-        // (COMMENT 'a\'b') — the escaped quote must not end the literal
-        if (c == '\\' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return Some((s.substring(open + 1, i), i + 1))
-        case _ =>
-      }
-      i += 1
-    }
-    None
+    val m = structureOf(s)
+    (open until m.length).find { i =>
+      if (m(i) == '(') depth += 1
+      else if (m(i) == ')') depth -= 1
+      m(i) == ')' && depth == 0
+    }.map(close => (s.substring(open + 1, close), close + 1))
   }
 
   /** ALTER TABLE t ADD|REPLACE COLUMNS (list) [CASCADE|RESTRICT] →

@@ -1202,10 +1202,6 @@ object GapFunctions {
     // (UDFSign.java:74-88); double/long inputs keep Spark's double
     reg.createOrReplaceTempFunction("sign",
       es => HiveSign(es.head), "built-in")
-    reg.createOrReplaceTempFunction("fingerprint64",
-      exprs => Fingerprint64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("hive_hash",
-      exprs => HiveHash(exprs), "built-in")
     spark.udf.register("mask_all", (s: String) => maskAll(s))
     reg.createOrReplaceTempFunction("mask",
       es => HiveMask(0, es), "built-in")

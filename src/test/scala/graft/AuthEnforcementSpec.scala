@@ -9,7 +9,7 @@ package graft
 class AuthEnforcementSpec extends SparkSpec {
 
   private val negDir =
-    "/root/reference/ql/src/test/results/clientnegative"
+    s"${Reference.Root}/ql/src/test/results/clientnegative"
 
   /** The recorded `FAILED: HiveAccessControlException <msg>` line of
     * a clientnegative golden, minus the CLI prefix. */
@@ -180,7 +180,7 @@ class AuthEnforcementSpec extends SparkSpec {
     * the contract under test. Returns None on byte-identical match. */
   private def replayNegative(name: String): Option[String] = {
     val qPath = new java.io.File(
-      "/root/reference/ql/src/test/queries/clientnegative", s"$name.q")
+      s"${Reference.Root}/ql/src/test/queries/clientnegative", s"$name.q")
     val want = recordedDenial(s"$name.q.out")
     val text = {
       val src = scala.io.Source.fromFile(qPath, "UTF-8")

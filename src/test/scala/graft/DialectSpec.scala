@@ -780,4 +780,42 @@ class DialectSpec extends SparkSpec {
     assert(row.getString(3).trim === "9223372036854775807", "max")
     spark.sql("DROP TABLE big_t")
   }
+
+  test("public entry: string literals pass the dialect rewrite " +
+      "untouched (function renames, LIMIT sugar, FLOOR, UPDATE SET)") {
+    val row = hive.sql("SELECT 'call hash(x) now', 'std(y)', " +
+      "'limit 5, 3', 'floor(ts to day)'").get.head
+    assert(row.toSeq === Seq("call hash(x) now", "std(y)", "limit 5, 3",
+      "floor(ts to day)"))
+    spark.range(2).selectExpr("id", "'z' AS name")
+      .createOrReplaceTempView("acct")
+    assert(hive.sql("UPDATE acct SET name = 'a, b' WHERE id = 1").isEmpty)
+    assert(spark.table("acct").filter(col("id") === 1).head()
+      .getString(1) === "a, b")
+    spark.catalog.dropTempView("acct")
+  }
+
+  test("public entry: noop PTFs and union-limit splits read parens " +
+      "and escaped quotes inside literals as text") {
+    val c = hive.sql("SELECT c FROM noop(on (SELECT ')' AS c, 1 AS k) " +
+      "partition by k)").get.head.getString(0)
+    assert(c === ")")
+    val split = hive.dialect.unionLimitSplit("SELECT * FROM (SELECT " +
+      "'it\\'s' AS s FROM range(9) UNION ALL SELECT 'b' AS s FROM " +
+      "range(9) LIMIT 4) q")
+    assert(split.contains("__ulim1"), split)
+    assert(spark.sql(split).collect().map(_.getString(0)).sorted.toSeq ===
+      Seq("b", "b", "it's", "it's"))
+  }
+
+  test("public entry: matchpath reads its whole argument list") {
+    spark.sql("SELECT * FROM VALUES (1, 1, 'A'), (1, 2, 'A'), (1, 3, 'B') " +
+      "AS v(k, t, s)").createOrReplaceTempView("mp_v")
+    val rows = hive.sql("SELECT t, n FROM matchpath(on mp_v distribute " +
+      "by k sort by t arg1('A+'), arg2('A'), arg3(s = 'A'), " +
+      "arg4('t, size(tpath) as n'))").get.collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1))).sorted
+    assert(rows === Seq((1, 2), (2, 1)))
+    spark.catalog.dropTempView("mp_v")
+  }
 }

@@ -34,7 +34,7 @@ class FunctionCompletenessSpec extends SparkSpec {
   test("every reference-registered function resolves (modulo documented " +
       "internals)") {
     val src = scala.io.Source.fromFile(
-      "/root/reference/ql/src/java/org/apache/hadoop/hive/ql/exec/" +
+      s"${Reference.Root}/ql/src/java/org/apache/hadoop/hive/ql/exec/" +
         "FunctionRegistry.java")
     val names = try {
       "register[A-Za-z]*\\(\"([^\"]+)\"".r

@@ -188,6 +188,22 @@ class FunctionTailSpec extends SparkSpec {
       .head().getDouble(0) === 11.0)
   }
 
+  test("dot_product resolves on a session built without " +
+      "GraftExtensions once Engine.prepare has run") {
+    // Spark exposes no builder for a session over a running context
+    // without its configured extensions; the primary constructor takes
+    // the extensions explicitly
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plain = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getDeclaredConstructors.find(_.getParameterCount == 6).get
+      .newInstance(classic.sparkContext, Some(classic.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[org.apache.spark.sql.SparkSession]
+    val q = "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d))"
+    intercept[org.apache.spark.sql.AnalysisException](plain.sql(q))
+    assert(Engine.prepare(plain).sql(q).head().getDouble(0) === 11.0)
+  }
+
   test("driver smoke path: entry() works on a vanilla sibling session") {
     val vanilla = spark.newSession() // fresh SQLConf, no graft prep
     assert(SparkEntry.entry(vanilla).count() > 0)

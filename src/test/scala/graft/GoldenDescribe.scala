@@ -10,13 +10,13 @@ import org.apache.spark.sql.types._
   * (ql/exec/DDLTask.java:3040-3092 describeFunction;
   * ql/exec/Registry.java:428 getFunctionSynonyms iterates the
   * LinkedHashMap in registration order). Nothing is vendored: the
-  * annotation text is parsed from /root/reference sources when the
+  * annotation text is parsed from the reference sources when the
   * suite runs, exactly like the golden files themselves.
   */
 object GoldenDescribe {
 
   private val qlJava =
-    "/root/reference/ql/src/java/org/apache/hadoop/hive/ql"
+    s"${Reference.Root}/ql/src/java/org/apache/hadoop/hive/ql"
 
   // ---------------------------------------------------------------
   // column-block rendering — the layout lives in the SHIPPED engine

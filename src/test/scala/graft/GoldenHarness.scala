@@ -132,7 +132,7 @@ object GoldenFixtures {
   }
 
   def lines(file: String): Vector[String] = {
-    val ls = readLines(s"/root/reference/data/files/$file")
+    val ls = readLines(s"${Reference.Root}/data/files/$file")
     // escapetest.txt originally held one line per byte 0x00-0x7F (128
     // — the escape1/escape2 goldens count and list them all); the
     // vendored copy dropped a-z, whose dynamic-partition
@@ -736,7 +736,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
   }
 
   private val outDir =
-    "/root/reference/ql/src/test/results/clientpositive"
+    s"${Reference.Root}/ql/src/test/results/clientpositive"
 
   /** createDataFrame rejects char/varchar schemas outright, so build
     * with string columns and CAST to the declared char/varchar types —
@@ -1096,7 +1096,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     * skew +1 s on fraction-bearing cells, an artifact of THEIR
     * conversion paths, not of Spark's internal micros.) */
   lazy val alltypesorc: Unit =
-    spark.read.orc("/root/reference/data/files/alltypesorc")
+    spark.read.orc(s"${Reference.Root}/data/files/alltypesorc")
       .createOrReplaceTempView("alltypesorc")
 
   /** TPC-H-shaped qtest fixtures (q_test_init.sql:277-311). */
@@ -1760,14 +1760,14 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
         .replace(".", "\\.").replace("*", ".*").replace("?", ".")
         .replaceAll("\\{([^}]*)\\}", "($1)").replace(",", "|")
         .replace("[", "[").replace("]", "]") + "$").r
-      val files = new java.io.File("/root/reference/data/files")
+      val files = new java.io.File(s"${Reference.Root}/data/files")
         .list().toSeq.filter(f => re.matches(f)).sorted
       files.zipWithIndex.foreach { case (f, i) =>
         loadData(f, table, overwrite && i == 0, partSpec) }
       return
     }
     // LOAD of a DIRECTORY loads every file under it
-    if (new java.io.File(s"/root/reference/data/files/$fileName")
+    if (new java.io.File(s"${Reference.Root}/data/files/$fileName")
         .isDirectory) {
       fixtureFilesUnder(fileName).zipWithIndex.foreach { case (f, i) =>
         loadData(f, table, overwrite && i == 0, partSpec) }
@@ -1824,7 +1824,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     // none) — sniff the container magic
     val magic: String = {
       val in = new java.io.FileInputStream(
-        s"/root/reference/data/files/$fileName")
+        s"${Reference.Root}/data/files/$fileName")
       try { val b = new Array[Byte](4); in.read(b); new String(b, "ISO-8859-1") }
       finally in.close()
     }
@@ -1840,7 +1840,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
           StructType(plain.toIndexedSeq))
       } else if (fileName.endsWith(".avro")) {
         var df = graft.sources.AvroIO.read(spark,
-          s"/root/reference/data/files/$fileName")
+          s"${Reference.Root}/data/files/$fileName")
         // schema evolution: a file written before ADD COLUMNS fills
         // the new trailing columns with the reader schema's field
         // DEFAULT, null when none (Avro reader-schema contract)
@@ -1916,7 +1916,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
           StructType(plain.toIndexedSeq))
       } else if (fileName.endsWith(".rc")) {
         graft.sources.RcFileIO.read(spark,
-          s"/root/reference/data/files/$fileName",
+          s"${Reference.Root}/data/files/$fileName",
           StructType(dataFields.map(f =>
             f.copy(dataType = stripCharVarchar(f.dataType))).toIndexedSeq))
       } else if (magic.startsWith("SEQ") &&
@@ -1924,7 +1924,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
         // delimited-Text SequenceFile (kv1.seq) through the engine's
         // own source; thrift-encoded fixtures keep their special path
         graft.sources.SequenceFileIO.read(spark,
-          s"/root/reference/data/files/$fileName",
+          s"${Reference.Root}/data/files/$fileName",
           StructType(dataFields.map(f =>
             f.copy(dataType = stripCharVarchar(f.dataType)))
             .toIndexedSeq),
@@ -1932,7 +1932,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
             GoldenFixtures.defaultSeps)(0))
       } else if (fileName.endsWith(".orc") || magic.startsWith("ORC")) {
         alignByName(
-          spark.read.orc(s"/root/reference/data/files/$fileName"),
+          spark.read.orc(s"${Reference.Root}/data/files/$fileName"),
           dataFields)
       } else if (magic.startsWith("PAR1") ||
           fileName.endsWith(".parquet") ||
@@ -1945,7 +1945,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
         spark.conf.set(vconf, "false")
         try {
           var df0 = alignByName(
-            spark.read.parquet(s"/root/reference/data/files/$fileName"),
+            spark.read.parquet(s"${Reference.Root}/data/files/$fileName"),
             dataFields)
           // Hive renders a foreign int96 parquet timestamp as the RAW
           // UTC wall-clock (no writer-zone conversion); Spark renders
@@ -2568,7 +2568,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     val led = loadedFiles.getOrElseUpdate(lc,
       scala.collection.mutable.ListBuffer.empty)
     if (overwrite) led.filterInPlace(_._1 != partName)
-    val dir = new java.io.File("/root/reference/data/files")
+    val dir = new java.io.File(s"${Reference.Root}/data/files")
     // byte-identity between the fixture and the recorded load holds
     // for plain text; container formats (.rc/.seq/.orc) have drifted
     // vs the recordings (alter_merge records 239B for a 222B .rc)
@@ -2628,7 +2628,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
   private def tableFileSizes(lc: String,
       partName: Option[String]): Option[Seq[Long]] = {
     def size(rel: String): Long =
-      new java.io.File("/root/reference/data/files", rel).length
+      new java.io.File(s"${Reference.Root}/data/files", rel).length
     if (loadTainted.contains(lc)) return None
     loadedFiles.get(lc) match {
       // a PRESENT-but-empty ledger is known-empty (partitions
@@ -2883,7 +2883,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     val m = ("(?is)import\\s+(?:(?:external\\s+)?table\\s+" +
       "`?([\\w.]+)`?\\s+)?from\\s+['\"]([^'\"]+)['\"].*").r
       .findFirstMatchIn(stmt).getOrElse(return false)
-    val base = new java.io.File("/root/reference/data/files")
+    val base = new java.io.File(s"${Reference.Root}/data/files")
     val comps = m.group(2).replaceAll("/+$", "")
       .split('/').filter(_.nonEmpty)
     val rel = comps.indices.iterator.map(i => comps.drop(i).mkString("/"))
@@ -2937,7 +2937,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     * regular file (a directory fixture lists its files recursively,
     * sorted — qtest copies whole dirs, e.g. ext_test). */
   private def fixtureFilesUnder(rel: String): Seq[String] = {
-    val base = new java.io.File("/root/reference/data/files")
+    val base = new java.io.File(s"${Reference.Root}/data/files")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq.flatMap(walk)
       else Seq(f)
@@ -5052,7 +5052,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     // :1154, default false) or the deprecated combined flag is on.
     val qSourceText: String = {
       val qSrc = new java.io.File(
-        "/root/reference/ql/src/test/queries/clientpositive/" +
+        s"${Reference.Root}/ql/src/test/queries/clientpositive/" +
           file.stripSuffix(".out"))
       if (qSrc.exists())
         GoldenFixtures.readLines(qSrc.getPath).mkString("\n")
@@ -5291,7 +5291,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
                   .replace(".", "\\.").replace("*", ".*")
                   .replaceAll("\\{([^}]*)\\}", "($1)")
                   .replace(",", "|") + "$").r
-                new java.io.File("/root/reference/data/files")
+                new java.io.File(s"${Reference.Root}/data/files")
                   .list().toSeq.filter(f => re.matches(f)).sorted
               } else Seq(base)
             files.foreach { f =>
@@ -5392,7 +5392,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
               val base = k0.split('/').last
               val viaFixture = !base.contains("*") &&
                 new java.io.File(
-                  s"/root/reference/data/files/$base").exists() &&
+                  s"${Reference.Root}/data/files/$base").exists() &&
                 scala.util.Try(loadData(base, table.split('.').last,
                   ow != null, part)).isSuccess
               if (!viaFixture) {
@@ -6384,7 +6384,7 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
         case createAvroUrlRe(name, partCols, url) =>
           // avro.schema.url: the .q copied the .avsc fixture into a
           // scratch dir — resolve by basename against data/files
-          val avsc = new java.io.File("/root/reference/data/files",
+          val avsc = new java.io.File(s"${Reference.Root}/data/files",
             url.replaceAll("/+$", "").split('/').last)
           if (!avsc.exists()) unhandled("create (avro url)", q)
           registerAvroTable(name, Option(partCols),

@@ -345,7 +345,7 @@ class GoldenSemanticsSpec extends SparkSpec {
       .schema("p_partkey LONG, p_name STRING, p_mfgr STRING, " +
         "p_brand STRING, p_type STRING, p_size INT, p_container STRING, " +
         "p_retailprice DOUBLE, p_comment STRING")
-      .csv("/root/reference/data/files/part_tiny.txt")
+      .csv(s"${Reference.Root}/data/files/part_tiny.txt")
     df.createOrReplaceTempView("part_tiny")
     df
   }

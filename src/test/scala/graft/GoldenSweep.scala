@@ -23,7 +23,7 @@ import java.util.concurrent.atomic.AtomicInteger
 object GoldenSweep {
 
   private val outDir =
-    new File("/root/reference/ql/src/test/results/clientpositive")
+    new File(s"${Reference.Root}/ql/src/test/results/clientpositive")
   private val report = new File("golden_sweep_report.tsv")
 
   /** Nondeterministic statement shapes — skipped, not failed. Word

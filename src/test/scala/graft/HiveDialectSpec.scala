@@ -134,4 +134,47 @@ class HiveDialectSpec extends AnyFunSuite {
     val r = dd.rewrite("select * from db1.conflict")
     assert(r.contains("db1__conflict"))
   }
+
+  /** Code that each text step of `rewrite` changes. */
+  private val triggers = Seq("hash(k)", "std(k)", "stddev(k)",
+    "variance(k)", "struct(k)", "limit 5,3", "floor(ts to day)",
+    "current_user()", "current_database()", "row__id", "group by ()",
+    "extract(second from ts)", "sort by k limit 1", "default.t",
+    "_UTF-8 0x414243", "k in (1) = true", "sum('abc')", "k rlike ''",
+    "row_number() over (partition by k)", "rank() over ()",
+    "x tablesample (bucket 1 out of 2 on k)", "histogram_numeric(k, 3)",
+    "stddev_samp(k)", "group by k limit 1", "logged_in_user()",
+    "'$.[0]'", "using 'a\\tb'")
+
+  test("rewrite never edits a string literal or comment; the same " +
+      "tokens as code are still rewritten") {
+    val dd = d
+    for (t <- triggers) {
+      assert(dd.rewrite(s"select $t from t") != s"select $t from t", t)
+      val sq = t.replace("'", "''")
+      for (q <- Seq(s"select '$sq' as s from t", s"select \"$t\" as s",
+          s"select 1 as s -- $t\nfrom t", s"select 1 /* $t */ as s"))
+        assert(dd.rewrite(q) === q)
+    }
+  }
+
+  test("a one-character literal is not an identifier: macro " +
+      "parameters and USE-db table names leave it alone") {
+    val dd = d
+    dd.macros("m") = (Seq("x"), "concat(x, '-')")
+    assert(dd.rewrite("select m('a')") === "select (concat(('a'), '-'))")
+    dd.macros.clear()
+    dd.knownDbs += "db"
+    dd.dbTables("db") = scala.collection.mutable.Set("x")
+    dd.currentDb = "db"
+    assert(dd.rewrite("select 'a', x.k from x") ===
+      "select 'a', db__x.k from db__x")
+  }
+
+  test("both charset-literal spellings select the same value") {
+    val dd = d
+    Seq("_UTF-8 0x414243", "_utf8 0x414243").foreach(c =>
+      assert(spark.sql(dd.rewrite(s"select $c")).head().getString(0) ===
+        "ABC", c))
+  }
 }

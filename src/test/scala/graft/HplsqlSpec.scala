@@ -248,14 +248,14 @@ class HplsqlSpec extends SparkSpec {
     spark.sql("CREATE TABLE src (key STRING, value STRING)")
     spark.sql("INSERT INTO src VALUES ('238', 'val_238')")
     val qf = new java.io.File(
-      "/root/reference/hplsql/src/test/queries/db/cursor_attributes.sql")
+      s"${Reference.Root}/hplsql/src/test/queries/db/cursor_attributes.sql")
     val script = {
       val s = scala.io.Source.fromFile(qf, "UTF-8")
       try s.mkString finally s.close()
     }
     val want = {
       val s = scala.io.Source.fromFile(new java.io.File(
-        "/root/reference/hplsql/src/test/results/db/" +
+        s"${Reference.Root}/hplsql/src/test/results/db/" +
           "cursor_attributes.out.txt"), "UTF-8")
       try s.getLines().filterNot(_.startsWith("Ln:")).toVector
       finally s.close()

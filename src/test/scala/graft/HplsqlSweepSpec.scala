@@ -13,9 +13,9 @@ package graft
 class HplsqlSweepSpec extends SparkSpec {
 
   private val qDir =
-    new java.io.File("/root/reference/hplsql/src/test/queries/local")
+    new java.io.File(s"${Reference.Root}/hplsql/src/test/queries/local")
   private val rDir =
-    new java.io.File("/root/reference/hplsql/src/test/results/local")
+    new java.io.File(s"${Reference.Root}/hplsql/src/test/results/local")
   private val tablePath =
     new java.io.File("src/test/resources/hplsql_sweep.tsv")
 
@@ -46,7 +46,7 @@ class HplsqlSweepSpec extends SparkSpec {
           // the recordings were made with trace on and cwd at the
           // hplsql module root (INCLUDE paths are relative to it)
           h.trace = true
-          h.includeDir = "/root/reference/hplsql"
+          h.includeDir = s"${Reference.Root}/hplsql"
           Right(h.run(script))
         } catch { case e: Throwable =>
           Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }))

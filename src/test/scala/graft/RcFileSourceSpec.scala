@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
   * (ql/io/RCFile.java on-disk contract). */
 class RcFileSourceSpec extends SparkSpec {
 
-  private val dataDir = "/root/reference/data/files"
+  private val dataDir = s"${Reference.Root}/data/files"
 
   test("reads an uncompressed RCFile with known content") {
     val schema = StructType(Seq(StructField("key", IntegerType),
