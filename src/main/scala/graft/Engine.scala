@@ -62,8 +62,33 @@ object Engine {
     // Measured: the jaccard postings stage 4.1 s -> 1.6 s at sf0.1.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536")
 
+  /** `SPARK_GRAFT_CPUS` as a core count: unset gives `default`; any
+    * value but a positive integer fails, naming the variable and the
+    * value. */
+  private[graft] def parseCpus(value: Option[String], default: Int): Int =
+    value match {
+      case None => default
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
   /** Local core budget; `SPARK_GRAFT_CPUS` sizes the deployment. */
-  private val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  private val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), 32)
+
+  /** Entries in Spark's generated-code cache (Spark's default is 100).
+    * Measured at sf0.1 on 4 cores: one pass over all 100
+    * `SparkEntry.queries` compiles 800-980 classes, and a second pass in
+    * the same JVM recompiles 974-979 of them with Janino (and
+    * JIT-compiles them again) at 100 entries, 384 at 1000 and 11-24 at
+    * 4096; perfbench's 13-query query_mix recompiles 90-159 per warm
+    * pass at 100 and 0-4 at 4096. The cache belongs to `CodeGenerator`,
+    * one per JVM, and is sized once, from the conf of the session
+    * active when it is first used: `spark.sql.codegen.cache.maxEntries`
+    * is a static conf, so `session()` sets it in the builder and
+    * `prepare()` can only warn. */
+  val CodegenCacheEntries: Int = 4096
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 
   def session(appName: String = "graft",
               master: String = s"local[$cpus]",
@@ -86,6 +111,7 @@ object Engine {
       // and the default periodic GC (30 min) lets them pile up across
       // many short queries in one JVM
       .config("spark.cleaner.periodicGC.interval", "1min")
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.Registry.registerAll(spark)
@@ -94,12 +120,25 @@ object Engine {
 
   /** Ensure gap functions + the engine's `conf` table on any session,
     * including externally-built ones (the driver's smoke test hands us
-    * its own); per-session settings stay as the caller set them. */
+    * its own); per-session settings stay as the caller set them. A
+    * generated-code cache smaller than `CodegenCacheEntries` cannot be
+    * resized here, so it gets one WARN. */
   def prepare(spark: SparkSession): SparkSession = {
     functions.Registry.registerAll(spark)
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    codegenCacheWarning(spark.conf.get(CodegenCacheKey).toInt)
+      .foreach(org.slf4j.LoggerFactory.getLogger("graft.Engine").warn(_))
     spark
   }
+
+  /** `prepare()`'s WARN for a session whose generated-code cache holds
+    * `entries`, when that is below `CodegenCacheEntries`. */
+  private[graft] def codegenCacheWarning(entries: Int): Option[String] =
+    Option.when(entries < CodegenCacheEntries)(
+      s"$CodegenCacheKey is $entries, below the engine's " +
+        s"$CodegenCacheEntries: warm statements will recompile their " +
+        "generated classes. It is a static conf: set it before the first " +
+        "SparkSession of the JVM is created, as Engine.session does.")
 
   /** The one leaf rule behind `spread` and `Present.provablyLarge`: what
     * a scan leaf proves from metadata alone — `bytes`, the relation's own

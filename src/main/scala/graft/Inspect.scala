@@ -1,18 +1,22 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.FormattedMode
 import scala.collection.mutable
 
 /** Dev tool: inspect named `SparkEntry.queries` — the formatted physical
-  * plan, per-rep wall time, and the last rep's per-job / per-stage
+  * plan, per-rep wall time and generated-code compilations (misses in
+  * Spark's codegen cache), and the last rep's per-job / per-stage
   * breakdown (wall time, tasks, input and shuffle bytes), so
   * optimization targets the stage that actually costs.
   *
   * Usage: runMain graft.Inspect <q1,q2,...|all> --sf <dir> [--reps n]
   *          [--plan outDir] [--conf k=v]...
-  *   --reps n       noop-sink runs per query (default 2; 0 only plans)
+  *   --reps n       noop-sink runs per query (default 2; 0 only plans);
+  *                  each prints its wall time and compiles, which are
+  *                  near 0 once a query's classes are cached
   *   --plan outDir  write each plan to outDir/<query>.txt, not stdout
   *   --conf k=v     runtime conf over the engine's table (repeatable);
   *                  `--conf spark.sql.adaptive.enabled=false` is the
@@ -79,10 +83,12 @@ object Inspect {
       val rec = new Recorder
       val secs = (1 to reps).map { i =>
         if (i == reps) { Thread.sleep(200); spark.sparkContext.addSparkListener(rec) }
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
-        println(f"[inspect] $n rep $i: $s%.3f s")
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        println(f"[inspect] $n rep $i: $s%.3f s, $compiles codegen compiles")
         s
       }
       if (reps > 0) {

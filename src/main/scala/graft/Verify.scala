@@ -6,10 +6,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Engine.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), 4)
     val spark = Engine.session(appName = "graft-verify",
       master = s"local[$cpus]",
-      shufflePartitions = cpus.toInt)
+      shufflePartitions = cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b dumps a subset (dev loop; the
     // driver never sets it, so its runs stay full)

@@ -326,10 +326,14 @@ object Dedup {
     * the smallest member id.
     *
     * Distributed min-label propagation: each round joins every node to
-    * its neighbors' current labels and keeps the minimum; converges in
-    * O(log(longest chain)) rounds (dup clusters are shallow in practice
-    * — `maxIter` bounds pathological chains). No driver-side union-find,
-    * no collect: state is a (node, label) table re-shuffled per round.
+    * its neighbors' current labels and keeps the minimum, so a label
+    * moves one hop per round: convergence takes as many rounds as the
+    * farthest node is hops from its component's min (dup clusters are
+    * shallow in practice; a 30-node path needs more than the default
+    * bound). Labels still changing after `maxIter` rounds throw rather
+    * than come back unconverged.
+    * No driver-side union-find, no collect: state is a (node, label)
+    * table re-shuffled per round.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     // materialize the pair list ONCE — the input is typically an
@@ -368,6 +372,9 @@ object Dedup {
       converged = !anyChange
       i += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents: labels still changing after $i rounds " +
+        s"(maxIter = $maxIter); a pair chain is longer than the bound")
     labels.select(col("node").as("doc_id"), col("label").as("group_id"))
   }
 

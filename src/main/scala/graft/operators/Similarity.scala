@@ -283,7 +283,12 @@ object Similarity {
       .select(col("query_id"), col("qv"),
         explode(slice(array_sort(probeArr), 1, nprobe)).as("p"))
       .select(col("query_id"), col("qv"), col("p.ci").as("centroid_id"))
-    val cand = lists.join(broadcast(probes), "centroid_id")
+    // broadcast the probes (nprobe rows per query, vector included)
+    // only when the query side provably fits the session's broadcast
+    // bound after that fan-out; otherwise a plain join lets AQE choose
+    val bound = queries.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val small = bound >= 0 && !provablyLarge(queries, bound / nprobe)
+    val cand = lists.join(if (small) broadcast(probes) else probes, "centroid_id")
       .filter(col("cid") =!= col("query_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id"))

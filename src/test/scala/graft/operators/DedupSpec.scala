@@ -153,6 +153,24 @@ class DedupSpec extends SparkSpec {
     assert(got === truth)
   }
 
+  test("connectedComponents on a 30-node path matches union-find or " +
+      "throws naming the bound, never returns unconverged labels") {
+    val pairs = (1L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    scala.util.Try(Dedup.connectedComponents(pairs).collect()) match {
+      case scala.util.Success(rows) =>
+        assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+          (1L to 30L).map(_ -> 1L).toMap)
+      case scala.util.Failure(e: IllegalStateException) =>
+        assert(e.getMessage.contains("maxIter = 10") &&
+          e.getMessage.contains("after 10 rounds"), e.getMessage)
+      case scala.util.Failure(e) => throw e
+    }
+    // a bound the path fits converges to the one label
+    val labels = Dedup.connectedComponents(pairs, maxIter = 40)
+      .select("group_id").distinct().as[Long].collect()
+    assert(labels.toSeq === Seq(1L))
+  }
+
   test("dedupCorpus keeps one representative per near-dup group") {
     val out = Dedup.dedupCorpus(docs, threshold = 0.4)
     val ids = out.select("doc_id").as[Long].collect().toSet

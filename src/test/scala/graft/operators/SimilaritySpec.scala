@@ -3,6 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -148,6 +150,25 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 3), k = 3,
       nCentroids = 4, nprobe = 2).collect()
     assert(spark.conf.get("spark.sql.adaptive.enabled") === before)
+  }
+
+  test("ivfTopK broadcasts its probes only when the query side provably " +
+      "fits the session's broadcast bound") {
+    def hinted(df: DataFrame): Boolean = df.queryExecution.analyzed.exists {
+      case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+      case _ => false
+    }
+    val s = spark.newSession()
+    val vecs = s.read.parquet(s"$sfDir/embeddings.parquet")
+    def ivf() = Similarity.ivfTopK(vecs, vecs.filter(col("vec_id") < 5),
+      k = 3, nCentroids = 4, nprobe = 2)
+    val small = ivf()
+    assert(hinted(small))
+    // the embeddings file is far over 1 KB: the probes join is plain
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    val large = ivf()
+    assert(!hinted(large))
+    assert(large.collect().toSeq === small.collect().toSeq)
   }
 
   test("ivfTopK on an empty corpus returns an empty result with the " +
