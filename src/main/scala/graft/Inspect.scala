@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.execution.FormattedMode
 import scala.collection.mutable
 
@@ -25,18 +26,19 @@ import scala.collection.mutable
 object Inspect {
   private val usage = "usage: graft.Inspect <q1,..|all> --sf dir [--reps n] [--plan dir] [--conf k=v]"
 
-  /** (seconds, line) per job and per stage that ends while registered. */
+  /** ((start, end) ns, line) per job, (seconds, line) per stage, ending while registered. */
   private class Recorder extends SparkListener {
     private val started = mutable.Map[Int, (Long, Seq[Int])]()
-    val jobs = mutable.Buffer[(Double, String)]()
+    val jobs = mutable.Buffer[((Long, Long), String)]()
     val stages = mutable.Buffer[(Double, String)]()
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       started(e.jobId) = (System.nanoTime(), e.stageIds)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       started.remove(e.jobId).foreach { case (t0, st) =>
-        val s = (System.nanoTime() - t0) / 1e9
-        jobs += s -> f"job ${e.jobId}%3d $s%7.3f s  stages=${st.mkString(",")}"
+        val t1 = System.nanoTime()
+        val s = (t1 - t0) / 1e9
+        jobs += (t0, t1) -> f"job ${e.jobId}%3d $s%7.3f s  stages=${st.mkString(",")}"
       }
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -50,6 +52,12 @@ object Inspect {
           si.name.takeWhile(_ != '\n').take(90))
       }
   }
+
+  /** Seconds covered by the union of (start, end) ns intervals: AQE
+    * runs stage jobs concurrently, so a plain sum counts overlap twice. */
+  private def covered(spans: Seq[(Long, Long)]): Double =
+    spans.sortBy(_._1).foldLeft((0L, Long.MinValue)) { case ((sum, end), (s, e)) =>
+      (sum + math.max(0L, e - math.max(s, end)), math.max(end, e)) }._1 / 1e9
 
   def main(args: Array[String]): Unit = {
     def fail(msg: String): Nothing = { System.err.println(msg); sys.exit(2) }
@@ -71,6 +79,7 @@ object Inspect {
     names.filterNot(queries.contains).foreach(q => fail(s"unknown query: $q"))
 
     val spark = Engine.session(appName = "graft-inspect")
+    val sc = spark.sparkContext
     Engine.tables(spark, dir) // applies the engine's table: overrides go after
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }
     names.foreach { n =>
@@ -82,7 +91,7 @@ object Inspect {
       }
       val rec = new Recorder
       val secs = (1 to reps).map { i =>
-        if (i == reps) { Thread.sleep(200); spark.sparkContext.addSparkListener(rec) }
+        if (i == reps) { GraftSqlShim.drainListenerBus(sc); sc.addSparkListener(rec) }
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
@@ -92,12 +101,12 @@ object Inspect {
         s
       }
       if (reps > 0) {
-        Thread.sleep(200) // listener events are async: let the last rep's land
-        spark.sparkContext.removeSparkListener(rec)
+        GraftSqlShim.drainListenerBus(sc) // listener events are async
+        sc.removeSparkListener(rec)
         val (jobs, stages) = rec.synchronized((rec.jobs.toSeq, rec.stages.toSeq))
         println(s"[inspect] $n last rep: ${jobs.size} jobs, ${stages.size} stages, " +
-          f"jobs account for ${jobs.map(_._1).sum}%.3f s of ${secs.last}%.3f s wall")
-        (jobs ++ stages.sortBy(-_._1)).foreach(l => println(s"[inspect] ${l._2}"))
+          f"jobs cover ${covered(jobs.map(_._1))}%.3f s of ${secs.last}%.3f s wall")
+        (jobs.map(_._2) ++ stages.sortBy(-_._1).map(_._2)).foreach(l => println(s"[inspect] $l"))
         println(f"[inspect] $n best: ${secs.min}%.3f s")
       }
     }

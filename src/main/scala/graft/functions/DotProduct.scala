@@ -44,10 +44,11 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  def dot(a: ArrayData, b: ArrayData): Double =
+    dot(a.toDoubleArray(), b.toDoubleArray())
+
   /** Ascending-index sequential sum — deterministic on any engine. */
-  def dot(a: ArrayData, b: ArrayData): Double = {
-    val x = a.toDoubleArray()
-    val y = b.toDoubleArray()
+  def dot(x: Array[Double], y: Array[Double]): Double = {
     val n = math.min(x.length, y.length)
     var s = 0d
     var i = 0

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Present._
+import graft.functions.DotProduct
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.expressions.Window
@@ -21,11 +22,9 @@ object Similarity {
     * same sequential sum every engine computes). Backed by the codegen'd
     * graft.functions.DotProduct expression, ~30x faster than the
     * interpreted HOF formulation with identical results. */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftSqlShim
-    GraftSqlShim.column(graft.functions.DotProduct(
+  def dot(a: Column, b: Column): Column =
+    GraftSqlShim.column(DotProduct(
       GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
-  }
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
@@ -191,97 +190,50 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN — the k-means scale path. Train a coarse
-    * quantizer (deterministic init: the k corpus vectors with the
-    * smallest xxhash64(id) — a uniform pseudo-random sample picked by a
-    * distributed TakeOrdered top-k, no global sort or single-partition
-    * window anywhere; `iters` Lloyd steps), assign each corpus vector to
-    * its nearest centroid (inverted lists), then answer queries by
-    * exact-scoring only the `nprobe` nearest lists.
+    * quantizer, assign each corpus vector to its nearest centroid
+    * (inverted lists), then answer queries by exact-scoring only the
+    * `nprobe` nearest lists.
     *
-    * The quantizer state (k × dim doubles — bounded by the nCentroids
-    * PARAMETER, never by data size) lives on the DRIVER between Lloyd
-    * steps, exactly like Spark MLlib's KMeans collects cluster centers
-    * per iteration: each step is ONE distributed aggregation over the
-    * corpus (nearest-centroid argmin folded into the groupBy key as
-    * literal-plane expressions, per-dimension avg as codegen'd
-    * aggregates) whose k-row result is collected and re-embedded as
-    * literals for the next step. Guide §2.4 (remove shuffles/stages
-    * outright): the previous formulation ran the same math as
-    * crossJoin-fanout + argmin groupBy + posexplode + two more groupBys
-    * + an eager checkpoint per step — ~10 scheduled jobs per iteration
-    * of kilobyte state, measured 2.8 s at sf0.1 with only 1.7 s inside
-    * jobs. At 100 TB the corpus scan per step is the irreducible cost
-    * and is all that remains; the k-row collect is metadata-sized.
-    */
+    * Training is ONE job and one corpus scan, not 1 + `iters`: a
+    * distributed TakeOrdered collects the `nCentroids × TrainPerCentroid`
+    * vectors with the smallest xxhash64(id), a uniform pseudo-random
+    * sample (FAISS trains IVF on 30–256 points per centroid: Johnson,
+    * Douze, Jégou, "Billion-scale similarity search with GPUs", 2017),
+    * and [[lloyd]] runs on the driver over it. Driver state is bounded
+    * by the parameters (0.5 MB at the defaults), never by data size. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nprobe: Int = 4, iters: Int = 3,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    // deliberately NOT spread: the Lloyd loop's per-step state is tiny
-    // (k×dim centroid averages) and each executed step pays per-stage
-    // scheduling on every partition — measured +1.4 s at sf0.1 when the
-    // 1-partition local scan was spread to 32
+    // not spread: the sample's partial top-k and the lists' projection
+    // both run on the scan's own partitions; a spread adds a shuffle
     val c = corpus.select(col(idCol).as("cid"), asDouble(col(vecCol)).as("v"))
-      .cache()
-    // nearest-centroid id for a vector column, against the CURRENT
-    // driver-held centroids as constant-folded literal arrays: argmin
-    // via array_min over (-score, centroid_id) structs — the same
-    // deterministic tie-break as ORDER BY score DESC, centroid_id
-    def nearest(centroids: Array[(Long, Array[Double])])
-               (vec: Column): Column = {
-      val picks = centroids.map { case (cid, cv) =>
-        struct((-dot(vec, array(cv.map(lit): _*))).as("ns"),
-          lit(cid).as("ci"))
-      }
-      array_min(array(picks.toIndexedSeq: _*)).getField("ci")
-    }
-    // The training loop's queries shuffle nothing but k-row aggregates;
-    // AQE's per-query re-planning jobs are pure overhead there (guide
-    // §2.4 — the fixed driver cost per stage IS the cost at kilobyte
-    // state). Scope it off for the loop's collects only: the session,
-    // other threads' queries and the serving-side query below keep AQE,
-    // and no result depends on it. Deterministic seeds: the k smallest
-    // hashes of the id, the label being the hash itself (any distinct
-    // label works). Plans as TakeOrderedAndProject: parallel partial
-    // top-k, only k rows ever reach the driver.
-    val seeds = GraftSqlShim.collectNonAdaptive(c
-      .select(xxhash64(col("cid")).as("centroid_id"), col("v").as("cv"))
-      .orderBy("centroid_id").limit(nCentroids))
+    // in ascending hash order, labelled by the hash (any distinct label
+    // works); without AQE, which has no shuffle here to re-plan
+    val sample = GraftSqlShim.collectNonAdaptive(c
+      .select(xxhash64(col("cid")).as("h"), col("v"))
+      .orderBy("h").limit(nCentroids * TrainPerCentroid))
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    if (seeds.isEmpty) { // empty corpus: no lists, nothing to score
-      c.unpersist()
+    if (sample.isEmpty) // empty corpus: no lists, nothing to score
       return bruteForceTopK(corpus, queries, k, idCol, vecCol)
-    }
-    // one aggregation per Lloyd step: group by nearest centroid,
-    // per-dimension mean as dim codegen'd avg expressions (same
-    // sum/count merge the posexplode+avg formulation computed,
-    // minus its 64x row fanout and two extra shuffles)
-    val dim = seeds.head._2.length
-    val means = (0 until dim).map(i => avg(col("v")(i)).as(s"m$i"))
-    val centroids = (1 to iters).foldLeft(seeds) { (cs, _) =>
-      GraftSqlShim.collectNonAdaptive(
-        c.groupBy(nearest(cs)(col("v")).as("centroid_id"))
-          .agg(means.head, means.tail: _*))
-        .map(r => (r.getLong(0),
-          Array.tabulate(dim)(i => r.getDouble(i + 1))))
-    }
-    // inverted lists: a pure projection over the corpus scan with the
-    // final centroids — no shuffle, no checkpoint; vectors stay on the
-    // row so scoring needs no re-join
+    val centroids = lloyd(sample, nCentroids, iters)
+    // (-score, centroid_id) against every centroid as literal arrays:
+    // ascending order is score DESC, then the smaller id, as in [[lloyd]]
+    def ranked(vec: Column): Column = array(centroids.map { case (cid, cv) =>
+      struct((-dot(vec, array(cv.map(lit): _*))).as("ns"), lit(cid).as("ci"))
+    }.toIndexedSeq: _*)
+    // inverted lists: a pure projection over the corpus scan (nearest
+    // centroid = array_min) — no shuffle, no checkpoint; vectors stay
+    // on the row so scoring needs no re-join
     val lists = c.select(col("cid"), col("v"),
-      nearest(centroids)(col("v")).as("centroid_id"))
+      array_min(ranked(col("v"))).getField("ci").as("centroid_id"))
     val q = queries.select(col(idCol).as("query_id"),
       asDouble(col(vecCol)).as("qv"))
     // nprobe nearest centroids per query — a per-row sort of k literal
-    // scores (array_sort ascending on (-score, id) = score DESC with id
-    // tiebreak), no crossJoin, no window shuffle
-    val probeArr = array(centroids.map { case (cid, cv) =>
-      struct((-dot(col("qv"), array(cv.map(lit): _*))).as("ns"),
-        lit(cid).as("ci"))
-    }.toIndexedSeq: _*)
+    // scores, no crossJoin, no window shuffle
     val probes = q
       .select(col("query_id"), col("qv"),
-        explode(slice(array_sort(probeArr), 1, nprobe)).as("p"))
+        explode(slice(array_sort(ranked(col("qv"))), 1, nprobe)).as("p"))
       .select(col("query_id"), col("qv"), col("p.ci").as("centroid_id"))
     // broadcast the probes (nprobe rows per query, vector included)
     // only when the query side provably fits the session's broadcast
@@ -292,16 +244,38 @@ object Similarity {
       .filter(col("cid") =!= col("query_id"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    val out = cand.select(col("query_id"), col("cid").as("neighbor_id"),
+    cand.select(col("query_id"), col("cid").as("neighbor_id"),
         cosine(col("qv"), col("v")).as("cos_sim"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .presentSorted("query_id", "rnk")
-    // the training scans are done; don't pin the corpus in executor
-    // memory for the rest of the session (the final query re-derives
-    // `lists` straight from the source scan)
-    c.unpersist()
-    out
+  }
+
+  private val TrainPerCentroid = 64 // vectors per centroid in ivfTopK's sample
+
+  /** Lloyd's k-means over (label, vector) rows; the first `nCentroids`
+    * seed the centroids under their labels. Each step assigns every row
+    * to its nearest centroid (largest dot; ties to the smaller label),
+    * sums each cluster in row order (deterministic on any machine),
+    * divides by the count and drops centroids no row chose. */
+  private[graft] def lloyd(sample: Array[(Long, Array[Double])],
+                           nCentroids: Int,
+                           iters: Int): Array[(Long, Array[Double])] = {
+    // Spark orders (-score, label) structs alike: NaN largest; its
+    // -0.0 = 0.0 never matters, as a dot summed from +0.0 is never -0.0
+    import Ordering.Double.TotalOrdering
+    val dim = sample.head._2.length
+    (1 to iters).foldLeft(sample.take(nCentroids)) { (cs, _) =>
+      val sums = Array.ofDim[Double](cs.length, dim)
+      val counts = new Array[Int](cs.length)
+      sample.foreach { case (_, v) =>
+        val j = cs.indices.minBy(j => (-DotProduct.dot(v, cs(j)._2), cs(j)._1))
+        counts(j) += 1
+        for (i <- 0 until dim) sums(j)(i) += v(i)
+      }
+      cs.indices.filter(counts(_) > 0)
+        .map(j => (cs(j)._1, sums(j).map(_ / counts(j)))).toArray
+    }
   }
 
   /** Approximate top-k: score only candidates sharing the query's LSH

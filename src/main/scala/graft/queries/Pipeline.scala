@@ -5,7 +5,6 @@ import graft.Present._
 import graft.Engine
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** LLM-data-pipeline operator inventory (north-star extras per
@@ -504,9 +503,8 @@ object Pipeline {
     ORDER BY doc_id, rnk"""
 
   /** IVF (k-means inverted-file) ANN — the trained-quantizer scale
-    * path. The raw top-k is approximate by construction AND
-    * float-order-sensitive in its centroid averages, so instead of the
-    * neighbor lists the query emits per-query EXACT-CHECKABLE
+    * path. The raw top-k is approximate by construction, so instead of
+    * the neighbor lists the query emits per-query EXACT-CHECKABLE
     * invariants: the result count equals k, and recall@5 against the
     * brute-force top-5 (itself plain SQL — the q_sim_topk oracle
     * computes the identical set) clears a floor the index must meet.
@@ -516,9 +514,9 @@ object Pipeline {
     val e = t(spark, dir)("embeddings")
     val q = e.filter(col("vec_id") < 10)
     // nprobe=8 of 16 lists: measured recall@5 is 78-84% at sf0.001-0.1
-    // (per-query min 2/5 hits, stable across reps); the gates below sit
-    // well under those floors to absorb cross-machine float-order
-    // jitter in the Lloyd averages
+    // and 74-88% on tools/gen_scaling_data.py's sf0.5/sf1 (per-query min
+    // 2/5 hits); training is deterministic, and the gates below sit well
+    // under those floors to certify the ANN contract, not one corpus
     val ivf = Similarity.ivfTopK(e, q, k = 5, nprobe = 8)
       .select(col("query_id"), col("neighbor_id"))
     val brute = Similarity.bruteForceTopK(e, q, k = 5)
@@ -529,11 +527,15 @@ object Pipeline {
       .groupBy(ivf("query_id"))
       .agg(count(lit(1)).as("n_results"),
         count(col("exact_id")).as("hits"))
-    hits.select(col("query_id"),
+    // the corpus-wide sum: one one-row aggregate carrying the per-query
+    // rows (a one-partition window warns per run; a join back adds a job)
+    hits.agg(collect_list(struct("query_id", "n_results", "hits")).as("q"),
+        sum("hits").as("total_hits"))
+      .select(inline(col("q")), col("total_hits"))
+      .select(col("query_id"),
         (col("n_results") === 5).as("k_complete"),
         (col("hits") >= 1).as("recall_ok"),
-        (sum(col("hits")).over(Window.partitionBy(lit(1))) >= 30)
-          .as("corpus_recall_ok"))
+        (col("total_hits") >= 30).as("corpus_recall_ok"))
       .presentSorted("query_id")
   }
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -45,4 +46,7 @@ object GraftSqlShim {
     }
     new classic.Dataset[Row](qe, ExpressionEncoder(qe.analyzed.schema)).collect()
   }
+
+  /** Waits until every listener event posted so far is delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

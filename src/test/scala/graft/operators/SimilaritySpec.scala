@@ -1,14 +1,16 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Engine, SparkEntry, SparkSpec}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalacheck.{Gen, Prop, Test}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
@@ -216,12 +218,92 @@ class SimilaritySpec extends SparkSpec {
       val planned = Await.result(other, 2.minutes)
       assert(planned.isInstanceOf[AdaptiveSparkPlanExec], planned)
       assert(s.conf.getAll === before)
-      // listener events are async: seed + 2 Lloyd steps
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (trainingPlans.size < 3 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(trainingPlans.size === 3)
+      // listener events are async: the one training sample collect
+      GraftSqlShim.drainListenerBus(s.sparkContext)
+      assert(trainingPlans.size === 1)
       assert(!trainingPlans.contains("AdaptiveSparkPlan"), trainingPlans)
     } finally s.listenerManager.unregister(listener)
+  }
+
+  test("lloyd on a hand-checked 2-D sample: ties go to the smaller " +
+      "label, a centroid no row chose is dropped for good") {
+    val sample = Array(-8L -> Array(1d, 0d), 5L -> Array(1d, 0d),
+      7L -> Array(0d, 1d), 20L -> Array(1d, 1d), 30L -> Array(0d, 3d))
+    def trained(iters: Int) = Similarity.lloyd(sample, nCentroids = 3, iters)
+      .map { case (id, c) => id -> c.toSeq }.toSeq
+    // step 1: seeds -8 and 5 are equal, so every tie goes to -8 and 5
+    // gets nothing; (1,1) scores 1 against all three seeds
+    assert(trained(1) === Seq(-8L -> Seq(1d, 1d / 3), 7L -> Seq(0d, 2d)))
+    // step 2: (1,1) now scores 4/3 against -8 and 2 against 7
+    assert(trained(2) === Seq(-8L -> Seq(1d, 0d), 7L -> Seq(1d / 3, 5d / 3)))
+    assert(trained(0) === Seq(-8L -> Seq(1d, 0d), 5L -> Seq(1d, 0d),
+      7L -> Seq(0d, 1d)))
+  }
+
+  test("lloyd equals a groupBy reference on random samples") {
+    // integer coordinates make score ties common
+    val gen = for {
+      dim <- Gen.choose(1, 4)
+      n <- Gen.choose(1, 40)
+      k <- Gen.choose(1, 8)
+      iters <- Gen.choose(0, 4)
+      labels <- Gen.listOfN(n, Gen.choose(-1000L, 1000L))
+      vs <- Gen.listOfN(n, Gen.listOfN(dim, Gen.choose(-3, 3).map(_.toDouble)))
+    } yield (labels.distinct.zip(vs), k, iters)
+    val byScoreThenLabel =
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    def reference(sample: Seq[(Long, Seq[Double])], k: Int,
+                  iters: Int): Map[Long, Seq[Double]] =
+      (1 to iters).foldLeft(sample.take(k).toMap) { (cs, _) =>
+        sample.groupBy { case (_, v) =>
+          cs.minBy { case (id, c) =>
+            (-v.zip(c).map { case (a, b) => a * b }.sum, id)
+          }(byScoreThenLabel)._1
+        }.map { case (id, pts) =>
+          id -> pts.map(_._2).transpose.map(_.sum / pts.size)
+        }
+      }
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAllNoShrink(gen) { case (sample, k, iters) =>
+        Similarity.lloyd(sample.map { case (id, v) => id -> v.toArray }.toArray,
+          k, iters).map { case (id, c) => id -> c.toSeq }.toMap ==
+          reference(sample, k, iters)
+      })
+    assert(r.passed, r.status)
+  }
+
+  /** Jobs that `body` starts, counted under a job group of its own. */
+  private def jobsIn(body: => Unit): Int = {
+    val group = s"SimilaritySpec-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftSqlShim.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("building ivfTopK runs exactly one job: the training sample") {
+    val q = emb.filter(col("vec_id") < 10)
+    emb.schema // the corpus is resolved before counting
+    assert(jobsIn(Similarity.ivfTopK(emb, q, k = 5, nprobe = 8)) === 1)
+  }
+
+  test("q_sim_ivf runs at most 10 jobs") {
+    Engine.tables(spark, sfDir)
+    val jobs = jobsIn(SparkEntry.queries("q_sim_ivf")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
+    assert(jobs <= 10, s"q_sim_ivf ran $jobs jobs")
   }
 }
