@@ -77,12 +77,6 @@ class HiveDialect(val spark: SparkSession) {
     scala.collection.mutable.Map[String,
       scala.collection.mutable.Set[String]]()
 
-  /** The flat binding of `db.t` under the always-mangle scheme. */
-  def physicalName(db: String, t: String): String = {
-    val d = db.toLowerCase
-    if (d == "default") t else s"${d}__$t"
-  }
-
   private def dbTablesOf(db: String) =
     dbTables.getOrElseUpdate(db.toLowerCase,
       scala.collection.mutable.Set[String]())

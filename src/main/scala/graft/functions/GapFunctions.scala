@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EqualTo, Expression, Literal}
 import org.apache.spark.sql.functions._
 
@@ -853,85 +853,12 @@ object GapFunctions {
 
   // --- Hive data-masking family (ref: ql/exec/FunctionRegistry.java:525-531,
   // ql/udf/generic/GenericUDFMaskFirstN.java etc). Upper -> X, lower -> x,
-  // digit -> n; other chars pass through. Spark 3.4+ has `mask` but not the
-  // positional *_n variants.
+  // digit -> n; other chars pass through. `mask` and the positional
+  // mask_*_n names resolve to HiveMask; `mask_all` is this UDF.
   private def maskChar(c: Char): Char =
     if (c.isUpper) 'X' else if (c.isLower) 'x' else if (c.isDigit) 'n' else c
 
   def maskAll(s: String): String = if (s == null) null else s.map(maskChar)
-  def maskFirstN(s: String, n: Int): String =
-    if (s == null) null
-    else {
-      val k = math.max(0, math.min(n, s.length))
-      s.substring(0, k).map(maskChar) + s.substring(k)
-    }
-  def maskLastN(s: String, n: Int): String =
-    if (s == null) null
-    else {
-      val k = math.max(0, math.min(n, s.length))
-      s.substring(0, s.length - k) + s.substring(s.length - k).map(maskChar)
-    }
-  def maskShowFirstN(s: String, n: Int): String =
-    if (s == null) null
-    else {
-      val k = math.max(0, math.min(n, s.length))
-      s.substring(0, k) + s.substring(k).map(maskChar)
-    }
-  def maskShowLastN(s: String, n: Int): String =
-    if (s == null) null
-    else {
-      val k = math.max(0, math.min(n, s.length))
-      s.substring(0, s.length - k).map(maskChar) + s.substring(s.length - k)
-    }
-
-  /** Hive `sort_array_by(arr_of_struct, 'fieldName')`
-    * (ref: ql/udf/generic/GenericUDFSortArrayByField.java) as a Column
-    * helper: delegates to Catalyst's higher-order `array_sort` with a field
-    * comparator — fully codegen'd, no UDF.
-    */
-  def sortArrayBy(arr: Column, field: String, asc: Boolean = true): Column = {
-    val sign = if (asc) 1 else -1
-    array_sort(arr, (l, r) =>
-      when(l.getField(field) < r.getField(field), -1 * sign)
-        .when(l.getField(field) > r.getField(field), 1 * sign)
-        .otherwise(0))
-  }
-
-  /** Hive `parse_url_tuple(url, 'HOST', 'PATH', ...)` UDTF
-    * (ref: ql/udf/generic/GenericUDTFParseUrlTuple.java) re-expressed as a
-    * struct of scalar `parse_url` calls (each codegen'd).
-    */
-  def parseUrlTuple(url: Column, parts: String*): Column =
-    struct(parts.map(p => parse_url(url, lit(p)).as(p.toLowerCase)): _*)
-
-  /** Hive `replicate_rows(n, ...)` UDTF
-    * (ref: ql/exec/FunctionRegistry.java:494; used to expand
-    * INTERSECT/EXCEPT ALL): emit each row n times. Distributed — the
-    * expansion happens per-partition via explode, no driver loop.
-    */
-  def replicateRows(df: DataFrame, nCol: Column): DataFrame = {
-    val cols = df.columns
-    df.withColumn("__rep", explode(sequence(lit(1L), nCol.cast("long"))))
-      .select(cols.head, cols.tail: _*)
-  }
-
-  /** Hive `uniontype<T0,T1,...>` (SURVEY.md §1.2) has no Spark type;
-    * the engine's encoding is a tagged struct `struct<tag:int,
-    * field0:T0, ...>`, mirroring how Hive itself only touches unions via
-    * the create_union/extract_union UDFs
-    * (ql/exec/FunctionRegistry.java:459-460, GenericUDFUnion). */
-  def createUnion(tag: Column, values: Column*): Column =
-    struct(tag.as("tag") +:
-      values.zipWithIndex.map { case (v, i) => v.as(s"field$i") }: _*)
-
-  /** extract_union(u) -> the full tagged struct (Hive returns the same
-    * struct-of-all-alternatives view). */
-  def extractUnion(u: Column): Column = u
-
-  /** extract_union(u, tag) -> the value slot for that tag (NULL if the
-    * union currently holds a different alternative is the caller's
-    * responsibility, same as Hive). */
-  def extractUnion(u: Column, tag: Int): Column = u.getField(s"field$tag")
 
   def fingerprint64(c: Column): Column =
     org.apache.spark.sql.GraftSqlShim.column(

@@ -263,8 +263,8 @@ object TableFunctions {
   }
 
   /** Hive `create_union(tag, v0, v1, ...)` / `extract_union(u[, tag])`
-    * (FunctionRegistry.java:459-460) over the engine's tagged-struct
-    * uniontype encoding (see GapFunctions.createUnion). */
+    * (FunctionRegistry.java:459-460) over the engine's uniontype
+    * encoding, a tagged struct `struct<tag:int, field0:T0, ...>`. */
   def createUnionBuilder(exprs: Seq[Expression]): Expression =
     CreateNamedStruct(Literal("tag") +: exprs.head +:
       exprs.tail.zipWithIndex.flatMap { case (e, i) =>

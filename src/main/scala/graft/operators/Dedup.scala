@@ -443,34 +443,4 @@ object Dedup {
     tf.groupBy("id").agg(votes.head, votes.tail: _*)
       .select(col("id"), bits.reduce(_.bitwiseOR(_)).as("simhash"))
   }
-
-  /** Hamming-distance near-dup pairs via 8x8-bit band blocking (two
-    * docs within distance d <= 7 share at least one identical byte-band;
-    * the band join bounds the pair space like LSH). */
-  def simhashPairs(docs: DataFrame, maxHamming: Int,
-                   textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame = {
-    val sigs = simhash(docs, textCol, idCol)
-    // 4 longs per band row; lazily checkpointed so the token-vote
-    // signature aggregation feeds both self-join sides from one pass
-    val bands = sigs.select(col("id"), col("simhash"),
-      explode(array((0 until 8).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * 8).bitwiseAND(255).as("bucket"))): _*))
-        .as("e"))
-      .select(col("id"), col("simhash"), col("e.band"), col("e.bucket"))
-      .localCheckpoint(eager = false)
-    val l = bands.toDF("doc_a", "sig_a", "band", "bucket")
-    val r = bands.toDF("doc_b", "sig_b", "band_r", "bucket_r")
-    val ham = {
-      val x = col("sig_a").bitwiseXOR(col("sig_b"))
-      (0 until 8).map(b => bit_count(shiftright(x, b * 8).bitwiseAND(255)))
-        .reduce(_ + _)
-    }
-    l.join(r, col("band") === col("band_r") &&
-        col("bucket") === col("bucket_r") && col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), ham.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
 }

@@ -244,18 +244,6 @@ object MergeInto {
     }
   }
 
-  /** MERGE INTO target USING source ON key:
-    * matched -> overwrite with source row; not matched -> insert.
-    * (WHEN MATCHED DELETE variant via `deleteMatched`.) */
-  def merge(spark: SparkSession, path: String, source: DataFrame,
-            key: String, deleteMatched: Boolean = false): Unit =
-    if (deleteMatched)
-      mergeInto(spark, path, source, key, Seq(DeleteAction()),
-        notMatched = Nil)
-    else
-      mergeInto(spark, path, source, key,
-        Seq(UpdateAction(source.columns.map(c => c -> col(s"s.$c")).toMap)))
-
   /** Copy-on-write commit: stage to a temp dir, then swap via the
     * backup-rename protocol (recoverable: the previous data survives as
     * `<path>__cow_backup` until the new data is in place). */
@@ -272,8 +260,8 @@ object MergeInto {
     * partition directory into the table. A partition whose rows are ALL
     * removed produces no staged directory — its live directory is
     * deleted so the removed rows don't survive. The table must be
-    * physically partitioned by `partitionCols` (written via
-    * Writes.writePartitioned). `affRows` is the caller-collected
+    * physically partitioned by `partitionCols` (written with
+    * `partitionBy`). `affRows` is the caller-collected
     * distinct partition-tuple set — bounded by partition count, not
     * row count — and the same tuples already pruned the target scan
     * `df` was computed from. */

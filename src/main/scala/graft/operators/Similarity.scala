@@ -58,7 +58,7 @@ object Similarity {
   /** All pairs above a cosine threshold (embedding near-dup detection).
     * Exact O(n²/2) scoring — a verification PRIMITIVE for small inputs
     * or pre-filtered candidate sets; the corpus-scale default is
-    * [[cosinePairsBlocked]]. */
+    * [[cosinePairsBlockedRaw]]. */
   def cosinePairs(corpus: DataFrame, threshold: Double,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame =
@@ -109,22 +109,14 @@ object Similarity {
     corpus.join(losers, corpus(idCol) === losers("doc_id"), "left_anti")
   }
 
-  /** Embedding near-dup pairs at corpus scale: LSH band-bucket blocking
-    * generates candidates (two vectors meet only if some band of their
-    * hyperplane signature matches — an equi-join on small long keys,
-    * never an n² enumeration), then each candidate pair is verified with
-    * the exact cosine and the threshold re-applied. Every emitted pair
-    * is therefore exact; recall vs the O(n²) scan is the standard LSH
-    * trade (more planes/bands => higher recall), pinned by
+  /** Embedding near-dup pairs at corpus scale, unsorted: LSH band-bucket
+    * blocking generates candidates (two vectors meet only if some band
+    * of their hyperplane signature matches — an equi-join on small long
+    * keys, never an n² enumeration), then each candidate pair is
+    * verified with the exact cosine and the threshold re-applied. Every
+    * emitted pair is therefore exact; recall vs the O(n²) scan is the
+    * standard LSH trade (more planes/bands => higher recall), pinned by
     * SimilaritySpec on the real corpus. */
-  def cosinePairsBlocked(corpus: DataFrame, threshold: Double,
-                         nPlanes: Int = 24, bands: Int = 8, dim: Int = 64,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame =
-    cosinePairsBlockedRaw(corpus, threshold, nPlanes, bands, dim, idCol,
-      vecCol).presentSorted("vec_a", "vec_b")
-
-  /** Unsorted blocked-pair stream (composable core). */
   def cosinePairsBlockedRaw(corpus: DataFrame, threshold: Double,
                             nPlanes: Int = 24, bands: Int = 8,
                             dim: Int = 64, idCol: String = "vec_id",

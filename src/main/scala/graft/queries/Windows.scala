@@ -180,9 +180,8 @@ object Windows {
     ORDER BY o_custkey, rn"""
 
   // --------------------------------------------------------------------
-  // Event-stream shapes, batch-mode (the same plans run under Structured
-  // Streaming in graft.streaming; Hive 2.3 has no stream queries at all —
-  // SURVEY.md §2.12).
+  // Event-stream shapes, batch-mode (Hive 2.3 has no stream queries at
+  // all — SURVEY.md §2.12).
   // --------------------------------------------------------------------
 
   /** Tumbling 1-hour window aggregation over event time. */

@@ -104,7 +104,7 @@ object AvroIO {
       if (branches.size == 1) sparkType(branches.head)
       else
         // general union = the reference's uniontype; modeled as the
-        // engine's tagged struct (GapFunctions.createUnion): tag
+        // engine's tagged struct (TableFunctions.createUnionBuilder): tag
         // indexes the NON-NULL alternatives (AvroDeserializer maps
         // [null, int, double] to uniontype<int,double>)
         StructType(StructField("tag", IntegerType) +:

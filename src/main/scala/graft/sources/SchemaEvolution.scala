@@ -93,31 +93,4 @@ object SchemaEvolution {
     } ++ partCols.map(col)
     df.select(sel.toIndexedSeq: _*)
   }
-
-  /** Project `df` onto a new DATA schema with top-level columns
-    * matching by NAME, positional fallback (parquet's by-name read
-    * path with index access as the escape hatch). */
-  def evolveByName(df: DataFrame, newData: StructType,
-      partCols: Seq[String]): DataFrame = {
-    val dataCols = df.schema.fields.filterNot(f =>
-      partCols.exists(_.equalsIgnoreCase(f.name)))
-    // a stored column name-matched by ANY target field is spoken for —
-    // the positional fallback must not hand it to a second target
-    // (that would duplicate data where Hive reads null)
-    val nameMatched = newData.fields.flatMap(f =>
-      dataCols.find(_.name.equalsIgnoreCase(f.name)))
-      .map(_.name.toLowerCase).toSet
-    val sel = newData.fields.zipWithIndex.map { case (f, i) =>
-      val src = dataCols.find(_.name.equalsIgnoreCase(f.name))
-        .orElse(if (i < dataCols.length &&
-            !nameMatched.contains(dataCols(i).name.toLowerCase))
-          Some(dataCols(i)) else None)
-      src match {
-        case Some(sf) =>
-          convertStored(col(sf.name), sf.dataType, f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    } ++ partCols.map(col)
-    df.select(sel.toIndexedSeq: _*)
-  }
 }

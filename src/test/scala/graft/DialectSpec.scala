@@ -414,7 +414,7 @@ class DialectSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_msck").toString
     val o = spark.table("orders")
       .withColumn("y", year(col("o_orderdate")))
-    graft.operators.Writes.writePartitioned(o, base, Seq("y"))
+    o.write.mode("overwrite").partitionBy("y").parquet(base)
     spark.sql("DROP TABLE IF EXISTS msck_t")
     spark.sql(s"""CREATE TABLE msck_t (o_orderkey BIGINT, o_custkey BIGINT,
       o_orderstatus STRING, o_totalprice DOUBLE, o_orderdate TIMESTAMP,
@@ -764,6 +764,132 @@ class DialectSpec extends SparkSpec {
     assert(p.toSeq === Seq((9, "a"), (2, "b")))
     spark.sql("DROP TABLE real_w")
     spark.sql("DROP TABLE real_p")
+  }
+
+  private def tableMeta(t: String) = spark.sessionState.catalog
+    .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("[", ",", "]")).sorted.toSeq
+
+  test("public entry: dynamic-partition INSERT writes p=... directories " +
+      "that a partition filter prunes") {
+    val h = new HiveStatements(spark)
+    spark.sql("DROP TABLE IF EXISTS w_part")
+    h.sql("CREATE TABLE w_part (k INT, v STRING) PARTITIONED BY (p STRING) " +
+      "STORED AS PARQUET")
+    h.sql("INSERT INTO w_part PARTITION (p) VALUES (1, 'x', 'a'), " +
+      "(2, 'y', 'b')")
+    assert(new java.io.File(tableMeta("w_part").location.getPath).list()
+      .filter(_.startsWith("p=")).sorted.toSeq === Seq("p=a", "p=b"))
+    val one = h.sql("SELECT k, v FROM w_part WHERE p = 'b'").get
+    val plan = one.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [isnotnull(p"), plan)
+    assert(rowsOf(one) === Seq("[2,y]"))
+    spark.sql("DROP TABLE w_part")
+  }
+
+  test("public entry: INSERT OVERWRITE ... PARTITION (p) SELECT replaces " +
+      "only the partitions it writes") {
+    val h = new HiveStatements(spark)
+    spark.sql("DROP TABLE IF EXISTS w_dyn")
+    h.sql("CREATE TABLE w_dyn (k INT, v STRING) PARTITIONED BY (p STRING) " +
+      "STORED AS PARQUET")
+    h.sql("INSERT INTO w_dyn PARTITION (p) VALUES (1, 'x', 'a'), " +
+      "(2, 'y', 'b')")
+    h.sql("INSERT OVERWRITE TABLE w_dyn PARTITION (p) SELECT 9, 'z', 'a'")
+    assert(rowsOf(spark.table("w_dyn")) === Seq("[2,y,b]", "[9,z,a]"))
+    spark.sql("DROP TABLE w_dyn")
+  }
+
+  test("public entry: CLUSTERED BY ... INTO n BUCKETS tables join on the " +
+      "bucket key without an exchange") {
+    val h = new HiveStatements(spark)
+    Seq("w_b1", "w_b2").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq("w_b1" -> "v", "w_b2" -> "w").foreach { case (t, c) =>
+      h.sql(s"CREATE TABLE $t (k INT, $c STRING) CLUSTERED BY (k) " +
+        "SORTED BY (k) INTO 4 BUCKETS STORED AS PARQUET")
+    }
+    h.sql("INSERT INTO w_b1 VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    h.sql("INSERT INTO w_b2 VALUES (1, 'x'), (3, 'z')")
+    assert(tableMeta("w_b1").bucketSpec.map(b =>
+      (b.numBuckets, b.bucketColumnNames)) === Some((4, Seq("k"))))
+    // no broadcast: the planner must co-locate the sides by bucket
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val j = h.sql("SELECT w_b1.k, v, w FROM w_b1 JOIN w_b2 " +
+        "ON w_b1.k = w_b2.k").get
+      val plan = j.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"), plan)
+      assert(!plan.contains("Exchange"), plan)
+      assert(rowsOf(j) === Seq("[1,a,x]", "[3,c,z]"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    Seq("w_b1", "w_b2").foreach(t => spark.sql(s"DROP TABLE $t"))
+  }
+
+  test("public entry: LOAD DATA parses ctrl-A text into the table: " +
+      "append, OVERWRITE and PARTITION (p='q')") {
+    val h = new HiveStatements(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_load")
+    def textFile(name: String, rows: String*): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, rows.mkString("", "\n", "\n").getBytes)
+      f.toString
+    }
+    val f1 = textFile("f1", "1\u0001a", "2\u0001\\N")
+    val f2 = textFile("f2", "3\u0001c")
+    Seq("w_load", "w_loadp").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    h.sql("CREATE TABLE w_load (k INT, v STRING) STORED AS PARQUET")
+    h.sql(s"LOAD DATA LOCAL INPATH '$f1' INTO TABLE w_load")
+    h.sql(s"LOAD DATA LOCAL INPATH '$f2' INTO TABLE w_load")
+    assert(rowsOf(spark.table("w_load")) ===
+      Seq("[1,a]", "[2,null]", "[3,c]"))
+    h.sql(s"LOAD DATA LOCAL INPATH '$f2' OVERWRITE INTO TABLE w_load")
+    assert(rowsOf(spark.table("w_load")) === Seq("[3,c]"))
+    h.sql("CREATE TABLE w_loadp (k INT, v STRING) PARTITIONED BY " +
+      "(p STRING) STORED AS PARQUET")
+    h.sql(s"LOAD DATA LOCAL INPATH '$f1' INTO TABLE w_loadp " +
+      "PARTITION (p='q')")
+    assert(rowsOf(spark.table("w_loadp")) === Seq("[1,a,q]", "[2,null,q]"))
+    Seq("w_load", "w_loadp").foreach(t => spark.sql(s"DROP TABLE $t"))
+  }
+
+  test("public entry: EXPORT TABLE then IMPORT TABLE round-trips the " +
+      "data and the schema") {
+    val h = new HiveStatements(spark)
+    val exp = s"${java.nio.file.Files.createTempDirectory("graft_exp")}/e"
+    spark.sql("DROP TABLE IF EXISTS w_exp")
+    h.sql("CREATE TABLE w_exp (id BIGINT, v STRING, w DOUBLE) " +
+      "STORED AS PARQUET")
+    h.sql("INSERT INTO w_exp VALUES (1, 'a', 1.5), (2, 'b', 2.5)")
+    h.sql(s"EXPORT TABLE w_exp TO '$exp'")
+    assert(new java.io.File(s"$exp/_graft_schema.json").exists())
+    h.sql(s"IMPORT TABLE w_imp FROM '$exp'")
+    val imp = spark.table("w_imp")
+    assert(imp.schema.map(f => f.name -> f.dataType.simpleString) ===
+      Seq("id" -> "bigint", "v" -> "string", "w" -> "double"))
+    assert(rowsOf(imp) === Seq("[1,a,1.5]", "[2,b,2.5]"))
+    spark.sql("DROP TABLE w_exp")
+    spark.sql("DROP VIEW IF EXISTS w_imp")
+  }
+
+  test("public entry: FROM src INSERT ... INSERT ... fans one source " +
+      "into several tables (multi-insert)") {
+    val h = new HiveStatements(spark)
+    spark.range(1, 11).selectExpr("CAST(id AS INT) AS k")
+      .createOrReplaceTempView("w_src")
+    Seq("w_lo", "w_hi").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      h.sql(s"CREATE TABLE $t (k INT) STORED AS PARQUET")
+    }
+    h.sql("FROM w_src INSERT OVERWRITE TABLE w_lo SELECT k WHERE k <= 3 " +
+      "INSERT OVERWRITE TABLE w_hi SELECT k WHERE k > 8")
+    assert(rowsOf(spark.table("w_lo")) === Seq("[1]", "[2]", "[3]"))
+    assert(rowsOf(spark.table("w_hi")) === Seq("[10]", "[9]"))
+    Seq("w_lo", "w_hi").foreach(t => spark.sql(s"DROP TABLE $t"))
+    spark.catalog.dropTempView("w_src")
   }
 
   test("public entry: bigint column-stat bounds above 2^53 render " +

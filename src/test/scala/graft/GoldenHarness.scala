@@ -255,7 +255,7 @@ object GoldenFixtures {
       })
     case unionRe(_) =>
       // uniontype<T0,T1,...> → the engine's tagged-struct encoding
-      // (GapFunctions.createUnion): struct<tag:int, field0:T0, ...>
+      // (TableFunctions.createUnionBuilder): struct<tag:int, field0:T0, ...>
       val unionRe(ts) = o: @unchecked
       unionStruct(splitTop(ts, ',').map(hiveType))
     case _ => StringType // string / char(n) / varchar(n) text replay

@@ -60,7 +60,8 @@ class HplsqlSweepSpec extends SparkSpec {
       "recorded outputs; every file is accounted for in the " +
       "committed status table (pass replays byte-identically, skip " +
       "has a reason)") {
-    val files = qDir.listFiles().filter(_.getName.endsWith(".sql"))
+    val files = Option(qDir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.endsWith(".sql"))
       .map(_.getName).sorted
     assert(files.nonEmpty, s"corpus missing at $qDir")
     val regen = sys.props.contains("graft.hplsql.regen")

@@ -299,8 +299,6 @@ class PlanAuditSpec extends SparkSpec {
         .jaccardPairs(docs, threshold = 0.05),
       "minhashDedup" -> graft.operators.Dedup
         .minhashDedup(docs, threshold = 0.05),
-      "simhashPairs" -> graft.operators.Dedup
-        .simhashPairs(docs, maxHamming = 3),
       "dedupCorpus" -> graft.operators.Dedup
         .dedupCorpus(docs, threshold = 0.05))
     ops.foreach { case (name, df) =>

@@ -1,20 +1,19 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 class GapFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("mask family matches Hive semantics") {
-    assert(GapFunctions.maskAll("Customer#042xY") === "Xxxxxxxx#nnnxX")
-    assert(GapFunctions.maskFirstN("Abc123", 4) === "Xxxn23")
-    assert(GapFunctions.maskLastN("Abc123", 2) === "Abc1nn")
-    assert(GapFunctions.maskShowFirstN("Abc123", 2) === "Abxnnn")
-    assert(GapFunctions.maskShowLastN("Abc123", 2) === "Xxxn23")
-    assert(GapFunctions.maskFirstN(null, 3) === null)
-    assert(GapFunctions.maskFirstN("ab", 10) === "xx") // n > length
+    val r = spark.sql("""SELECT mask('Customer#042xY'),
+        mask_all('Customer#042xY'),
+        mask_first_n('Abc123', 4), mask_last_n('Abc123', 2),
+        mask_show_first_n('Abc123', 2), mask_show_last_n('Abc123', 2),
+        mask_first_n(CAST(NULL AS STRING), 3),
+        mask_first_n('ab', 10)""").head() // n > length
+    assert(r.toSeq === Seq("Xxxxxxxx#nnnxX", "Xxxxxxxx#nnnxX", "Xxxn23",
+      "Abc1nn", "Abxnnn", "Xxxn23", null, "xx"))
   }
 
   test("field() returns 1-based index of first match, 0 if absent") {
@@ -36,22 +35,6 @@ class GapFunctionsSpec extends SparkSpec {
     // SQL registration
     val viaSql = df.selectExpr("fingerprint64(s)").as[Long].collect()
     assert(viaSql.toSeq === direct)
-  }
-
-  test("sort_array_by sorts array of structs by field") {
-    val df = Seq(1).toDF("x").select(
-      expr("array(named_struct('k', 3, 'v', 'c'), named_struct('k', 1, 'v', 'a'), named_struct('k', 2, 'v', 'b'))")
-        .as("arr"))
-    val sorted = df.select(GapFunctions.sortArrayBy($"arr", "k").as("s"))
-      .selectExpr("transform(s, x -> x.v)").as[Seq[String]].head()
-    assert(sorted === Seq("a", "b", "c"))
-  }
-
-  test("parse_url_tuple extracts multiple parts") {
-    val df = Seq("https://example.com:8080/path/p?x=1&y=2#frag").toDF("url")
-    val r = df.select(GapFunctions.parseUrlTuple($"url",
-      "HOST", "PATH", "QUERY").as("t")).select("t.*").head()
-    assert(r === Row("example.com", "/path/p", "x=1&y=2"))
   }
 
   test("hive_hash is bit-compatible with Hive's ObjectInspectorUtils") {
@@ -94,23 +77,5 @@ class GapFunctionsSpec extends SparkSpec {
     assert(r.getAs[Int]("h_dec_norm") === bd)
     // BytesWritable.hashCode: 31-fold, seed 1
     assert(r.getAs[Int]("h_bin") === 31 * (31 * 1 + 1) + 2)
-  }
-
-  test("uniontype round-trip via tagged-struct encoding") {
-    val df = Seq((0, 42, "ignored"), (1, -1, "hello")).toDF("tag", "i", "s")
-    val u = df.select(GapFunctions.createUnion($"tag", $"i", $"s").as("u"))
-    val tags = u.select($"u.tag").as[Int].collect().toSeq
-    assert(tags === Seq(0, 1))
-    val f0 = u.select(GapFunctions.extractUnion($"u", 0)).as[Int].collect()
-    val f1 = u.select(GapFunctions.extractUnion($"u", 1)).as[String].collect()
-    assert(f0.toSeq === Seq(42, -1))
-    assert(f1.toSeq === Seq("ignored", "hello"))
-  }
-
-  test("replicate_rows emits each row n times, distributed") {
-    val df = Seq(("a", 2L), ("b", 3L)).toDF("k", "n")
-    val out = GapFunctions.replicateRows(df, col("n"))
-      .groupBy("k").count().as[(String, Long)].collect().toMap
-    assert(out === Map("a" -> 2L, "b" -> 3L))
   }
 }

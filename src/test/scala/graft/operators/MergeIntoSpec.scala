@@ -14,6 +14,10 @@ class MergeIntoSpec extends SparkSpec {
     p
   }
 
+  // WHEN MATCHED THEN UPDATE SET name = s.name, amount = s.amount
+  private val updateAll = Seq(MergeInto.UpdateAction(
+    Map("name" -> col("s.name"), "amount" -> col("s.amount"))))
+
   test("UPDATE rewrites matching rows only") {
     val p = freshTable()
     MergeInto.update(spark, p, col("id") === 2,
@@ -35,7 +39,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "b2", 200.0), (4L, "d", 40.0))
       .toDF("id", "name", "amount")
-    MergeInto.merge(spark, p, src, "id")
+    MergeInto.mergeInto(spark, p, src, "id", updateAll)
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "b2", 200.0),
@@ -45,7 +49,8 @@ class MergeIntoSpec extends SparkSpec {
   test("MERGE with deleteMatched removes source keys") {
     val p = freshTable()
     val src = Seq((1L, "x", 0.0), (3L, "y", 0.0)).toDF("id", "name", "amount")
-    MergeInto.merge(spark, p, src, "id", deleteMatched = true)
+    MergeInto.mergeInto(spark, p, src, "id",
+      Seq(MergeInto.DeleteAction()), notMatched = Nil)
     val got = spark.read.parquet(p).select("id").as[Long].collect().toSeq
     assert(got === Seq(2L))
   }
@@ -90,7 +95,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "x", 1.0), (2L, "y", 2.0)).toDF("id", "name", "amount")
     val e = intercept[IllegalArgumentException] {
-      MergeInto.merge(spark, p, src, "id")
+      MergeInto.mergeInto(spark, p, src, "id", updateAll)
     }
     assert(e.getMessage.contains("cardinality"))
   }
@@ -100,7 +105,7 @@ class MergeIntoSpec extends SparkSpec {
     // matching the same TARGET row; unmatched duplicates insert.
     val p = freshTable()
     val src = Seq((9L, "x", 1.0), (9L, "y", 2.0)).toDF("id", "name", "amount")
-    MergeInto.merge(spark, p, src, "id")
+    MergeInto.mergeInto(spark, p, src, "id", updateAll)
     val got = spark.read.parquet(p).filter($"id" === 9)
       .select("name").as[String].collect().sorted.toSeq
     assert(got === Seq("x", "y"))

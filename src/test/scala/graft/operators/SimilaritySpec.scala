@@ -95,7 +95,7 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.cosinePairs(emb, threshold = 0.4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val exactPairs = exact.map(t => (t._1, t._2)).toSet
-    val blocked = Similarity.cosinePairsBlocked(emb, threshold = 0.4)
+    val blocked = Similarity.cosinePairsBlockedRaw(emb, threshold = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // no false positives: blocked pairs are a subset with the SAME score
     val exactScore = exact.map(t => (t._1, t._2) -> t._3).toMap

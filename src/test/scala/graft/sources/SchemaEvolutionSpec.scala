@@ -87,20 +87,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(m === Map(1 -> 20, 2 -> 40))
   }
 
-  test("evolveByName: a name-matched stored column is excluded from " +
-      "the positional fallback (no duplicated data)") {
-    import spark.implicits._
-    // target (b, a): 'a' name-matches stored a; target 'b' has no name
-    // match and would positionally land on stored position 0 = a —
-    // but a is spoken for, so b reads null
-    val df = Seq((7, "s")).toDF("a", "extra")
-    val out = SchemaEvolution.evolveByName(df,
-      StructType(Seq(StructField("b", IntegerType),
-        StructField("a", IntegerType))), Nil)
-    val r = out.head()
-    assert(r.isNullAt(0) && r.getInt(1) === 7)
-  }
-
   test("ADD COLUMNS parses a column COMMENT containing parens/cascade text") {
     import spark.implicits._
     Seq((1, "x")).toDF("k", "v").createOrReplaceTempView("se_cmt")
