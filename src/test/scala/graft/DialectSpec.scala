@@ -828,19 +828,20 @@ class DialectSpec extends SparkSpec {
     Seq("w_b1", "w_b2").foreach(t => spark.sql(s"DROP TABLE $t"))
   }
 
+  /** A ctrl-A delimited text file in a fresh temp directory. */
+  private def ctrlAFile(name: String, rows: String*): String = {
+    val f = java.nio.file.Files.createTempDirectory("graft_load")
+      .resolve(name)
+    java.nio.file.Files.write(f, rows.mkString("", "\n", "\n").getBytes)
+    f.toString
+  }
+
   test("public entry: LOAD DATA parses ctrl-A text into the table: " +
-      "append, OVERWRITE and PARTITION (p='q')") {
+      "append, then OVERWRITE") {
     val h = new HiveStatements(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_load")
-    def textFile(name: String, rows: String*): String = {
-      val f = dir.resolve(name)
-      java.nio.file.Files.write(f, rows.mkString("", "\n", "\n").getBytes)
-      f.toString
-    }
-    val f1 = textFile("f1", "1\u0001a", "2\u0001\\N")
-    val f2 = textFile("f2", "3\u0001c")
-    Seq("w_load", "w_loadp").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val f1 = ctrlAFile("f1", "1\u0001a", "2\u0001\\N")
+    val f2 = ctrlAFile("f2", "3\u0001c")
+    spark.sql("DROP TABLE IF EXISTS w_load")
     h.sql("CREATE TABLE w_load (k INT, v STRING) STORED AS PARQUET")
     h.sql(s"LOAD DATA LOCAL INPATH '$f1' INTO TABLE w_load")
     h.sql(s"LOAD DATA LOCAL INPATH '$f2' INTO TABLE w_load")
@@ -848,12 +849,20 @@ class DialectSpec extends SparkSpec {
       Seq("[1,a]", "[2,null]", "[3,c]"))
     h.sql(s"LOAD DATA LOCAL INPATH '$f2' OVERWRITE INTO TABLE w_load")
     assert(rowsOf(spark.table("w_load")) === Seq("[3,c]"))
+    spark.sql("DROP TABLE w_load")
+  }
+
+  test("public entry: LOAD DATA ... PARTITION (p='q') loads ctrl-A text " +
+      "into that partition") {
+    val h = new HiveStatements(spark)
+    val f1 = ctrlAFile("f1", "1\u0001a", "2\u0001\\N")
+    spark.sql("DROP TABLE IF EXISTS w_loadp")
     h.sql("CREATE TABLE w_loadp (k INT, v STRING) PARTITIONED BY " +
       "(p STRING) STORED AS PARQUET")
     h.sql(s"LOAD DATA LOCAL INPATH '$f1' INTO TABLE w_loadp " +
       "PARTITION (p='q')")
     assert(rowsOf(spark.table("w_loadp")) === Seq("[1,a,q]", "[2,null,q]"))
-    Seq("w_load", "w_loadp").foreach(t => spark.sql(s"DROP TABLE $t"))
+    spark.sql("DROP TABLE w_loadp")
   }
 
   test("public entry: EXPORT TABLE then IMPORT TABLE round-trips the " +

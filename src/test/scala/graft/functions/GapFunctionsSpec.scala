@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 
 class GapFunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -14,6 +15,41 @@ class GapFunctionsSpec extends SparkSpec {
         mask_first_n('ab', 10)""").head() // n > length
     assert(r.toSeq === Seq("Xxxxxxxx#nnnxX", "Xxxxxxxx#nnnxX", "Xxxn23",
       "Abc1nn", "Abxnnn", "Xxxn23", null, "xx"))
+  }
+
+  test("sort_array_by sorts array of structs by field") {
+    val df = Seq(1).toDF("x").selectExpr("array(named_struct('k', 3, " +
+      "'v', 'c'), named_struct('k', 1, 'v', 'a'), named_struct('k', 2, " +
+      "'v', 'b')) AS arr")
+    val sorted = df.selectExpr("transform(sort_array_by(arr, 'k'), x -> x.v)")
+      .as[Seq[String]].head()
+    assert(sorted === Seq("a", "b", "c"))
+  }
+
+  test("parse_url_tuple extracts multiple parts") {
+    val df = Seq("https://example.com:8080/path/p?x=1&y=2#frag").toDF("url")
+    val r = df.selectExpr("parse_url_tuple(url, 'HOST', 'PATH', 'QUERY')")
+      .head()
+    assert(r === Row("example.com", "/path/p", "x=1&y=2"))
+  }
+
+  test("uniontype round-trip via tagged-struct encoding") {
+    val df = Seq((0, 42, "ignored"), (1, -1, "hello")).toDF("tag", "i", "s")
+    val u = df.selectExpr("create_union(tag, i, s) AS u")
+    assert(u.selectExpr("u.tag").as[Int].collect().toSeq === Seq(0, 1))
+    val f0 = u.selectExpr("extract_union(u, 0)").as[Int].collect()
+    val f1 = u.selectExpr("extract_union(u, 1)").as[String].collect()
+    assert(f0.toSeq === Seq(42, -1))
+    assert(f1.toSeq === Seq("ignored", "hello"))
+  }
+
+  test("replicate_rows emits each row n times, distributed") {
+    Seq(("a", 2L), ("b", 3L)).toDF("k", "n").repartition(2)
+      .createOrReplaceTempView("gap_replicate")
+    val out = spark.sql("""SELECT k, count(*) FROM gap_replicate
+        LATERAL VIEW replicate_rows(n, k) t AS m, kk GROUP BY k""")
+      .as[(String, Long)].collect().toMap
+    assert(out === Map("a" -> 2L, "b" -> 3L))
   }
 
   test("field() returns 1-based index of first match, 0 if absent") {
