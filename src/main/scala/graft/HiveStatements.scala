@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable,
+  CatalogTablePartition}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
 import org.apache.spark.sql.types.{DataType, StringType, StructField,
   StructType}
@@ -23,10 +27,14 @@ import scala.util.matching.Regex
   * a plain Spark query). Storage effects go through protected hooks so
   * one grammar+dispatch serves both bindings:
   *
-  *  - production: temp views rebuild in place (localCheckpoint — no
-  *    driver collect); catalog tables route UPDATE/DELETE/MERGE to
-  *    [[MergeInto]]'s partition-scoped copy-on-write on the table
-  *    location, and EXPORT/IMPORT move real parquet snapshots.
+  *  - production: every statement that rewrites a table's rows
+  *    (UPDATE, DELETE, MERGE, TRUNCATE, DROP/RENAME PARTITION) goes
+  *    through one [[commit]]: a catalog table takes [[MergeInto]]'s
+  *    partition-scoped copy-on-write under its location, a session
+  *    temp view rebuilds in place (localCheckpoint, no collect).
+  *    INSERT (and IMPORT into an existing table) writes a
+  *    catalog table's files the same way; EXPORT/IMPORT move real
+  *    parquet snapshots.
   *  - golden replay: the test harness overrides the hooks with its
   *    fixture machinery (delimited text views, in-memory exports).
   */
@@ -1038,7 +1046,10 @@ class HiveStatements(val spark: SparkSession) {
           // engine keeps no per-partition repl ids, so every partition
           // is treated as older than the event, like a partition the
           // reference sees without replication state)
-          scala.util.Try(rebuild(lc, spark.table(lc).limit(0)))
+          scala.util.Try {
+            dropCatalogPartitions(lc, lit(true))
+            commit(lc, MergeInto.Delete(lit(true)))
+          }
           meta.addedParts.remove(lc)
           meta.partSchemas.remove(lc)
           meta.partStorage.filterInPlace((k, _) => k._1 != lc)
@@ -2535,12 +2546,15 @@ class HiveStatements(val spark: SparkSession) {
         col(f.name).cast(StringType) === statics(f.name.toLowerCase))
         .reduce(_ && _))
     val existing = scala.util.Try(spark.table(table)).toOption
-    val merged = existing match {
-      case Some(t) if t.columns.length == schema.fields.length =>
-        t.unionByName(df)
-      case _ => df
+    existing match {
+      // an existing table takes the rows as an INSERT, its columns
+      // matched by name (a catalog table always: its files take them)
+      case Some(t) if t.columns.length == schema.fields.length ||
+          !isTempView(table) =>
+        insertInto(table, overwrite = false,
+          df.select(t.columns.toIndexedSeq.map(col): _*))
+      case _ => rebuild(table, df)
     }
-    rebuild(table, merged)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_repl")))
       meta.tableProps.getOrElseUpdate(table.toLowerCase,
         scala.collection.mutable.LinkedHashMap.empty)(
@@ -2680,14 +2694,60 @@ class HiveStatements(val spark: SparkSession) {
     spark.sessionState.catalog.getTempView(
       name.split('.').last.toLowerCase).isDefined
 
-  /** Catalog (non-temp) parquet table → (location, partition cols). */
-  private def tableLocation(name: String): Option[(String, Seq[String])] =
-    scala.util.Try {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          name.split('.').last))
-      (meta.location.toString, meta.partitionColumnNames)
-    }.toOption
+  /** The one commit for statements that rewrite a table's rows
+    * (UPDATE, DELETE, MERGE, TRUNCATE, DROP/RENAME PARTITION). A
+    * catalog table takes [[MergeInto.commit]]'s copy-on-write under its
+    * location, so every session sees the rows; a partition it creates
+    * joins the catalog, an emptied one stays (Hive keeps partitions on
+    * DML). A session table (temp view) gets [[rebuild]] of the same
+    * row transform. */
+  private def commit(table: String, change: MergeInto.Change): Unit =
+    catalogTable(table) match {
+      case Some(ct) =>
+        val format = ct.provider.getOrElse("parquet").toLowerCase
+        require(format == "parquet" || format == "orc",
+          s"row-level rewrite of a $format table: $table")
+        addCatalogPartitions(ct, MergeInto.commit(spark.table(table),
+          ct.location.toString, change, ct.partitionColumnNames, format))
+        spark.catalog.refreshTable(table)
+      case None =>
+        rebuild(table, MergeInto.transform(spark.table(table), change))
+    }
+
+  /** `name`'s catalog table, unless a temp view shadows it. */
+  private def catalogTable(name: String): Option[CatalogTable] =
+    if (isTempView(name)) None
+    else scala.util.Try(spark.sessionState.catalog.getTableMetadata(
+      TableIdentifier(name))).toOption
+
+  private def addCatalogPartitions(ct: CatalogTable,
+      specs: Seq[Map[String, String]]): Unit =
+    if (ct.tracksPartitionsInCatalog) {
+      val cat = spark.sessionState.catalog
+      cat.createPartitions(ct.identifier, specs
+        .filter(s => cat.listPartitions(ct.identifier, Some(s)).isEmpty)
+        .map(CatalogTablePartition(_, ct.storage.copy(locationUri = None))),
+        ignoreIfExists = true)
+    }
+
+  /** DROP and RENAME PARTITION edit a catalog table's partitions, rows
+    * or not: those where `cond` holds leave the catalog with their
+    * directories, and a rename's `to` spec takes their place. */
+  private def dropCatalogPartitions(table: String, cond: Column,
+      to: Option[Map[String, String]] = None): Unit =
+    catalogTable(table).filter(_.tracksPartitionsInCatalog).foreach { ct =>
+      val cat = spark.sessionState.catalog
+      val pred = spark.table(table).filter(cond).queryExecution.analyzed
+        .collectFirst { case f: Filter => f.condition }
+      val gone = cat.listPartitionsByFilter(ct.identifier, pred.toSeq)
+        .map(_.spec)
+      cat.dropPartitions(ct.identifier, gone, ignoreIfNotExists = true,
+        purge = false, retainData = false)
+      if (gone.nonEmpty) addCatalogPartitions(ct, to.toSeq.map(spec =>
+        ct.partitionColumnNames.map(pc => pc -> spec.collectFirst {
+          case (n, v) if n.equalsIgnoreCase(pc) => v }.orNull).toMap))
+      spark.catalog.refreshTable(table)
+    }
 
   /** Partition-filtered view of a table per a PARTITION(...) spec. */
   protected def partFiltered(t: String, part: String): DataFrame = {
@@ -2760,10 +2820,11 @@ class HiveStatements(val spark: SparkSession) {
     }.toIndexedSeq: _*)
     // a CATALOG table takes a REAL write — files under the table
     // location, durable across sessions (with the metastore ledger,
-    // a restart then recovers both metadata AND data). The temp-view
-    // rebuild below is for session tables and harness fixtures; at
-    // 100 TB an in-memory shadow of a catalog table is a scale and
-    // durability bug, not an optimization.
+    // a restart then recovers both metadata AND data), as [[commit]]
+    // gives the row-rewriting statements. The temp-view rebuild below
+    // is for session tables and harness fixtures; at 100 TB an
+    // in-memory shadow of a catalog table is a scale and durability
+    // bug, not an optimization.
     if (!isTempView(table) &&
         scala.util.Try(spark.catalog.tableExists(table))
           .getOrElse(false)) {
@@ -2889,47 +2950,18 @@ class HiveStatements(val spark: SparkSession) {
         auth.executeStatement(q, dialect.currentDb)) return true
     if (ql.startsWith("update ")) q match {
       case updateRe(t, sets, w) =>
-        val table = t.split('.').last
-        val assigns = splitTop(sets, ',').map { a =>
-          val kv = a.split("=", 2)
-          kv(0).trim.replace("`", "") -> kv(1).trim
-        }
-        val cond = Option(w).map(expr).getOrElse(lit(true))
-        tableLocation(table) match {
-          case Some((loc, parts)) if !isTempView(table) =>
-            MergeInto.update(spark, loc, cond,
-              assigns.map { case (c, e) => c -> expr(e) }.toMap, parts)
-            spark.catalog.refreshTable(table)
-          case _ =>
-            val hit = coalesce(cond, lit(false))
-            val df = spark.table(table)
-            rebuild(table, df.select(df.columns.map { c =>
-              assigns.find(_._1.equalsIgnoreCase(c)) match {
-                case Some((_, e)) =>
-                  // the assigned value coerces to the COLUMN's type
-                  // (Hive casts; an unparseable value reads NULL) —
-                  // without this the when() would coerce the whole
-                  // column to the value's type instead
-                  when(hit, cvCast(expr(e), df.schema(c).dataType))
-                    .otherwise(col(c)).as(c)
-                case None => col(c)
-              }
-            }.toIndexedSeq: _*))
-        }
+        commit(t.split('.').last, MergeInto.Update(
+          Option(w).map(expr).getOrElse(lit(true)),
+          splitTop(sets, ',').map { a =>
+            val kv = a.split("=", 2)
+            kv(0).trim.replace("`", "") -> expr(kv(1).trim)
+          }.toMap))
         true
       case _ => false
     } else if (ql.startsWith("delete from")) q match {
       case deleteRe(t, w) =>
-        val table = t.split('.').last
-        val cond = Option(w).map(expr).getOrElse(lit(true))
-        tableLocation(table) match {
-          case Some((loc, parts)) if !isTempView(table) =>
-            MergeInto.delete(spark, loc, cond, parts)
-            spark.catalog.refreshTable(table)
-          case _ =>
-            rebuild(table,
-              spark.table(table).where(!coalesce(cond, lit(false))))
-        }
+        commit(t.split('.').last,
+          MergeInto.Delete(Option(w).map(expr).getOrElse(lit(true))))
         true
       case _ => false
     } else if (ql.startsWith("merge into")) q match {
@@ -3042,23 +3074,14 @@ class HiveStatements(val spark: SparkSession) {
       // COLUMNS empties the named columns' stored data (reads as NULL
       // afterwards; ref ql/parse/DDLSemanticAnalyzer truncate handling)
       case truncateRe(t, part, colsTxt) =>
-        val table = t.split('.').last
-        val df = spark.table(table)
         val hit: Column = parsePartSpec(part)
           .collect { case (n, Some(v)) => col(n).cast(StringType) <=> v }
           .reduceOption(_ && _).getOrElse(lit(true))
-        val out =
-          if (colsTxt != null) {
-            val names = colsTxt.split(",").map(_.trim.replace("`", ""))
-              .filter(_.nonEmpty).map(_.toLowerCase).toSet
-            df.select(df.columns.map { c =>
-              if (names.contains(c.toLowerCase))
-                when(hit, lit(null).cast(df.schema(c).dataType))
-                  .otherwise(col(c)).as(c)
-              else col(c)
-            }.toIndexedSeq: _*)
-          } else df.filter(!hit)
-        rebuild(table, out)
+        commit(t.split('.').last,
+          if (colsTxt == null) MergeInto.Delete(hit)
+          else MergeInto.Update(hit, colsTxt.split(",")
+            .map(_.trim.replace("`", "")).filter(_.nonEmpty)
+            .map(_ -> lit(null)).toMap))
         true
       case _ => false
     } else if (ql.startsWith("load data")) q match {
@@ -3122,18 +3145,12 @@ class HiveStatements(val spark: SparkSession) {
           val from = parsePartSpec(fromSpec).collect {
             case (n, Some(v)) => n -> v }
           val to = parsePartSpec(toSpec).collect {
-            case (n, Some(v)) => n.toLowerCase -> v }.toMap
-          val df = spark.table(table)
+            case (n, Some(v)) => n -> v }.toMap
           val hit = from.map { case (n, v) =>
             col(n).cast(StringType) <=> lit(v) }.reduce(_ && _)
-          rebuild(table, df.select(df.columns.map { c =>
-            to.get(c.toLowerCase) match {
-              case Some(v) =>
-                when(hit, cvCast(lit(v), df.schema(c).dataType))
-                  .otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }.toIndexedSeq: _*))
+          commit(table, MergeInto.MovePartition(hit,
+            to.map { case (n, v) => n -> lit(v) }))
+          dropCatalogPartitions(table, hit, Some(to))
           true
         case renameRe(from, to) if isTempView(from) =>
           renameView(from.split('.').last, to.split('.').last)
@@ -3193,7 +3210,10 @@ class HiveStatements(val spark: SparkSession) {
               }
             }.reduce(_ && _)
           }.reduceOption(_ || _).getOrElse(lit(false))
-          rebuild(table, df.filter(!coalesce(drop, lit(false))))
+          // the catalog drop first, as Hive's: a managed table's
+          // directories go, an external table's files stay
+          dropCatalogPartitions(table, drop)
+          commit(table, MergeInto.Delete(drop))
           true
         case changeColRe(t, oldName, newName, typ, pos, cascade) =>
           // CHANGE COLUMN: rename + retype + optional FIRST/AFTER
@@ -3329,9 +3349,7 @@ class HiveStatements(val spark: SparkSession) {
   }
 
   /** MERGE INTO: parse the ON equality and the ordered WHEN clause
-    * list, then route — catalog tables through [[MergeInto]]'s
-    * copy-on-write, temp views through the same clause semantics with
-    * an in-place rebuild. */
+    * list, then [[commit]] the merge. */
   private def executeMerge(table: String, tAlias: Option[String],
       srcText: String, sAlias: Option[String], on: String,
       clauseText: String): Unit = {
@@ -3403,15 +3421,7 @@ class HiveStatements(val spark: SparkSession) {
             c -> expr(canon(v)) }.toMap, cond)
       }
     }
-    tableLocation(table) match {
-      case Some((loc, parts)) if !isTempView(table) =>
-        MergeInto.mergeInto(spark, loc, source2, key, matched,
-          notMatched, parts)
-        spark.catalog.refreshTable(table)
-      case _ =>
-        rebuild(table, MergeInto.mergeResult(spark.table(table),
-          source2, key, matched, notMatched))
-    }
+    commit(table, MergeInto.Merge(source2, key, matched, notMatched))
   }
 }
 

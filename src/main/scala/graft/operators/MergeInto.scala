@@ -1,11 +1,14 @@
 package graft.operators
 
+import graft.HiveTypes.cvCast
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-/** Row-level MERGE / UPDATE / DELETE emulation over plain parquet
-  * (SURVEY.md §7.3 hard list).
+/** Row-level UPDATE / DELETE / MERGE over plain files (SURVEY.md §7.3
+  * hard list): one row [[MergeInto.transform]] per [[MergeInto.Change]]
+  * and one copy-on-write [[MergeInto.commit]] of it.
   *
   * The reference implements these as a rewrite into INSERT...SELECT over
   * ROW__ID against ACID delta files
@@ -30,7 +33,8 @@ import org.apache.spark.sql.functions._
   * each via stage-then-swap of that partition's directory; unaffected
   * partitions are never read, shuffled, or rewritten. Partition columns
   * cannot be updated (same restriction as Hive), which is what makes the
-  * affected-partition set computable from pre-images alone.
+  * affected-partition set computable from pre-images alone; only
+  * [[MergeInto.MovePartition]] adds its post-image partitions.
   */
 object MergeInto {
 
@@ -51,71 +55,117 @@ object MergeInto {
   private def chain(cases: Seq[(Column, Column)], default: Column): Column =
     cases.foldRight(default) { case ((c, v), els) => when(c, v).otherwise(els) }
 
-  /** Literal partition predicate for the collected affected-partition
-    * tuples: OR of null-safe per-column conjunctions. Being a
-    * deterministic expression over partition columns only, it reaches
-    * the scan as a PARTITION FILTER — an UPDATE/MERGE touching one
-    * partition reads one partition, not the table. */
-  private[graft] def affPredicate(partitionCols: Seq[String],
-      affRows: Seq[org.apache.spark.sql.Row]): Column =
-    affRows.map { row =>
+  /** The target restricted to the affected partitions — the scan every
+    * partition-scoped write computes FROM. The predicate (an OR of
+    * null-safe per-column conjunctions over the collected tuples) is
+    * deterministic over partition columns only, so it reaches the scan
+    * as a PARTITION FILTER: unaffected partitions are never read
+    * (plan-pinned by PlanAuditSpec). */
+  private[graft] def prunedTarget(t: DataFrame, partitionCols: Seq[String],
+      affRows: Seq[org.apache.spark.sql.Row]): DataFrame =
+    t.filter(affRows.map { row =>
       partitionCols.zipWithIndex.map { case (c, i) =>
         if (row.isNullAt(i)) col(c).isNull
         else col(c) <=> lit(row.get(i))
       }.reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    }.reduceOption(_ || _).getOrElse(lit(false)))
 
-  /** The target restricted to the affected partitions — the scan every
-    * partition-scoped write path computes FROM, so unaffected
-    * partitions are never read (plan-pinned by PlanAuditSpec). */
-  private[graft] def prunedTarget(t: DataFrame, partitionCols: Seq[String],
-      affRows: Seq[org.apache.spark.sql.Row]): DataFrame =
-    t.filter(affPredicate(partitionCols, affRows))
+  /** What a row-rewriting statement does to its target's rows. */
+  sealed trait Change
+  /** DELETE the rows where `cond` holds. */
+  case class Delete(cond: Column) extends Change
+  /** UPDATE the rows where `cond` holds: `set` maps column -> value;
+    * other columns keep their value. Partition columns cannot be
+    * assigned (Hive's restriction). */
+  case class Update(cond: Column, set: Map[String, Column]) extends Change
+  /** PARTITION (from) RENAME TO PARTITION (to): the rows where `cond`
+    * holds take the partition values in `to`. */
+  case class MovePartition(cond: Column, to: Map[String, Column])
+      extends Change
+  /** MERGE INTO target USING `source` ON target.key = source.key, with
+    * ordered matched / not-matched clause lists. */
+  case class Merge(source: DataFrame, key: String,
+      matched: Seq[MatchedAction],
+      notMatched: Seq[InsertAction] = Seq(InsertAction())) extends Change
 
-  /** UPDATE target SET (via `updates` expr map) WHERE `cond`. */
-  def update(spark: SparkSession, path: String, cond: Column,
-             updates: Map[String, Column],
-             partitionCols: Seq[String] = Nil): Unit = {
-    require(updates.keySet.intersect(partitionCols.toSet).isEmpty,
+  private def hit(cond: Column): Column = coalesce(cond, lit(false))
+
+  private def assign(t: DataFrame, cond: Column,
+      set: Map[String, Column]): DataFrame = {
+    val byLc = set.map { case (c, v) => c.toLowerCase -> v }
+    t.select(t.columns.toIndexedSeq.map(c => byLc.get(c.toLowerCase) match {
+      case Some(v) =>
+        when(hit(cond), cvCast(v, t.schema(c).dataType)).otherwise(col(c)).as(c)
+      case None => col(c)
+    }): _*)
+  }
+
+  /** The row transform: `t`'s rows after `change`, every assigned or
+    * inserted value cast to its column's declared type (Hive's insert
+    * cast), so a rewrite never changes a stored type. `whole` is the
+    * full target when `t` is a partition-pruned scan of it — MERGE's
+    * cardinality check and not-matched test look at every key. Pure
+    * (no write); the copy-on-write [[commit]] and session tables both
+    * compute through it. */
+  def transform(t: DataFrame, change: Change,
+      whole: Option[DataFrame] = None): DataFrame = change match {
+    case Delete(cond) => t.filter(!hit(cond))
+    case Update(cond, set) => assign(t, cond, set)
+    case MovePartition(cond, to) => assign(t, cond, to)
+    case m: Merge =>
+      val keys = whole.getOrElse(t).select(col(m.key))
+      cardinalityCheck(keys, m.source, m.key)
+      keptOf(t, m).unionByName(insertsOf(t, keys, m))
+  }
+
+  /** Commits `change` to the table at `path` (read as `target`, in
+    * `format`) copy-on-write. With `partitionCols` (the physical
+    * partitioning) only the affected partitions are read and
+    * rewritten, in two passes: collect the affected partition tuples
+    * from column-pruned scans, then transform the partition-pruned
+    * scan. Returns the specs (column -> rendered value) of the
+    * affected partitions that hold rows afterwards. */
+  def commit(target: DataFrame, path: String, change: Change,
+      partitionCols: Seq[String] = Nil, format: String = "parquet")
+      : Seq[Map[String, String]] = {
+    val assigned = (change match {
+      case Update(_, set) => Seq(set)
+      case m: Merge => m.matched.collect { case UpdateAction(set, _) => set }
+      case _ => Nil
+    }).flatMap(_.keys)
+    require(!assigned.exists(c =>
+      partitionCols.exists(_.equalsIgnoreCase(c))),
       "partition columns cannot be updated")
-    val t = spark.read.parquet(path)
-    val hit = coalesce(cond, lit(false))
-    def updated(base: DataFrame) =
-      updates.foldLeft(base) { case (df, (c, v)) =>
-        df.withColumn(c, when(hit, v).otherwise(col(c)))
-      }
-    if (partitionCols.isEmpty) rewrite(spark, updated(t), path)
-    else {
-      // pass 1 (column-pruned): which partitions hold matching rows;
-      // pass 2 recomputes the update over the PRUNED scan only
-      val affRows = t.filter(hit)
-        .select(partitionCols.map(col): _*).distinct().collect().toSeq
-      rewritePartitions(spark,
-        updated(prunedTarget(t, partitionCols, affRows)),
-        path, partitionCols, affRows)
+    val spark = target.sparkSession
+    if (partitionCols.isEmpty) {
+      rewrite(spark, transform(target, change), path, format)
+      return Nil
     }
-  }
-
-  /** DELETE FROM target WHERE `cond`. */
-  def delete(spark: SparkSession, path: String, cond: Column,
-             partitionCols: Seq[String] = Nil): Unit = {
-    val t = spark.read.parquet(path)
-    val hit = coalesce(cond, lit(false))
-    if (partitionCols.isEmpty) rewrite(spark, t.filter(!hit), path)
-    else {
-      val affRows = t.filter(hit)
-        .select(partitionCols.map(col): _*).distinct().collect().toSeq
-      rewritePartitions(spark,
-        prunedTarget(t, partitionCols, affRows).filter(!hit),
-        path, partitionCols, affRows)
+    val pcs = partitionCols.map(col)
+    val affected = change match {
+      case Delete(cond) => target.filter(hit(cond)).select(pcs: _*)
+      case Update(cond, _) => target.filter(hit(cond)).select(pcs: _*)
+      // the FROM and the TO tuples: staged rows land in TO, FROM empties
+      case MovePartition(cond, _) =>
+        val moved = target.filter(hit(cond))
+        moved.select(pcs: _*)
+          .union(transform(moved, change).select(pcs: _*))
+      case m: Merge =>
+        val anyMatched = m.matched.map(_.cond.getOrElse(lit(true)))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        target.alias("t").join(m.source.alias("s"),
+          col(s"t.${m.key}") === col(s"s.${m.key}"), "inner")
+          .filter(anyMatched)
+          .select(partitionCols.map(c => col(s"t.$c").as(c)): _*)
+          .unionByName(insertsOf(target, target.select(col(m.key)), m)
+            .select(pcs: _*))
     }
+    val affRows = affected.distinct().collect().toSeq
+    rewritePartitions(spark,
+      transform(prunedTarget(target, partitionCols, affRows), change,
+        Some(target)),
+      path, partitionCols, affRows, format)
   }
-
-  /** The computed pieces of a merge: surviving+updated target rows,
-    * the not-matched insert rows, and the matched target-source join
-    * (for partition-affected pruning). */
-  private case class MergePieces(kept: DataFrame, inserts: DataFrame,
-      joined: DataFrame, isMatched: Column)
 
   /** Hive cardinality check (enforce.cardinality.check): error only
     * when multiple SOURCE rows match the same TARGET row. `keys` must
@@ -136,122 +186,56 @@ object MergeInto {
   /** The NOT MATCHED insert rows. `keys` must be the FULL target key
     * set (a source row matched only in an unaffected partition is
     * still matched — not an insert). */
-  private def insertsOf(t: DataFrame, keys: DataFrame,
-      source: DataFrame, key: String,
-      notMatched: Seq[InsertAction]): DataFrame = {
-    val spark = t.sparkSession
-    val tCols = t.columns.toSeq
-    val sCols = source.columns.toSet
-    val unmatchedSrc = source.alias("s")
-      .join(keys.select(col(key).as("__tk")), col(s"s.$key") === col("__tk"),
-        "left_anti")
-    val (frames, _) = notMatched.foldLeft(
+  private def insertsOf(t: DataFrame, keys: DataFrame, m: Merge)
+      : DataFrame = {
+    val sCols = m.source.columns.toSet
+    val unmatchedSrc = m.source.alias("s")
+      .join(keys.select(col(m.key).as("__tk")),
+        col(s"s.${m.key}") === col("__tk"), "left_anti")
+    val (frames, _) = m.notMatched.foldLeft(
         (Seq.empty[DataFrame], lit(false): Column)) {
       case ((acc, prior), ins) =>
         val cond = ins.cond.getOrElse(lit(true)) && !prior
-        val rows = unmatchedSrc.filter(cond).select(tCols.map { c =>
-          ins.values.getOrElse(c,
-            if (sCols(c)) col(s"s.$c")
-            else lit(null).cast(t.schema(c).dataType)).as(c)
-        }: _*)
+        val rows = unmatchedSrc.filter(cond).select(t.columns.map { c =>
+          cvCast(ins.values.getOrElse(c,
+            if (sCols(c)) col(s"s.$c") else lit(null)),
+            t.schema(c).dataType).as(c)
+        }.toIndexedSeq: _*)
         (acc :+ rows, prior || ins.cond.getOrElse(lit(true)))
     }
-    frames.reduceOption(_ unionByName _)
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema))
+    frames.reduceOption(_ unionByName _).getOrElse(t.limit(0))
   }
 
   /** The surviving (kept/updated) target rows of the merge over `t` —
     * `t` may be the partition-pruned scan. */
-  private def keptOf(t: DataFrame, source: DataFrame, key: String,
-      matched: Seq[MatchedAction]): DataFrame = {
-    val tCols = t.columns.toSeq
-    val joined = t.alias("t").join(source.alias("s"),
-      col(s"t.$key") === col(s"s.$key"), "left")
-    val isMatched = col(s"s.$key").isNotNull
+  private def keptOf(t: DataFrame, m: Merge): DataFrame = {
+    val joined = t.alias("t").join(m.source.alias("s"),
+      col(s"t.${m.key}") === col(s"s.${m.key}"), "left")
+    val isMatched = col(s"s.${m.key}").isNotNull
     def armed(a: MatchedAction): Column =
       isMatched && a.cond.getOrElse(lit(true))
-    val keepChain = chain(matched.map(a =>
+    val keepChain = chain(m.matched.map(a =>
       armed(a) -> lit(!a.isInstanceOf[DeleteAction])), lit(true))
-    joined.filter(keepChain).select(tCols.map { c =>
-      chain(matched.map(a => armed(a) -> (a match {
-        case UpdateAction(set, _) => set.getOrElse(c, col(s"t.$c"))
+    joined.filter(keepChain).select(t.columns.map { c =>
+      chain(m.matched.map(a => armed(a) -> (a match {
+        case UpdateAction(set, _) => set.collectFirst {
+          case (k, v) if k.equalsIgnoreCase(c) =>
+            cvCast(v, t.schema(c).dataType)
+        }.getOrElse(col(s"t.$c"))
         case _: DeleteAction => col(s"t.$c")
       })), col(s"t.$c")).as(c)
-    }: _*)
-  }
-
-  private def mergePieces(t: DataFrame, source: DataFrame, key: String,
-      matched: Seq[MatchedAction], notMatched: Seq[InsertAction])
-      : MergePieces = {
-    cardinalityCheck(t.select(col(key)), source, key)
-    val joined = t.alias("t").join(source.alias("s"),
-      col(s"t.$key") === col(s"s.$key"), "left")
-    MergePieces(keptOf(t, source, key, matched),
-      insertsOf(t, t.select(col(key)), source, key, notMatched),
-      joined, col(s"s.$key").isNotNull)
-  }
-
-  /** Merge clause semantics as a pure DataFrame transform (no write):
-    * what `path`-based mergeInto would leave behind, computed against
-    * an arbitrary target. Used by the SQL dialect layer for temp-view
-    * targets. */
-  def mergeResult(target: DataFrame, source: DataFrame, key: String,
-      matched: Seq[MatchedAction],
-      notMatched: Seq[InsertAction] = Seq(InsertAction())): DataFrame = {
-    val p = mergePieces(target, source, key, matched, notMatched)
-    p.kept.unionByName(p.inserts)
-  }
-
-  /** Full Hive-style MERGE INTO target USING source ON target.key =
-    * source.key, with ordered matched/not-matched clause lists. */
-  def mergeInto(spark: SparkSession, path: String, source: DataFrame,
-                key: String, matched: Seq[MatchedAction],
-                notMatched: Seq[InsertAction] = Seq(InsertAction()),
-                partitionCols: Seq[String] = Nil): Unit = {
-    matched.foreach {
-      case UpdateAction(set, _) =>
-        require(set.keySet.intersect(partitionCols.toSet).isEmpty,
-          "partition columns cannot be updated")
-      case _ =>
-    }
-    val t = spark.read.parquet(path)
-    if (partitionCols.isEmpty) {
-      val MergePieces(kept, inserts, _, _) =
-        mergePieces(t, source, key, matched, notMatched)
-      rewrite(spark, kept.unionByName(inserts), path)
-    } else {
-      // pass 1 over COLUMN-pruned scans (key + partition + condition
-      // columns only): the cardinality check, the insert rows, and the
-      // affected-partition tuples. Pass 2 recomputes the surviving
-      // rows over the PARTITION-pruned scan — a merge touching one
-      // partition reads one partition of full-width data.
-      cardinalityCheck(t.select(col(key)), source, key)
-      val inserts = insertsOf(t, t.select(col(key)), source, key,
-        notMatched)
-      val anyMatchedCond = matched.map(_.cond.getOrElse(lit(true)))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      val affT = t.alias("t").join(source.alias("s"),
-        col(s"t.$key") === col(s"s.$key"), "inner")
-        .filter(anyMatchedCond)
-        .select(partitionCols.map(c => col(s"t.$c").as(c)): _*)
-      val affI = inserts.select(partitionCols.map(col): _*)
-      val affRows = affT.unionByName(affI).distinct().collect().toSeq
-      val kept = keptOf(prunedTarget(t, partitionCols, affRows),
-        source, key, matched)
-      rewritePartitions(spark, kept.unionByName(inserts), path,
-        partitionCols, affRows)
-    }
+    }.toIndexedSeq: _*)
   }
 
   /** Copy-on-write commit: stage to a temp dir, then swap via the
     * backup-rename protocol (recoverable: the previous data survives as
     * `<path>__cow_backup` until the new data is in place). */
-  private def rewrite(spark: SparkSession, df: DataFrame, path: String): Unit = {
+  private def rewrite(spark: SparkSession, df: DataFrame, path: String,
+      format: String): Unit = {
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "__cow_tmp")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    df.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
     swapInto(fs, tmp, dst)
   }
 
@@ -264,20 +248,21 @@ object MergeInto {
     * `partitionBy`). `affRows` is the caller-collected
     * distinct partition-tuple set — bounded by partition count, not
     * row count — and the same tuples already pruned the target scan
-    * `df` was computed from. */
+    * `df` was computed from. Returns the specs of the affected
+    * partitions that staged rows. */
   private def rewritePartitions(spark: SparkSession, df: DataFrame,
-                                path: String, partitionCols: Seq[String],
-                                affRows: Seq[org.apache.spark.sql.Row])
-      : Unit = {
-    if (affRows.isEmpty) return // nothing matched or inserted: no-op
+      path: String, partitionCols: Seq[String],
+      affRows: Seq[org.apache.spark.sql.Row], format: String)
+      : Seq[Map[String, String]] = {
+    if (affRows.isEmpty) return Nil // nothing matched or inserted: no-op
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "__cow_tmp")
     // `df` is already computed from the partition-pruned target; the
     // insert side may carry rows only for affected partitions too
     // (affI covers every insert partition), so it stages directly
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(tmp.toString)
+    df.write.mode(SaveMode.Overwrite).format(format)
+      .partitionBy(partitionCols: _*).save(tmp.toString)
     val stagedRels = partitionDirs(fs, tmp, partitionCols.length).map {
       staged =>
         val rel = staged.toUri.getPath.stripPrefix(tmp.toUri.getPath)
@@ -296,13 +281,13 @@ object MergeInto {
       df.select(partitionCols.map(col): _*).schema)
     val affRendered = affLocal.select(partitionCols.map(c =>
       col(c).cast("string").as(c)): _*).collect()
-    affRendered.foreach { row =>
-      val rel = partitionCols.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(c,
-            if (row.isNullAt(i)) null else row.getString(i))
-      }.mkString("/")
-      if (!stagedRels.contains(rel)) {
+    val live = affRendered.toSeq.flatMap { row =>
+      val spec = partitionCols.zipWithIndex.map { case (c, i) =>
+        c -> (if (row.isNullAt(i)) null else row.getString(i)) }
+      val rel = spec.map { case (c, v) =>
+        ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")
+      val staged = stagedRels.contains(rel)
+      if (!staged) {
         fs.delete(new Path(dst, rel), true)
         // prune now-empty ancestor partition dirs (multi-level partitioning)
         var parent = new Path(dst, rel).getParent
@@ -312,8 +297,10 @@ object MergeInto {
           parent = parent.getParent
         }
       }
+      Option.when(staged)(spec.toMap)
     }
     fs.delete(tmp, true)
+    live
   }
 
   /** Leaf `col=value/...` partition directories at the given depth. */

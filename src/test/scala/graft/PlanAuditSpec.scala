@@ -74,8 +74,9 @@ class PlanAuditSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet"))
       .map(f => f.getName + ":" + f.lastModified).sorted.toSeq
     val (s1, s3) = (sig("p1"), sig("p3"))
-    operators.MergeInto.update(spark, dir,
-      col("k") === 2, Map("v" -> lit("B")), partitionCols = Seq("ds"))
+    operators.MergeInto.commit(spark.read.parquet(dir), dir,
+      operators.MergeInto.Update(col("k") === 2, Map("v" -> lit("B"))),
+      partitionCols = Seq("ds"))
     assert(sig("p1") === s1 && sig("p3") === s3)
     val after = spark.read.parquet(dir)
     assert(after.filter(col("v") === "B").count() === 1)

@@ -1,0 +1,154 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
+  StructType}
+
+/** Statements that rewrite a table's rows (UPDATE, DELETE, MERGE,
+  * TRUNCATE, DROP/RENAME PARTITION, IMPORT into an existing table) run
+  * differentially: once on a partitioned catalog table, once on a
+  * session temp view holding the same rows. Both must end with the
+  * same rows, and the catalog table's rows must live in its files —
+  * visible from a fresh session, never shadowed by a temp view, and
+  * still taking later INSERTs.
+  */
+class RowRewriteSpec extends SparkSpec {
+
+  private lazy val h = new HiveStatements(spark)
+
+  private val schema = StructType(Seq(StructField("k", IntegerType),
+    StructField("n", IntegerType), StructField("v", StringType),
+    StructField("p", StringType)))
+  private val seed = Seq((1, 10, "x", "a"), (2, 20, "y", "a"),
+    (3, 30, "z", "b"))
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("[", ",", "]")).sorted.toSeq
+
+  /** A catalog table `c_<name>` (PARTITIONED BY p, stored `as`) and a
+    * session temp view `s_<name>` holding the same rows. */
+  private def pair(name: String, as: String): (String, String) = {
+    val (c, s) = (s"c_$name", s"s_$name")
+    h.sql(s"DROP TABLE IF EXISTS $c")
+    h.sql(s"CREATE TABLE $c (k INT, n INT, v STRING) " +
+      s"PARTITIONED BY (p STRING) STORED AS $as")
+    h.sql(s"INSERT INTO $c PARTITION (p) VALUES " +
+      seed.map { case (k, n, v, p) => s"($k, $n, '$v', '$p')" }
+        .mkString(", "))
+    spark.createDataFrame(java.util.Arrays.asList(seed.map {
+      case (k, n, v, p) => org.apache.spark.sql.Row(k, n, v, p) }: _*),
+      schema).createOrReplaceTempView(s)
+    (c, s)
+  }
+
+  /** Runs `stmt` on both tables and checks the four differential
+    * properties. With no temp view named after the catalog table, this
+    * session reads the same rows a fresh session does, so one read
+    * from a fresh session checks both. */
+  private def differential(name: String, as: String = "PARQUET")(
+      stmt: String => Unit): Unit = {
+    val (c, s) = pair(name, as)
+    try {
+      stmt(c)
+      stmt(s)
+      assert(spark.sessionState.catalog.getTempView(c).isEmpty,
+        s"a temp view shadows catalog table $c")
+      assert(rowsOf(spark.newSession().table(c)) ===
+        rowsOf(spark.table(s)))
+      val after = "INSERT INTO %s PARTITION (p='d') VALUES (9, 90, 'w')"
+      h.sql(after.format(c))
+      h.sql(after.format(s))
+      assert(rowsOf(spark.newSession().table(c)) ===
+        rowsOf(spark.table(s)))
+    } finally {
+      spark.catalog.dropTempView(c)
+      spark.catalog.dropTempView(s)
+      h.sql(s"DROP TABLE IF EXISTS $c")
+    }
+  }
+
+  test("UPDATE on a catalog table matches the session table") {
+    differential("upd")(t =>
+      h.sql(s"UPDATE $t SET v = 'u', n = n + 1 WHERE k = 2"))
+  }
+
+  test("DELETE on a catalog table matches the session table") {
+    differential("del")(t => h.sql(s"DELETE FROM $t WHERE n > 15"))
+  }
+
+  test("DELETE on an ORC catalog table rewrites it as ORC") {
+    differential("orc", "ORC")(t => h.sql(s"DELETE FROM $t WHERE n > 15"))
+  }
+
+  test("MERGE on a catalog table matches the session table") {
+    differential("mrg")(t => h.sql(s"MERGE INTO $t t USING (SELECT 2 " +
+      "AS k, 99 AS n, 'm' AS v, 'a' AS p UNION ALL SELECT 4, 40, 'q', " +
+      "'c') s ON t.k = s.k WHEN MATCHED THEN UPDATE SET n = s.n " +
+      "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.n, s.v, s.p)"))
+  }
+
+  test("TRUNCATE PARTITION on a catalog table matches the session table") {
+    differential("trp")(t => h.sql(s"TRUNCATE TABLE $t PARTITION (p='a')"))
+  }
+
+  test("TRUNCATE COLUMNS on a catalog table matches the session table") {
+    differential("trc")(t =>
+      h.sql(s"TRUNCATE TABLE $t PARTITION (p='a') COLUMNS (v)"))
+  }
+
+  test("DROP PARTITION (=) on a catalog table matches the session table") {
+    differential("dpe")(t =>
+      h.sql(s"ALTER TABLE $t DROP PARTITION (p='a')"))
+  }
+
+  test("DROP PARTITION (<) on a catalog table matches the session table") {
+    differential("dpl")(t =>
+      h.sql(s"ALTER TABLE $t DROP PARTITION (p < 'b')"))
+  }
+
+  test("RENAME PARTITION on a catalog table matches the session table") {
+    differential("ren")(t => h.sql(s"ALTER TABLE $t PARTITION (p='a') " +
+      "RENAME TO PARTITION (p='c')"))
+  }
+
+  test("IMPORT into an existing catalog table matches the session table") {
+    val dir = java.nio.file.Files.createTempDirectory("rowrw_exp")
+      .toString + "/e"
+    h.sql("DROP TABLE IF EXISTS rowrw_src")
+    h.sql("CREATE TABLE rowrw_src (k INT, n INT, v STRING) " +
+      "PARTITIONED BY (p STRING) STORED AS PARQUET")
+    h.sql("INSERT INTO rowrw_src PARTITION (p) VALUES (5, 50, 'e', 'b'), " +
+      "(6, 60, 'f', 'e')")
+    h.sql(s"EXPORT TABLE rowrw_src TO '$dir'")
+    try differential("imp")(t => h.sql(s"IMPORT TABLE $t FROM '$dir'"))
+    finally h.sql("DROP TABLE IF EXISTS rowrw_src")
+  }
+
+  /** An INT column of a catalog table gets `stmt`'s assigned 2.7; the
+    * table must stay readable from a fresh session with the value the
+    * session-table path gives (Hive's cast: 2). */
+  private def assignedCast(name: String)(stmt: String => Unit): Unit = {
+    h.sql(s"DROP TABLE IF EXISTS $name")
+    h.sql(s"CREATE TABLE $name (k INT, n INT) PARTITIONED BY " +
+      "(p STRING) STORED AS PARQUET")
+    h.sql(s"INSERT INTO $name PARTITION (p='a') VALUES (1, 1), (2, 5)")
+    try {
+      stmt(name)
+      val fresh = spark.newSession().table(name)
+      assert(fresh.schema("n").dataType === IntegerType)
+      assert(rowsOf(fresh) === Seq("[1,1,a]", "[2,2,a]"))
+    } finally h.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  test("UPDATE casts the assigned value to the column's declared type") {
+    assignedCast("cast_upd")(t =>
+      h.sql(s"UPDATE $t SET n = 2.7 WHERE k = 2"))
+  }
+
+  test("MERGE casts a decimal source value to the column's declared type") {
+    spark.sql("SELECT 2 AS k, CAST(2.7 AS DECIMAL(3,1)) AS n")
+      .createOrReplaceTempView("cast_src")
+    assignedCast("cast_mrg")(t => h.sql(s"MERGE INTO $t t USING cast_src " +
+      "s ON t.k = s.k WHEN MATCHED THEN UPDATE SET n = s.n"))
+  }
+}

@@ -14,14 +14,19 @@ class MergeIntoSpec extends SparkSpec {
     p
   }
 
+  /** Commits `change` to the parquet table at `p`. */
+  private def commit(p: String, change: MergeInto.Change,
+      partitionCols: Seq[String] = Nil) =
+    MergeInto.commit(spark.read.parquet(p), p, change, partitionCols)
+
   // WHEN MATCHED THEN UPDATE SET name = s.name, amount = s.amount
   private val updateAll = Seq(MergeInto.UpdateAction(
     Map("name" -> col("s.name"), "amount" -> col("s.amount"))))
 
   test("UPDATE rewrites matching rows only") {
     val p = freshTable()
-    MergeInto.update(spark, p, col("id") === 2,
-      Map("amount" -> lit(99.0), "name" -> lit("B")))
+    commit(p, MergeInto.Update(col("id") === 2,
+      Map("amount" -> lit(99.0), "name" -> lit("B"))))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "B", 99.0), (3L, "c", 30.0)))
@@ -29,7 +34,7 @@ class MergeIntoSpec extends SparkSpec {
 
   test("DELETE removes matching rows; null predicate keeps row") {
     val p = freshTable()
-    MergeInto.delete(spark, p, col("amount") > 15)
+    commit(p, MergeInto.Delete(col("amount") > 15))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0)))
@@ -39,7 +44,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "b2", 200.0), (4L, "d", 40.0))
       .toDF("id", "name", "amount")
-    MergeInto.mergeInto(spark, p, src, "id", updateAll)
+    commit(p, MergeInto.Merge(src, "id", updateAll))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "b2", 200.0),
@@ -49,8 +54,8 @@ class MergeIntoSpec extends SparkSpec {
   test("MERGE with deleteMatched removes source keys") {
     val p = freshTable()
     val src = Seq((1L, "x", 0.0), (3L, "y", 0.0)).toDF("id", "name", "amount")
-    MergeInto.mergeInto(spark, p, src, "id",
-      Seq(MergeInto.DeleteAction()), notMatched = Nil)
+    commit(p, MergeInto.Merge(src, "id",
+      Seq(MergeInto.DeleteAction()), notMatched = Nil))
     val got = spark.read.parquet(p).select("id").as[Long].collect().toSeq
     assert(got === Seq(2L))
   }
@@ -64,13 +69,13 @@ class MergeIntoSpec extends SparkSpec {
     //   UPDATE SET amount = t.amount + s.amount, name = s.name
     // (matched rows hitting neither clause stay untouched)
     // WHEN NOT MATCHED THEN INSERT
-    MergeInto.mergeInto(spark, p, src, "id",
+    commit(p, MergeInto.Merge(src, "id",
       matched = Seq(
         MergeInto.DeleteAction(Some(col("s.amount") === 0)),
         MergeInto.UpdateAction(
           Map("amount" -> (col("t.amount") + col("s.amount")),
             "name" -> col("s.name")),
-          Some(col("s.amount") > col("t.amount")))))
+          Some(col("s.amount") > col("t.amount"))))))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a+", 110.0), (3L, "c", 30.0), (4L, "d", 40.0)))
@@ -80,11 +85,11 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((4L, 40.0), (5L, 5.0)).toDF("id", "amount")
     // insert only big rows; name is not a source column -> expr or null
-    MergeInto.mergeInto(spark, p, src, "id",
+    commit(p, MergeInto.Merge(src, "id",
       matched = Nil,
       notMatched = Seq(MergeInto.InsertAction(
         values = Map("name" -> lit("new")),
-        cond = Some(col("s.amount") >= 10))))
+        cond = Some(col("s.amount") >= 10)))))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0),
@@ -95,7 +100,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "x", 1.0), (2L, "y", 2.0)).toDF("id", "name", "amount")
     val e = intercept[IllegalArgumentException] {
-      MergeInto.mergeInto(spark, p, src, "id", updateAll)
+      commit(p, MergeInto.Merge(src, "id", updateAll))
     }
     assert(e.getMessage.contains("cardinality"))
   }
@@ -105,7 +110,7 @@ class MergeIntoSpec extends SparkSpec {
     // matching the same TARGET row; unmatched duplicates insert.
     val p = freshTable()
     val src = Seq((9L, "x", 1.0), (9L, "y", 2.0)).toDF("id", "name", "amount")
-    MergeInto.mergeInto(spark, p, src, "id", updateAll)
+    commit(p, MergeInto.Merge(src, "id", updateAll))
     val got = spark.read.parquet(p).filter($"id" === 9)
       .select("name").as[String].collect().sorted.toSeq
     assert(got === Seq("x", "y"))
@@ -131,8 +136,9 @@ class MergeIntoSpec extends SparkSpec {
     Thread.sleep(1100)
     val src = Seq((1L, "us", 11.0), (5L, "eu", 50.0))
       .toDF("id", "region", "amount")
-    MergeInto.mergeInto(spark, p, src, "id",
-      matched = Seq(MergeInto.UpdateAction(Map("amount" -> col("s.amount")))),
+    commit(p, MergeInto.Merge(src, "id",
+      matched = Seq(
+        MergeInto.UpdateAction(Map("amount" -> col("s.amount"))))),
       partitionCols = Seq("region"))
     val got = spark.read.parquet(p).orderBy("id")
       .select("id", "amount").as[(Long, Double)].collect().toSeq
@@ -146,7 +152,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshPartitioned()
     val apBefore = partMtime(p, "ap")
     Thread.sleep(1100)
-    MergeInto.delete(spark, p, col("region") === "us" && col("id") === 2,
+    commit(p, MergeInto.Delete(col("region") === "us" && col("id") === 2),
       partitionCols = Seq("region"))
     val got = spark.read.parquet(p).select("id").as[Long].collect().sorted
     assert(got === Seq(1L, 3L, 4L))
@@ -155,7 +161,7 @@ class MergeIntoSpec extends SparkSpec {
 
   test("deleting every row of a partition removes its directory") {
     val p = freshPartitioned()
-    MergeInto.delete(spark, p, col("region") === "eu",
+    commit(p, MergeInto.Delete(col("region") === "eu"),
       partitionCols = Seq("region"))
     assert(!new java.io.File(s"$p/region=eu").exists())
     val got = spark.read.parquet(p).select("id").as[Long].collect().sorted
@@ -176,7 +182,7 @@ class MergeIntoSpec extends SparkSpec {
     val dirs0 = new java.io.File(p).listFiles().filter(_.isDirectory)
       .map(_.getName).toSet
     assert(dirs0.size === 2)
-    MergeInto.delete(spark, p, col("id") === 1L,
+    commit(p, MergeInto.Delete(col("id") === 1L),
       partitionCols = Seq("ts", "d"))
     val dirs1 = new java.io.File(p).listFiles().filter(_.isDirectory)
       .map(_.getName).toSet
@@ -189,8 +195,8 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshPartitioned()
     val src = Seq((3L, "eu", 0.0), (5L, "ap", 50.0))
       .toDF("id", "region", "amount")
-    MergeInto.mergeInto(spark, p, src, "id",
-      matched = Seq(MergeInto.DeleteAction()),
+    commit(p, MergeInto.Merge(src, "id",
+      matched = Seq(MergeInto.DeleteAction())),
       partitionCols = Seq("region"))
     assert(!new java.io.File(s"$p/region=eu").exists())
     val got = spark.read.parquet(p).select("id").as[Long].collect().sorted
@@ -200,8 +206,8 @@ class MergeIntoSpec extends SparkSpec {
   test("update matching nothing leaves all partition files untouched") {
     val p = freshPartitioned()
     val before = Seq("us", "eu", "ap").map(r => partMtime(p, r))
-    MergeInto.update(spark, p, col("id") === 999,
-      Map("amount" -> lit(0.0)), partitionCols = Seq("region"))
+    commit(p, MergeInto.Update(col("id") === 999,
+      Map("amount" -> lit(0.0))), partitionCols = Seq("region"))
     val after = Seq("us", "eu", "ap").map(r => partMtime(p, r))
     assert(after === before)
   }
@@ -209,8 +215,8 @@ class MergeIntoSpec extends SparkSpec {
   test("updating a partition column is rejected") {
     val p = freshPartitioned()
     val e = intercept[IllegalArgumentException] {
-      MergeInto.update(spark, p, col("id") === 1,
-        Map("region" -> lit("eu")), partitionCols = Seq("region"))
+      commit(p, MergeInto.Update(col("id") === 1,
+        Map("region" -> lit("eu"))), partitionCols = Seq("region"))
     }
     assert(e.getMessage.contains("partition columns"))
   }
