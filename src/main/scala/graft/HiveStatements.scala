@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.{CatalogTable,
-  CatalogTablePartition}
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
+  CatalogTable, CatalogTablePartition, CatalogTableType, CatalogUtils}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
 import org.apache.spark.sql.types.{DataType, StringType, StructField,
@@ -32,8 +32,11 @@ import scala.util.matching.Regex
   *    through one [[commit]]: a catalog table takes [[MergeInto]]'s
   *    partition-scoped copy-on-write under its location, a session
   *    temp view rebuilds in place (localCheckpoint, no collect).
-  *    INSERT (and IMPORT into an existing table) writes a
-  *    catalog table's files the same way; EXPORT/IMPORT move real
+  *    Every schema change (ALTER TABLE ADD/CHANGE/REPLACE COLUMNS)
+  *    goes through one [[alterSchema]]: a catalog table changes its
+  *    catalog schema (and rewrites its rows when old files would
+  *    misread), a session temp view re-binds lazily. INSERT (and
+  *    IMPORT) writes a catalog table's files; EXPORT/IMPORT move real
   *    parquet snapshots.
   *  - golden replay: the test harness overrides the hooks with its
   *    fixture machinery (delimited text views, in-memory exports).
@@ -170,8 +173,7 @@ class HiveStatements(val spark: SparkSession) {
         scala.util.Try(cat.getTableMetadata(
           ident.copy(database = Some("default")))).toOption.collect {
           case t if t.tableType !=
-              org.apache.spark.sql.catalyst.catalog
-                .CatalogTableType.VIEW && t.provider.isDefined =>
+              CatalogTableType.VIEW && t.provider.isDefined =>
             (t.identifier.table, t.schema.json, t.provider.get,
               t.location.toString, t.partitionColumnNames,
               t.tableType.name,
@@ -189,9 +191,6 @@ class HiveStatements(val spark: SparkSession) {
   private def restoreCatalogTables(entries: Seq[(String, String,
       String, String, Seq[String], String, Seq[(String, String)],
       Seq[(String, String)])]): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
-      CatalogTable, CatalogTableType}
     val cat = spark.sessionState.catalog
     entries.foreach {
       case (name, schemaJson, provider, location, partCols, typ,
@@ -2427,17 +2426,6 @@ class HiveStatements(val spark: SparkSession) {
   protected def rebuild(table: String, df: DataFrame): Unit =
     df.localCheckpoint().createOrReplaceTempView(table)
 
-  /** Re-bind `table` to a LAZY projection over its captured analyzed
-    * plan — for pure schema changes (ALTER ADD/REPLACE/CHANGE
-    * COLUMNS). Hive performs these as metastore-only edits with
-    * scan-time conversion (DataWritableReadSupport matches by name at
-    * read); materializing the table to apply one would be O(data)
-    * where the reference is O(metadata) — a scale-killer at 100 TB.
-    * Safe without a checkpoint: the Dataset was analyzed against the
-    * OLD view plan, so re-binding the name cannot recurse. */
-  protected def rebind(table: String, df: DataFrame): Unit =
-    df.createOrReplaceTempView(table)
-
   /** Bind a WITH-clause CTE for a statement being unrolled. */
   protected def bindCte(name: String, df: DataFrame): Unit =
     df.createOrReplaceTempView(name)
@@ -2487,7 +2475,8 @@ class HiveStatements(val spark: SparkSession) {
   }
 
   /** EXPORT TABLE snapshot: write the (optionally partition-filtered)
-    * rows plus the full table schema under `path`. `metadataOnly` =
+    * rows plus the full table schema and its partition columns under
+    * `path`. `metadataOnly` =
     * `FOR METADATA REPLICATION(...)`: schema only, zero rows
     * (ReplicationSpec.isMetadataOnly). */
   protected def exportSnapshot(table: String, partSpec: String,
@@ -2499,44 +2488,47 @@ class HiveStatements(val spark: SparkSession) {
     df.write.mode("overwrite").parquet(s"$path/data")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/_graft_schema.json"), true)
-    out.write(spark.table(table).schema.json.getBytes("UTF-8"))
-    out.close()
+    def put(name: String, text: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/$name"),
+        true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    put("_graft_schema.json", spark.table(table).schema.json)
+    put("_graft_partitions", partitionColumns(table).mkString("\n"))
     // a replication-scoped dump marks itself; IMPORT stamps the
     // replicated table's repl.last.id (ReplicationSpec — the qtest
     // metastore's event id is 0)
-    if (replication)
-      fs.create(new org.apache.hadoop.fs.Path(s"$path/_graft_repl"),
-        true).close()
+    if (replication) put("_graft_repl", "")
     // the dump carries the table TYPE: an EXTERNAL table's dump
     // imports as EXTERNAL (ImportSemanticAnalyzer carry-over)
-    meta.tableKind.get(table.toLowerCase).foreach { k =>
-      val kout = fs.create(
-        new org.apache.hadoop.fs.Path(s"$path/_graft_kind"), true)
-      kout.write(k.getBytes("UTF-8")); kout.close()
-    }
+    meta.tableKind.get(table.toLowerCase).foreach(put("_graft_kind", _))
   }
 
-  /** IMPORT: materialize an exported snapshot as `table` (appending
-    * when the table already exists with the same width — Hive adds
-    * the partitions). `external` marks IMPORT EXTERNAL TABLE (the
-    * imported data stays in the export directory — reference
-    * ImportSemanticAnalyzer); `location` is the statement's LOCATION
-    * clause (data lands there instead). The default implementation
-    * copies either way; location-aware stores can override. */
+  /** IMPORT: materialize an exported snapshot as `table`. An existing
+    * table takes the rows as an INSERT (Hive adds the partitions); an
+    * absent one is first created in the catalog with the exported
+    * schema and partition columns (a dump without a partition file
+    * imports unpartitioned), then takes them the same way. As in
+    * ImportSemanticAnalyzer, the new table is EXTERNAL for IMPORT
+    * EXTERNAL TABLE (`external`) or a dump of an EXTERNAL table outside
+    * replication, and lives at the LOCATION clause (`location`) when
+    * given, else at the table's default path; the rows are copied
+    * there either way. */
   protected def importSnapshot(table: String, partSpec: String,
       path: String, external: Boolean = false,
       location: Option[String] = None): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val schemaFile = new org.apache.hadoop.fs.Path(
-      s"$path/_graft_schema.json")
-    if (!fs.exists(schemaFile)) return
-    val in = fs.open(schemaFile)
-    val json = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    val schema = DataType.fromJson(json).asInstanceOf[StructType]
+    def get(name: String): Option[String] = {
+      val f = new org.apache.hadoop.fs.Path(s"$path/$name")
+      Option.when(fs.exists(f)) {
+        val in = fs.open(f)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      }
+    }
+    val schema = DataType.fromJson(get("_graft_schema.json")
+      .getOrElse(return)).asInstanceOf[StructType]
     var df = spark.read.schema(schema).parquet(s"$path/data")
     val statics = parsePartSpec(partSpec).collect {
       case (n, Some(v)) => n.toLowerCase -> v }.toMap
@@ -2545,6 +2537,13 @@ class HiveStatements(val spark: SparkSession) {
         statics.contains(f.name.toLowerCase)).map(f =>
         col(f.name).cast(StringType) === statics(f.name.toLowerCase))
         .reduce(_ && _))
+    val lc = table.toLowerCase
+    // a replication-scope import lands MANAGED — the replica owns
+    // its copy (ImportSemanticAnalyzer replication handling); a
+    // demoted external records EXTERNAL=FALSE
+    val repl = get("_graft_repl").isDefined
+    val dumpedExternal =
+      get("_graft_kind").map(_.trim).contains("EXTERNAL_TABLE")
     val existing = scala.util.Try(spark.table(table)).toOption
     existing match {
       // an existing table takes the rows as an INSERT, its columns
@@ -2553,28 +2552,32 @@ class HiveStatements(val spark: SparkSession) {
           !isTempView(table) =>
         insertInto(table, overwrite = false,
           df.select(t.columns.toIndexedSeq.map(col): _*))
-      case _ => rebuild(table, df)
+      case Some(_) => rebuild(table, df)
+      case None =>
+        val pcs = get("_graft_partitions").toSeq.flatMap(_.split("\n"))
+          .filter(_.nonEmpty)
+        val ext = external || (!repl && dumpedExternal)
+        val cat = spark.sessionState.catalog
+        val id = TableIdentifier(table)
+        cat.createTable(CatalogTable(id,
+          if (ext) CatalogTableType.EXTERNAL else CatalogTableType.MANAGED,
+          CatalogStorageFormat.empty.copy(locationUri =
+            location.map(CatalogUtils.stringToURI)
+              .orElse(Option.when(ext)(cat.defaultTablePath(id)))),
+          schema, Some("parquet"), partitionColumnNames = pcs),
+          ignoreIfExists = false)
+        if (pcs.nonEmpty) meta.tablePartCols(lc) = pcs
+        if (ext) meta.tableKind(lc) = "EXTERNAL_TABLE"
+        insertInto(table, overwrite = false, df)
     }
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_graft_repl")))
-      meta.tableProps.getOrElseUpdate(table.toLowerCase,
+    if (repl)
+      meta.tableProps.getOrElseUpdate(lc,
         scala.collection.mutable.LinkedHashMap.empty)(
         "repl.last.id") = "0"
-    // a replication-scope import lands MANAGED — the replica owns
-    // its copy (ImportSemanticAnalyzer replication handling); a
-    // demoted external records EXTERNAL=FALSE
-    val kindFile = new org.apache.hadoop.fs.Path(s"$path/_graft_kind")
-    if (existing.isEmpty && fs.exists(kindFile)) {
-      val kin = fs.open(kindFile)
-      val kind = scala.io.Source.fromInputStream(kin).mkString.trim
-      kin.close()
-      val repl = fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/_graft_repl"))
-      if (!repl) meta.tableKind(table.toLowerCase) = kind
-      else if (kind == "EXTERNAL_TABLE")
-        meta.tableProps.getOrElseUpdate(table.toLowerCase,
-          scala.collection.mutable.LinkedHashMap.empty)(
-          "EXTERNAL") = "FALSE"
-    }
+    if (existing.isEmpty && repl && dumpedExternal)
+      meta.tableProps.getOrElseUpdate(lc,
+        scala.collection.mutable.LinkedHashMap.empty)(
+        "EXTERNAL") = "FALSE"
   }
 
   /** hive.stats.ndv.error → FM-sketch bit-vector count
@@ -2634,17 +2637,87 @@ class HiveStatements(val spark: SparkSession) {
   protected def dispatchTail(sql: String): Unit =
     if (!execute(sql)) spark.sql(sql).count()
 
-  /** Apply a schema change (ALTER ... CHANGE COLUMN) to `table`.
-    * Return true when the binding handled it (e.g. by reinterpreting
-    * stored bytes schema-on-read); false → the caller materializes a
-    * cast of the current values instead. */
-  protected def applyNewSchema(table: String, newSchema: StructType,
-      cascade: Boolean): Boolean = false
+  /** The one place a schema change (ALTER TABLE ADD, CHANGE or
+    * REPLACE COLUMNS) lands, as [[commit]] is for rows: `newSchema` is
+    * the full new schema (partition columns last), `project` maps the
+    * current rows onto it. Hive runs these as metastore edits over
+    * files that stay put, converting at scan time
+    * (DataWritableReadSupport matches by name): O(metadata), where
+    * materializing the table would be O(data). A session table (temp
+    * view) re-binds LAZILY to `project` of itself (analyzed against
+    * the old plan, so the name cannot recurse). A catalog table changes
+    * only its catalog schema when its files, read under the new schema,
+    * give what `project` gives: every new data column either reads
+    * null or is a stored column passed through unchanged, found where
+    * the format looks for it (parquet and ORC by name, a csv table by
+    * place), and parquet and ORC keep every stored column. Any other
+    * change (a rename or move old files cannot serve, a retype, a drop)
+    * would read nulls, other columns' values or fail on old files, so
+    * [[commit]] rewrites the rows first. `cascade` is the statement's
+    * CASCADE clause. */
+  protected def alterSchema(table: String, newSchema: StructType,
+      project: DataFrame => DataFrame, cascade: Boolean): Unit =
+    catalogTable(table) match {
+      case Some(ct) =>
+        import org.apache.spark.sql.catalyst.expressions.{Alias,
+          Attribute, Cast, Expression}
+        import org.apache.spark.sql.catalyst.plans.logical.Project
+        import org.apache.spark.sql.catalyst.types.DataTypeUtils.sameType
+        import org.apache.spark.sql.catalyst.util.CharVarcharUtils._
+        def isPart(name: String) =
+          ct.partitionColumnNames.exists(_.equalsIgnoreCase(name))
+        val (parts, data) =
+          getRawSchema(newSchema).fields.partition(f => isPart(f.name))
+        def same(a: StructField, b: StructField) =
+          a.name.equalsIgnoreCase(b.name) && sameType(a.dataType, b.dataType)
+        require(parts.toSeq.corresponds(getRawSchema(ct.partitionSchema))(
+          same), s"a schema change cannot alter partition columns: $table")
+        val stored = getRawSchema(ct.dataSchema).fields.toSeq
+        // what each new data column reads: Some(Some(i)) stored data
+        // column i unchanged, Some(None) null, None a computed value
+        val in = spark.table(table)
+        val storedAttrs =
+          in.queryExecution.analyzed.output.filterNot(a => isPart(a.name))
+        def source(e: Expression): Option[Option[Int]] = e match {
+          case Alias(c, _) => source(c)
+          case c: Cast if c.child.dataType == c.dataType => source(c.child)
+          case a: Attribute =>
+            Some(Some(storedAttrs.indexWhere(_.exprId == a.exprId)))
+              .filter(_.get >= 0)
+          case _ if e.foldable && e.eval() == null => Some(None)
+          case _ => None
+        }
+        val reads = project(in).queryExecution.analyzed match {
+          case Project(list, _) => list.filterNot(e => isPart(e.name))
+            .map(source)
+          case _ => Nil
+        }
+        val byName = Set("parquet", "orc").contains(
+          ct.provider.getOrElse("parquet").toLowerCase)
+        val kept = reads.length == data.length &&
+          reads.zip(data).zipWithIndex.forall {
+            case ((Some(Some(i)), f), j) =>
+              sameType(stored(i).dataType, f.dataType) &&
+                (if (byName) stored(i).name.equalsIgnoreCase(f.name)
+                 else i == j)
+            case ((Some(None), _), j) => byName || j >= stored.length
+            case _ => false
+          } &&
+          (!byName ||
+            stored.indices.forall(i => reads.contains(Some(Some(i)))))
+        if (!kept) commit(table, MergeInto.Reshape(project))
+        spark.sessionState.catalog.externalCatalog.alterTableDataSchema(
+          ct.database, ct.identifier.table,
+          replaceCharVarcharWithStringInSchema(StructType(data)))
+        spark.catalog.refreshTable(table)
+      case None => project(spark.table(table)).createOrReplaceTempView(table)
+    }
 
-  /** Partition columns of `table` (they are metadata, not data: ADD /
-    * REPLACE COLUMNS leaves them untouched and last in the logical
-    * schema). Bindings with a partition registry override this. */
-  protected def partitionColsOf(table: String): Seq[String] = Nil
+  /** `table`'s partition columns: the catalog's, or the metadata
+    * layer's for a session table. */
+  private def partitionColumns(table: String): Seq[String] =
+    catalogTable(table).map(_.partitionColumnNames)
+      .getOrElse(meta.tablePartCols.getOrElse(table.toLowerCase, Nil))
 
   /** Parse an ALTER column list (`a int, m map<string,int> comment
     * 'x'`). Bindings with richer name rules may override. */
@@ -2655,17 +2728,13 @@ class HiveStatements(val spark: SparkSession) {
     * in before the partition columns; stored data is untouched. */
   protected def addColumns(table: String, cols: StructType,
       cascade: Boolean): Unit = {
-    val df = spark.table(table)
-    val pcs = partitionColsOf(table)
-    val (pFields, dFields) = df.schema.fields.partition(f =>
-      pcs.exists(_.equalsIgnoreCase(f.name)))
-    if (!applyNewSchema(table,
-        StructType(dFields ++ cols.fields ++ pFields), cascade)) {
-      val sel = (dFields.map(f => col(f.name)) ++
+    val pcs = partitionColumns(table)
+    val (pFields, dFields) = spark.table(table).schema.fields.partition(
+      f => pcs.exists(_.equalsIgnoreCase(f.name)))
+    alterSchema(table, StructType(dFields ++ cols.fields ++ pFields),
+      _.select((dFields.map(f => col(f.name)) ++
         cols.fields.map(f => lit(null).cast(f.dataType).as(f.name)) ++
-        pFields.map(f => col(f.name))).toIndexedSeq
-      rebind(table, df.select(sel: _*))
-    }
+        pFields.map(f => col(f.name))).toIndexedSeq: _*), cascade)
   }
 
   /** ALTER TABLE ... REPLACE COLUMNS: project onto the new DATA
@@ -2675,14 +2744,13 @@ class HiveStatements(val spark: SparkSession) {
   protected def replaceColumns(table: String, newData: StructType,
       cascade: Boolean): Unit = {
     val df = spark.table(table)
-    val pcs = partitionColsOf(table).filter(p =>
+    val pcs = partitionColumns(table).filter(p =>
       df.columns.exists(_.equalsIgnoreCase(p)))
     val partFields = df.schema.fields.filter(f =>
       pcs.exists(_.equalsIgnoreCase(f.name)))
-    if (!applyNewSchema(table, StructType(newData.fields ++ partFields),
-        cascade))
-      rebind(table,
-        graft.sources.SchemaEvolution.evolveByPosition(df, newData, pcs))
+    alterSchema(table, StructType(newData.fields ++ partFields),
+      graft.sources.SchemaEvolution.evolveByPosition(_, newData, pcs),
+      cascade)
   }
 
   // ---------------------------------------------------------------
@@ -2825,9 +2893,7 @@ class HiveStatements(val spark: SparkSession) {
     // is for session tables and harness fixtures; at 100 TB an
     // in-memory shadow of a catalog table is a scale and durability
     // bug, not an optimization.
-    if (!isTempView(table) &&
-        scala.util.Try(spark.catalog.tableExists(table))
-          .getOrElse(false)) {
+    if (catalogTable(table).isDefined) {
       // Hive allows INSERT OVERWRITE t ... FROM t; Spark's native
       // write refuses to overwrite its own input — materialize the
       // self-reading case first (only then: a checkpoint on every
@@ -2964,12 +3030,12 @@ class HiveStatements(val spark: SparkSession) {
           MergeInto.Delete(Option(w).map(expr).getOrElse(lit(true))))
         true
       case _ => false
-    } else if (ql.startsWith("merge into")) q match {
-      case mergeRe(t, tAlias, src, sAlias, on, clauses) =>
-        executeMerge(t.split('.').last, Option(tAlias), src.trim,
+    } else if (ql.startsWith("merge into")) parseMerge(q) match {
+      case Some((t, tAlias, src, sAlias, on, clauses)) =>
+        executeMerge(t.split('.').last, Option(tAlias), src,
           Option(sAlias), on, clauses)
         true
-      case _ => false
+      case None => false
     } else if (ql.startsWith("create index")) {
       // Hive 2.x index DDL: record the definition (SHOW INDEX serves
       // it); the engine's scans don't consult index tables — Spark's
@@ -3217,14 +3283,13 @@ class HiveStatements(val spark: SparkSession) {
           true
         case changeColRe(t, oldName, newName, typ, pos, cascade) =>
           // CHANGE COLUMN: rename + retype + optional FIRST/AFTER
-          // repositioning. Metadata-first: applyNewSchema lets the
-          // binding reinterpret stored bytes; the fallback casts the
-          // materialized values.
+          // repositioning; field i reads old column i (Hive's
+          // positional bytes contract), cast to its new type
           val table = t.split('.').last
-          val df = spark.table(table)
+          val old = spark.table(table).schema
           val dt = org.apache.spark.sql.catalyst.parser
             .CatalystSqlParser.parseDataType(typ)
-          var fields = df.schema.fields.map { f =>
+          var fields = old.fields.map { f =>
             if (f.name.equalsIgnoreCase(oldName))
               StructField(newName, dt, nullable = true)
             else f
@@ -3242,20 +3307,15 @@ class HiveStatements(val spark: SparkSession) {
                 else (rest.take(at + 1) :+ f) ++ rest.drop(at + 1)
               }
           }
-          val newSchema = StructType(fields)
-          if (!applyNewSchema(table, newSchema,
-              cascade != null && cascade.equalsIgnoreCase("cascade"))) {
-            // cast fallback keyed by OLD position: field i reads old
-            // column i (Hive's positional bytes contract)
-            val cols = fields.map { f =>
-              val oldIdx = df.schema.fields.indexWhere(x =>
+          alterSchema(table, StructType(fields), df =>
+            df.select(fields.map { f =>
+              val oldIdx = old.fields.indexWhere(x =>
                 f.name.equalsIgnoreCase(
                   if (x.name.equalsIgnoreCase(oldName)) newName
                   else x.name))
               cvCast(col(df.columns(oldIdx)), f.dataType).as(f.name)
-            }
-            rebind(table, df.select(cols: _*))
-          }
+            }: _*),
+            cascade != null && cascade.equalsIgnoreCase("cascade"))
           true
         case _ if parseAddReplaceColumns(q).isDefined =>
           val (table, kind, cols, cascade) = parseAddReplaceColumns(q).get
@@ -3638,10 +3698,27 @@ object HiveStatements {
   private[graft] val deleteRe =
     "(?is)^delete\\s+from\\s+`?([\\w.]+)`?(?:\\s+where\\s+(.*))?$"
       .r("t", "w")
-  private[graft] val mergeRe =
-    ("(?is)^merge\\s+into\\s+`?([\\w.]+)`?(?:\\s+as)?(?:\\s+(?!using\\b)" +
-      "(\\w+))?\\s+using\\s+(\\([^)]*\\)|`?[\\w.]+`?)(?:\\s+as)?" +
-      "(?:\\s+(?!on\\b)(\\w+))?\\s+on\\s+(.+?)\\s+(when\\s+.*)$").r
+  /** MERGE INTO t [[AS] ta] USING src [[AS] sa] ON cond WHEN ... →
+    * (t, ta, src, sa, cond, clauses), absent aliases null; a subquery
+    * source ends at its balanced close paren. */
+  def parseMerge(q: String)
+      : Option[(String, String, String, String, String, String)] =
+    mergeHeadRe.findPrefixMatchOf(q).flatMap { h =>
+      (if (q.startsWith("(", h.end)) balancedBody(q, h.end).map(_._2)
+       else "`?[\\w.]+`?".r.findPrefixMatchOf(q.substring(h.end))
+         .map(h.end + _.end)).flatMap { end =>
+        mergeTailRe.findPrefixMatchOf(q.substring(end)).map(m =>
+          (h.group(1), h.group(2), q.substring(h.end, end), m.group(1),
+            m.group(2), m.group(3)))
+      }
+    }
+
+  private val mergeHeadRe =
+    ("(?is)^merge\\s+into\\s+`?([\\w.]+)`?(?:\\s+as)?" +
+      "(?:\\s+(?!using\\b)(\\w+))?\\s+using\\s+").r
+  private val mergeTailRe =
+    ("(?is)(?:\\s+as)?(?:\\s+(?!on\\b)(\\w+))?\\s+on\\s+(.+?)\\s+" +
+      "(when\\s+.*)$").r
   private[graft] val whenClauseRe =
     ("(?is)when\\s+(not\\s+)?matched\\s*(?:and\\s+(.+?))?\\s*then\\s+" +
       "(update\\s+set\\s+.+?|delete|insert\\s+values\\s*\\(.+?\\))\\s*" +

@@ -1551,10 +1551,9 @@ class HiveMetaStore(val spark: SparkSession,
     *     file content is ever opened),
     *  3. metadata-only ADD PARTITION specs recorded by this store.
     * A temp-view-backed name falls back to the legacy distinct()
-    * scan — temp views (including a schema change's rebind view
-    * shadowing the physical table) are this engine's mutable-view
-    * model and carry no catalog
-    * metadata that could answer (the reference has no such object).
+    * scan — temp views are this engine's session tables and carry
+    * no catalog metadata that could answer (the reference has no
+    * such object).
     * escapePathName-rendered, metastore-sorted. `isView`: a view's
     * partitions are ONLY the explicitly ADDed ones. */
   def showPartitionNames(table: String, lc: String, pcs: Seq[String],

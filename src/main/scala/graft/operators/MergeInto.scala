@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Row-level UPDATE / DELETE / MERGE over plain files (SURVEY.md §7.3
-  * hard list): one row [[MergeInto.transform]] per [[MergeInto.Change]]
-  * and one copy-on-write [[MergeInto.commit]] of it.
+  * hard list), and the rewrite of a schema change old files cannot
+  * serve: one row [[MergeInto.transform]] per [[MergeInto.Change]] and
+  * one copy-on-write [[MergeInto.commit]] of it.
   *
   * The reference implements these as a rewrite into INSERT...SELECT over
   * ROW__ID against ACID delta files
@@ -87,6 +88,9 @@ object MergeInto {
   case class Merge(source: DataFrame, key: String,
       matched: Seq[MatchedAction],
       notMatched: Seq[InsertAction] = Seq(InsertAction())) extends Change
+  /** A schema change's rewrite: every row becomes `project` of it.
+    * Every partition is affected; partition values stay. */
+  case class Reshape(project: DataFrame => DataFrame) extends Change
 
   private def hit(cond: Column): Column = coalesce(cond, lit(false))
 
@@ -112,6 +116,7 @@ object MergeInto {
     case Delete(cond) => t.filter(!hit(cond))
     case Update(cond, set) => assign(t, cond, set)
     case MovePartition(cond, to) => assign(t, cond, to)
+    case Reshape(project) => project(t)
     case m: Merge =>
       val keys = whole.getOrElse(t).select(col(m.key))
       cardinalityCheck(keys, m.source, m.key)
@@ -145,6 +150,7 @@ object MergeInto {
     val affected = change match {
       case Delete(cond) => target.filter(hit(cond)).select(pcs: _*)
       case Update(cond, _) => target.filter(hit(cond)).select(pcs: _*)
+      case Reshape(_) => target.select(pcs: _*)
       // the FROM and the TO tuples: staged rows land in TO, FROM empties
       case MovePartition(cond, _) =>
         val moved = target.filter(hit(cond))

@@ -881,7 +881,7 @@ class DialectSpec extends SparkSpec {
       Seq("id" -> "bigint", "v" -> "string", "w" -> "double"))
     assert(rowsOf(imp) === Seq("[1,a,1.5]", "[2,b,2.5]"))
     spark.sql("DROP TABLE w_exp")
-    spark.sql("DROP VIEW IF EXISTS w_imp")
+    spark.sql("DROP TABLE IF EXISTS w_imp")
   }
 
   test("public entry: FROM src INSERT ... INSERT ... fans one source " +

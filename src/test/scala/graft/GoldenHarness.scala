@@ -3923,7 +3923,17 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
     register(converted, StructType(newData.fields ++ partFields), table)
   }
 
-  override protected def applyNewSchema(table: String,
+  /** Schema changes reach the one hook only from CHANGE COLUMN (ADD
+    * and REPLACE are overridden below): raw-tracked tables reinterpret
+    * stored cells, anything else re-binds lazily as a session table. */
+  override protected def alterSchema(table: String, newSchema: StructType,
+      project: DataFrame => DataFrame, cascade: Boolean): Unit =
+    if (!applyNewSchema(table, newSchema, cascade))
+      project(spark.table(table)).createOrReplaceTempView(table)
+
+  /** Re-derive a raw-tracked text table under `newSchema` (true), or
+    * leave it to the caller (false). */
+  private def applyNewSchema(table: String,
       newSchema: StructType, cascade: Boolean): Boolean = {
     val lc = table.toLowerCase
     rawStore.contains(lc) && !binaryStored.contains(lc) && {
@@ -3938,9 +3948,6 @@ class GoldenHarness(spark0: SparkSession) extends HiveStatements(spark0) {
       true
     }
   }
-
-  override protected def partitionColsOf(table: String): Seq[String] =
-    tablePartCols.getOrElse(table.toLowerCase, Nil)
 
   override protected def parseColumnList(cols: String): StructType =
     colSchema(cols)

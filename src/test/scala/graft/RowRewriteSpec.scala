@@ -151,4 +151,64 @@ class RowRewriteSpec extends SparkSpec {
     assignedCast("cast_mrg")(t => h.sql(s"MERGE INTO $t t USING cast_src " +
       "s ON t.k = s.k WHEN MATCHED THEN UPDATE SET n = s.n"))
   }
+
+  test("MERGE with a parenthesised USING subquery casts the source " +
+      "value like the source-view MERGE") {
+    assignedCast("cast_mrgq")(t => h.sql(s"MERGE INTO $t t USING (" +
+      "SELECT 2 AS k, CAST(2.7 AS DECIMAL(3,1)) AS n) s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET n = s.n"))
+  }
+
+  test("parseMerge ends a parenthesised source at its balanced close") {
+    val src = "(SELECT c_custkey AS acct, c_name AS name, c_acctbal + 5 " +
+      "AS balance FROM customer WHERE c_custkey % 20 = 3)"
+    val clauses = "WHEN MATCHED THEN UPDATE SET balance = s.balance " +
+      "WHEN NOT MATCHED THEN INSERT VALUES (s.acct, s.name, s.balance)"
+    assert(HiveStatements.parseMerge(s"MERGE INTO accounts t USING $src " +
+      s"s ON t.acct = s.acct $clauses") ===
+      Some(("accounts", "t", src, "s", "t.acct = s.acct", clauses)))
+    assert(HiveStatements.parseMerge("MERGE INTO tm USING (SELECT " +
+      "CAST(2.7 AS DECIMAL(3,1)) AS n) AS s ON tm.k = s.k WHEN MATCHED " +
+      "THEN DELETE").map(_._3) ===
+      Some("(SELECT CAST(2.7 AS DECIMAL(3,1)) AS n)"))
+  }
+
+  test("IMPORT of a new table creates a partitioned catalog table") {
+    val dir = java.nio.file.Files.createTempDirectory("rowrw_dp")
+      .toString + "/e"
+    val tables = Seq("imp_dp", "imp_dp2", "imp_dp3", "imp_dp4")
+    tables.foreach(t => h.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      h.sql("CREATE TABLE imp_dp (k INT) PARTITIONED BY (p STRING) " +
+        "STORED AS PARQUET")
+      h.sql("INSERT INTO imp_dp PARTITION (p) VALUES (1, 'a'), (2, 'b')")
+      h.sql(s"EXPORT TABLE imp_dp TO '$dir'")
+      h.sql(s"IMPORT TABLE imp_dp2 FROM '$dir'")
+      assert(spark.sessionState.catalog.getTempView("imp_dp2").isEmpty)
+      assert(rowsOf(h.sql("SHOW PARTITIONS imp_dp2").get) ===
+        Seq("[p=a]", "[p=b]"))
+      assert(rowsOf(spark.newSession().table("imp_dp2")) ===
+        Seq("[1,a]", "[2,b]"))
+      // a dump written without the partition file imports unpartitioned
+      new java.io.File(s"$dir/_graft_partitions").delete()
+      h.sql(s"IMPORT TABLE imp_dp3 FROM '$dir'")
+      assert(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("imp_dp3"))
+        .partitionColumnNames.isEmpty)
+      assert(rowsOf(spark.newSession().table("imp_dp3")) ===
+        Seq("[1,a]", "[2,b]"))
+      assert(!h.meta.tableKind.get("imp_dp3").contains("EXTERNAL_TABLE"))
+      // IMPORT EXTERNAL ... LOCATION: an EXTERNAL table holding its
+      // rows at that location
+      val loc = s"$dir-ext"
+      h.sql(s"IMPORT EXTERNAL TABLE imp_dp4 FROM '$dir' LOCATION '$loc'")
+      val ext = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier("imp_dp4"))
+      assert(ext.tableType ===
+        org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
+      assert(ext.location.getPath === loc)
+      assert(h.meta.tableKind("imp_dp4") === "EXTERNAL_TABLE")
+      assert(rowsOf(spark.read.parquet(loc)) === Seq("[1,a]", "[2,b]"))
+    } finally tables.foreach(t => h.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 }
