@@ -16,6 +16,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * (ref: `ql/exec/FunctionRegistry.java:193-533`). The scale posture in
   * `conf` targets a 1000-executor / 100 TB deployment even though tests
   * run locally.
+  *
+  * `session()` also names the `file:` FileSystem, [[EngineLocalFileSystem]]
+  * (and [[EngineLocalFs]] for FileContext). Otherwise `hive-exec`'s
+  * ServiceLoader entry makes Hive's `ProxyLocalFileSystem` the `file:`
+  * class, and without `libhadoop` it forks `chmod` for every file and
+  * directory a write makes and `readlink` for every FileContext rename:
+  * about 245 subprocesses per pass of perfbench's 21-statement HiveQL
+  * script, at 1.3-1.6 ms each on a 4-core host (an in-process
+  * permission set takes 0.005-0.011 ms).
   */
 object Engine {
 
@@ -112,6 +121,12 @@ object Engine {
       // many short queries in one JVM
       .config("spark.cleaner.periodicGC.interval", "1min")
       .config(CodegenCacheKey, CodegenCacheEntries.toString)
+      // Hadoop caches one FileSystem per scheme per JVM, made from the
+      // conf of its first use, so these take effect only in the
+      // builder that creates the SparkContext
+      .config("spark.hadoop.fs.file.impl", classOf[EngineLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[EngineLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.Registry.registerAll(spark)
@@ -122,7 +137,9 @@ object Engine {
     * including externally-built ones (the driver's smoke test hands us
     * its own); per-session settings stay as the caller set them. A
     * generated-code cache smaller than `CodegenCacheEntries` cannot be
-    * resized here, so it gets one WARN. */
+    * resized here, so it gets one WARN. Nor can the `file:` FileSystem
+    * be swapped: Hadoop caches one per scheme per JVM, so a session
+    * built elsewhere keeps its own (its writes fork `chmod`). */
   def prepare(spark: SparkSession): SparkSession = {
     functions.Registry.registerAll(spark)
     conf.foreach { case (k, v) => spark.conf.set(k, v) }

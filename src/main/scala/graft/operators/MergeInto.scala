@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.CharType
 
 /** Row-level UPDATE / DELETE / MERGE over plain files (SURVEY.md §7.3
   * hard list), and the rewrite of a schema change old files cannot
@@ -166,11 +167,22 @@ object MergeInto {
           .unionByName(insertsOf(target, target.select(col(m.key)), m)
             .select(pcs: _*))
     }
-    val affRows = affected.distinct().collect().toSeq
+    // each tuple's raw values (they prune the scan), then the strings
+    // the writer names its directories by: Spark's own cast (JVM
+    // toString differs, e.g. a timestamp's ".0"), except that a CHAR
+    // value keeps the padding its cast to string trims
+    val rendered = partitionCols.map(c => (affected.schema(c).dataType match {
+      case _: CharType => col(c)
+      case _ => col(c).cast("string")
+    }).as(s"__rendered_$c"))
+    val affRows = affected.select(pcs ++ rendered: _*)
+      .distinct().collect().toSeq
+    val n = partitionCols.length
     rewritePartitions(spark,
       transform(prunedTarget(target, partitionCols, affRows), change,
         Some(target)),
-      path, partitionCols, affRows, format)
+      path, partitionCols, affRows.map(r => partitionCols.zipWithIndex
+        .map { case (c, i) => c -> r.getString(n + i) }), format)
   }
 
   /** Hive cardinality check (enforce.cardinality.check): error only
@@ -241,72 +253,65 @@ object MergeInto {
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "__cow_tmp")
-    df.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    swapInto(fs, tmp, dst)
+    try {
+      df.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
+      swapInto(fs, tmp, dst)
+    } finally fs.delete(tmp, true)
   }
 
-  /** Partition-scoped copy-on-write: stage only the partitions in `aff`
-    * (the distinct affected partition tuples), then swap each staged
-    * partition directory into the table. A partition whose rows are ALL
-    * removed produces no staged directory — its live directory is
-    * deleted so the removed rows don't survive. The table must be
-    * physically partitioned by `partitionCols` (written with
-    * `partitionBy`). `affRows` is the caller-collected
-    * distinct partition-tuple set — bounded by partition count, not
-    * row count — and the same tuples already pruned the target scan
-    * `df` was computed from. Returns the specs of the affected
-    * partitions that staged rows. */
+  /** Partition-scoped copy-on-write: stage only the affected
+    * partitions, then swap each staged partition directory into the
+    * table. A partition whose rows are ALL removed produces no staged
+    * directory — its live directory is deleted so the removed rows
+    * don't survive. The table must be physically partitioned by
+    * `partitionCols` (written with `partitionBy`). `specs` are the
+    * caller-collected distinct affected tuples as (column, rendered
+    * value) — bounded by partition count, not row count — and the same
+    * tuples already pruned the target scan `df` was computed from. The
+    * staging directory never outlives the call. Returns the specs of
+    * the affected partitions that staged rows. */
   private def rewritePartitions(spark: SparkSession, df: DataFrame,
       path: String, partitionCols: Seq[String],
-      affRows: Seq[org.apache.spark.sql.Row], format: String)
+      specs: Seq[Seq[(String, String)]], format: String)
       : Seq[Map[String, String]] = {
-    if (affRows.isEmpty) return Nil // nothing matched or inserted: no-op
+    if (specs.isEmpty) return Nil // nothing matched or inserted: no-op
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "__cow_tmp")
-    // `df` is already computed from the partition-pruned target; the
-    // insert side may carry rows only for affected partitions too
-    // (affI covers every insert partition), so it stages directly
-    df.write.mode(SaveMode.Overwrite).format(format)
-      .partitionBy(partitionCols: _*).save(tmp.toString)
-    val stagedRels = partitionDirs(fs, tmp, partitionCols.length).map {
-      staged =>
-        val rel = staged.toUri.getPath.stripPrefix(tmp.toUri.getPath)
-          .stripPrefix("/")
-        val target = new Path(dst, rel)
-        fs.mkdirs(target.getParent)
-        swapInto(fs, staged, target)
-        rel
-    }.toSet
-    // affected partitions that staged nothing were fully emptied:
-    // remove their live directories. Values are rendered via Spark's own
-    // Cast-to-string (the writer path's rendering) — JVM toString differs
-    // for timestamps (trailing ".0") and would never match a live dir.
-    val affLocal = spark.createDataFrame(
-      java.util.Arrays.asList(affRows: _*),
-      df.select(partitionCols.map(col): _*).schema)
-    val affRendered = affLocal.select(partitionCols.map(c =>
-      col(c).cast("string").as(c)): _*).collect()
-    val live = affRendered.toSeq.flatMap { row =>
-      val spec = partitionCols.zipWithIndex.map { case (c, i) =>
-        c -> (if (row.isNullAt(i)) null else row.getString(i)) }
-      val rel = spec.map { case (c, v) =>
-        ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")
-      val staged = stagedRels.contains(rel)
-      if (!staged) {
-        fs.delete(new Path(dst, rel), true)
-        // prune now-empty ancestor partition dirs (multi-level partitioning)
-        var parent = new Path(dst, rel).getParent
-        while (parent != null && parent.toUri.getPath != dst.toUri.getPath &&
-            fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-          fs.delete(parent, false)
-          parent = parent.getParent
+    try {
+      // `df` is already computed from the partition-pruned target; the
+      // insert side may carry rows only for affected partitions too
+      // (affI covers every insert partition), so it stages directly
+      df.write.mode(SaveMode.Overwrite).format(format)
+        .partitionBy(partitionCols: _*).save(tmp.toString)
+      val stagedRels = partitionDirs(fs, tmp, partitionCols.length).map {
+        staged =>
+          val rel = staged.toUri.getPath.stripPrefix(tmp.toUri.getPath)
+            .stripPrefix("/")
+          val target = new Path(dst, rel)
+          fs.mkdirs(target.getParent)
+          swapInto(fs, staged, target)
+          rel
+      }.toSet
+      // affected partitions that staged nothing were fully emptied:
+      // remove their live directories
+      specs.flatMap { spec =>
+        val rel = spec.map { case (c, v) =>
+          ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")
+        val staged = stagedRels.contains(rel)
+        if (!staged) {
+          fs.delete(new Path(dst, rel), true)
+          // prune now-empty ancestor partition dirs (multi-level partitioning)
+          var parent = new Path(dst, rel).getParent
+          while (parent != null && parent.toUri.getPath != dst.toUri.getPath &&
+              fs.exists(parent) && fs.listStatus(parent).isEmpty) {
+            fs.delete(parent, false)
+            parent = parent.getParent
+          }
         }
+        Option.when(staged)(spec.toMap)
       }
-      Option.when(staged)(spec.toMap)
-    }
-    fs.delete(tmp, true)
-    live
+    } finally fs.delete(tmp, true)
   }
 
   /** Leaf `col=value/...` partition directories at the given depth. */

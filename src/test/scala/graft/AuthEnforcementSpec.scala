@@ -21,14 +21,7 @@ class AuthEnforcementSpec extends SparkSpec {
     finally src.close()
   }
 
-  private def fresh(names: String*): Unit = names.foreach { n =>
-    spark.sql(s"DROP TABLE IF EXISTS $n")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    val d = new java.io.File("spark-warehouse/" + n)
-    if (d.exists()) rm(d)
-  }
+  private def fresh(names: String*): Unit = names.foreach(freshTable)
 
   private def withEnforcement(body: HiveStatements => Unit): Unit = {
     spark.conf.set("spark.graft.authorization", "true")

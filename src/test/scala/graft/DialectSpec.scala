@@ -869,7 +869,8 @@ class DialectSpec extends SparkSpec {
       "data and the schema") {
     val h = new HiveStatements(spark)
     val exp = s"${java.nio.file.Files.createTempDirectory("graft_exp")}/e"
-    spark.sql("DROP TABLE IF EXISTS w_exp")
+    freshTable("w_exp")
+    freshTable("w_imp")
     h.sql("CREATE TABLE w_exp (id BIGINT, v STRING, w DOUBLE) " +
       "STORED AS PARQUET")
     h.sql("INSERT INTO w_exp VALUES (1, 'a', 1.5), (2, 'b', 2.5)")

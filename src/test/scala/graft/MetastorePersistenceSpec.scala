@@ -8,17 +8,6 @@ package graft
   */
 class MetastorePersistenceSpec extends SparkSpec {
 
-  /** DROP TABLE IF EXISTS + clear a stale warehouse dir a previous
-    * aborted run may have left (LOCATION_ALREADY_EXISTS guard). */
-  private def freshTable(name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    val d = new java.io.File("spark-warehouse/" + name)
-    if (d.exists()) rm(d)
-  }
-
   private def render(h: HiveStatements, q: String): Seq[String] =
     h.sql(q).get.collect().map(_.toSeq.map {
       case null => ""

@@ -211,4 +211,31 @@ class RowRewriteSpec extends SparkSpec {
       assert(rowsOf(spark.read.parquet(loc)) === Seq("[1,a]", "[2,b]"))
     } finally tables.foreach(t => h.sql(s"DROP TABLE IF EXISTS $t"))
   }
+
+  test("UPDATE, a CHANGE rename and DELETE rewrite a table partitioned " +
+      "by CHAR and VARCHAR and leave no staging directory") {
+    freshTable("pr_ch")
+    def rows = rowsOf(spark.newSession().table("pr_ch"))
+    try {
+      h.sql("CREATE TABLE pr_ch (k INT, c CHAR(5)) PARTITIONED BY " +
+        "(p CHAR(3), q VARCHAR(4)) STORED AS PARQUET")
+      h.sql("INSERT INTO pr_ch PARTITION (p, q) VALUES (1, 'a', 'x', 'v'), " +
+        "(2, 'b', 'y', 'w')")
+      h.sql("UPDATE pr_ch SET c = 'q' WHERE k = 1")
+      assert(rows === Seq("[1,q    ,x  ,v]", "[2,b    ,y  ,w]"))
+      h.sql("ALTER TABLE pr_ch CHANGE c d CHAR(5)")
+      assert(spark.newSession().table("pr_ch").columns.toSeq ===
+        Seq("k", "d", "p", "q"))
+      assert(rows === Seq("[1,q    ,x  ,v]", "[2,b    ,y  ,w]"))
+      // emptying a partition removes its directories, named by the
+      // padded CHAR value
+      h.sql("DELETE FROM pr_ch WHERE k = 2")
+      assert(rows === Seq("[1,q    ,x  ,v]"))
+      assert(new java.io.File("spark-warehouse/pr_ch").list()
+        .filter(_.startsWith("p=")).toSeq === Seq("p=x  "))
+      assert(rowsOf(h.sql("SHOW PARTITIONS pr_ch").get) ===
+        Seq("[p=x  /q=v]", "[p=y  /q=w]"))
+      assert(!new java.io.File("spark-warehouse/pr_ch__cow_tmp").exists())
+    } finally freshTable("pr_ch")
+  }
 }
