@@ -87,11 +87,11 @@ object GraftSqlParser {
 }
 
 /** A dialect-surface statement (UPDATE/DELETE/MERGE/LOAD/EXPORT/
-  * IMPORT/Hive-shaped INSERT) as a lazy command: Spark's stock
-  * grammar rejects the text, so [[HiveStatements.plan]] defers the
-  * dispatch to RUN time — Spark executes a command exactly once and
-  * caches its (empty) result, surviving Spark Connect's re-parse of
-  * the statement text on every dataframe operation. */
+  * IMPORT/Hive-shaped INSERT) as a lazy command: Spark rejects the
+  * text or cannot plan it over v1 tables, so [[HiveStatements.plan]]
+  * defers the dispatch to RUN time — Spark executes a command exactly
+  * once and caches its (empty) result, surviving Spark Connect's
+  * re-parse of the statement text on every dataframe operation. */
 case class HiveStatementCommand(
     @transient statements: HiveStatements, rewritten: String)
     extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
@@ -124,7 +124,8 @@ case class GraftPersistCommand(
   override def run(session: org.apache.spark.sql.SparkSession)
       : Seq[org.apache.spark.sql.Row] = {
     val rows =
-      org.apache.spark.sql.GraftSqlShim.runPlan(session, inner)
+      org.apache.spark.sql.GraftSqlShim.dataFrame(session, inner)
+        .collect().toSeq
     statements.persistAfter(text)
     rows
   }

@@ -276,6 +276,18 @@ class HiveDialect(val spark: SparkSession) {
     q => replaceInCode(q, r)(f)
   }
 
+  /** Hive's column-less MERGE insert (`WHEN NOT MATCHED THEN INSERT
+    * VALUES (...)`, the target's columns in order) with the target's
+    * column list, which Spark's grammar requires; left as is when the
+    * target does not resolve. */
+  private val mergeInsertColumns: String => String =
+    code("(?i)\\bthen\\s+insert\\s+values\\b")(m =>
+      "(?is)\\s*merge\\s+into\\s+`?([\\w.]+)`?".r.findPrefixMatchOf(m.source)
+        .flatMap(t => scala.util.Try(
+          spark.table(resolveNamespace(t.group(1))).columns).toOption)
+        .fold(m.matched)(_.map(c => s"`$c`")
+          .mkString("THEN INSERT (", ", ", ") VALUES")))
+
   /** The named text steps of [[rewrite]], in the order they apply.
     * Each matches code only: its pattern runs over the masked text
     * ([[HiveStatements.maskStringLiterals]]), so no trigger inside a
@@ -451,6 +463,7 @@ class HiveDialect(val spark: SparkSession) {
     // (always-mangle: CREATEd-under-db tables live as `db__name`)
     "namespace" -> resolveNamespace _,
     "hash-star-data-columns" -> hashStarDataColumns _,
+    "merge-insert-columns" -> mergeInsertColumns,
     // SORT BY + LIMIT: Hive's qtest runs one reducer, so its partial
     // sort IS total and LIMIT takes the global extremes; Spark's
     // partition-local sort would feed LIMIT arbitrary rows. ORDER BY

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
   CatalogTable, CatalogTablePartition, CatalogTableType, CatalogUtils}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{DataType, StringType, StructField,
   StructType}
 
@@ -14,7 +14,8 @@ import graft.operators.MergeInto
 import scala.util.matching.Regex
 
 /** Hive SQL statement dialect: the statement surface Hive accepts but
-  * Spark's parser rejects — ACID `UPDATE`/`DELETE`/`MERGE INTO`
+  * Spark cannot run over v1 tables — ACID `UPDATE`/`DELETE`/`MERGE
+  * INTO`, taken from Spark's own parse tree
   * (ref: ql/parse/UpdateDeleteSemanticAnalyzer.java:62,86,327,594),
   * `LOAD DATA`, `EXPORT`/`IMPORT`
   * (ql/parse/ExportSemanticAnalyzer.java, ImportSemanticAnalyzer.java),
@@ -215,9 +216,17 @@ class HiveStatements(val spark: SparkSession) {
             partitionColumnNames = partCols)
           scala.util.Try {
             cat.createTable(ct, ignoreIfExists = true)
-            // partition registry rebuilds from the directory layout
-            if (partCols.nonEmpty)
+            // partitions rebuild from the directory layout, and the
+            // metadata-only ones (ALTER TABLE ADD, or emptied by DML)
+            // from the ledger: they may have no directory
+            if (partCols.nonEmpty) {
               spark.sql(s"MSCK REPAIR TABLE `$name`")
+              val found = cat.listPartitions(ident).map(_.spec).toSet
+              val store = ct.storage.copy(locationUri = None)
+              cat.createPartitions(ident, meta.addedParts.getOrElse(name,
+                Nil).toSeq.map(_.toMap).filterNot(found)
+                .map(CatalogTablePartition(_, store)), ignoreIfExists = true)
+            }
           }
         }
     }
@@ -1164,9 +1173,9 @@ class HiveStatements(val spark: SparkSession) {
     dialect.observeNamespace(raw)
     observeMeta(dialect.resolveNamespace(raw))
     val q = dialect.rewrite(hiveCreateRewrite(stripConstraintsRewrite(raw)))
-    // row-level DML parses in Spark's grammar but plans only against
-    // DSv2 catalogs — the dialect owns it here (MergeInto
-    // copy-on-write), as for LOAD/EXPORT/IMPORT
+    // row-level DML: execute() takes it from Spark's own parse tree,
+    // but Spark plans it only against DSv2 catalogs, so it runs as a
+    // command (MergeInto copy-on-write), as LOAD/EXPORT/IMPORT do
     val ql = q.trim.take(200).split("\\s+").mkString(" ").toLowerCase
     if (ql.startsWith("update ") || ql.startsWith("delete ") ||
         ql.startsWith("merge ") || ql.startsWith("load data") ||
@@ -1982,20 +1991,9 @@ class HiveStatements(val spark: SparkSession) {
     * traversal would let `WHERE x IN (SELECT y FROM secret)` skip
     * the SELECT check on `secret`. Regex fallback when the text is
     * dialect-only. */
-  private def inputTablesOf(q: String): Seq[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
-    scala.util.Try {
-      val plan = org.apache.spark.sql.catalyst.parser
-        .CatalystSqlParser.parsePlan(q)
-      val cte = plan.collectWithSubqueries { case w: UnresolvedWith =>
-        w.cteRelations.map(_._1.toLowerCase) }.flatten.toSet
-      plan.collectWithSubqueries { case r: UnresolvedRelation =>
-        r.multipartIdentifier }
-        .filterNot(id =>
-          id.length == 1 && cte.contains(id.head.toLowerCase))
-        .distinct
-    }.getOrElse {
+  private def inputTablesOf(q: String): Seq[Seq[String]] =
+    scala.util.Try(relationsOf(org.apache.spark.sql.catalyst.parser
+      .CatalystSqlParser.parsePlan(q))).getOrElse {
       "(?is)(?:\\bfrom|\\bjoin)\\s+`?([A-Za-z_][\\w.]*)`?".r
         .findAllMatchIn(q)
         .map(_.group(1).split('.').toSeq)
@@ -2003,6 +2001,19 @@ class HiveStatements(val spark: SparkSession) {
           .contains(id.head.toLowerCase))
         .toSeq.distinct
     }
+
+  /** The tables an unresolved `plan` reads ([[inputTablesOf]]). */
+  private def relationsOf(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
+    val cte = plan.collectWithSubqueries { case w: UnresolvedWith =>
+      w.cteRelations.map(_._1.toLowerCase) }.flatten.toSet
+    plan.collectWithSubqueries { case r: UnresolvedRelation =>
+      r.multipartIdentifier }
+      .filterNot(id => id.length == 1 && cte.contains(id.head.toLowerCase))
+      .distinct
   }
 
   /** Partition columns for EXPLAIN AUTHORIZATION's per-partition
@@ -2138,9 +2149,6 @@ class HiveStatements(val spark: SparkSession) {
       "(select\\b.*)$").r
     val loadRe = ("(?is)^load\\s+data\\s+(?:local\\s+)?inpath\\s+.*?" +
       s"(?:into|overwrite\\s+into)\\s+table\\s+$tbl.*$$").r
-    val updateRe = s"(?is)^update\\s+$tbl\\s.*$$".r
-    val deleteRe = s"(?is)^delete\\s+from\\s+$tbl.*$$".r
-    val mergeRe = s"(?is)^merge\\s+into\\s+$tbl(?:\\s+\\w+)?\\s+using\\s+(.*)$$".r
     val insertRe2 = ("(?is)insert\\s+(overwrite|into)\\s+(?:table\\s+)?" +
       s"$tbl").r
 
@@ -2175,24 +2183,46 @@ class HiveStatements(val spark: SparkSession) {
         dbCheck(dbOfTarget(t)) ++ inputs(sel))
       case loadRe(t) =>
         run("LOAD", Seq(mk(t, Seq("INSERT", "DELETE"))))
-      // DELETE/UPDATE rewrite into INSERT..SELECT over the table
-      // (UpdateDeleteSemanticAnalyzer), so the table is BOTH the
-      // written output (DELETE/UPDATE priv) and a read input (SELECT)
-      case updateRe(t) => run("QUERY",
-        Seq(mk(t, Seq("UPDATE"), "UPDATE"), mk(t, Seq("SELECT"))) ++
-          inputs(q).filterNot(_.table == mk(t, Nil).table))
-      case deleteRe(t) =>
-        run("QUERY", Seq(mk(t, Seq("DELETE"), "DELETE"),
-          mk(t, Seq("SELECT"))))
-      case mergeRe(t, rest) =>
-        val restL = rest.toLowerCase
-        val req = (if (restL.contains("when matched") &&
-            restL.contains("update")) Seq("UPDATE") else Nil) ++
-          (if (restL.contains("delete")) Seq("DELETE") else Nil) ++
-          (if (restL.contains("insert")) Seq("INSERT") else Nil)
-        val src = "(?is)^`?([\\w.]+)`?".r.findFirstMatchIn(rest.trim)
-          .map(_.group(1)).toSeq.map(s => mk(s, Seq("SELECT")))
-        run("QUERY", Seq(mk(t, req, "UPDATE")) ++ src)
+      // UPDATE, DELETE and MERGE, from the plan of the text execute()
+      // runs: the target needs its actions' kinds (and SELECT for the
+      // INSERT..SELECT Hive rewrites UPDATE/DELETE into); all else read,
+      // subqueries included, needs SELECT. One that does not parse: denied.
+      case _ if ql.startsWith("update ") || ql.startsWith("delete from") ||
+          ql.startsWith("merge into") =>
+        import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+        import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+        import org.apache.spark.sql.catalyst.plans.logical._
+        def denied = new AuthEnforcement.HiveAccessControlException(
+          "Permission denied: row-level DML does not parse")
+        val p = scala.util.Try(parseDml(dialect.rewrite(q)))
+          .getOrElse(throw denied)
+        // the rewrite binds a session database's `db.t` as `db__t`
+        def named(id: Seq[String]) = { val n = id.mkString(".")
+          dbOfPhysical(n.toLowerCase).fold(n)(db =>
+            s"$db.${n.drop(db.length + 2)}") }
+        def nameOf(target: LogicalPlan) = named(target.collectFirst {
+          case r: UnresolvedRelation => r.multipartIdentifier }.get)
+        val (writes, sources) = p match {
+          case u: UpdateTable => val t = nameOf(u.table)
+            (Seq(mk(t, Seq("UPDATE"), "UPDATE"), mk(t, Seq("SELECT"))), Nil)
+          case d: DeleteFromTable => val t = nameOf(d.table)
+            (Seq(mk(t, Seq("DELETE"), "DELETE"), mk(t, Seq("SELECT"))), Nil)
+          case m: MergeIntoTable =>
+            val kinds = (m.matchedActions ++ m.notMatchedActions ++
+              m.notMatchedBySourceActions).map {
+              case _: DeleteAction => "DELETE"
+              case _: InsertAction | _: InsertStarAction => "INSERT"
+              case _ => "UPDATE"
+            }.toSet
+            (Seq(mk(nameOf(m.targetTable),
+              Seq("UPDATE", "DELETE", "INSERT").filter(kinds), "UPDATE")),
+              relationsOf(m.sourceTable))
+          case _ => throw denied
+        }
+        val reads = sources ++ p.expressions.flatMap(_.collect {
+          case s: SubqueryExpression => relationsOf(s.plan) }.flatten)
+        run("QUERY", (writes ++ reads.map(id => mk(named(id), Seq("SELECT"))))
+          .distinctBy(c => (c.db, c.table, c.required)))
       case _ if ql.startsWith("insert") || (ql.startsWith("from") &&
           ql.contains("insert")) =>
         val outs = insertRe2.findAllMatchIn(q).map { m =>
@@ -2767,16 +2797,26 @@ class HiveStatements(val spark: SparkSession) {
     * catalog table takes [[MergeInto.commit]]'s copy-on-write under its
     * location, so every session sees the rows; a partition it creates
     * joins the catalog, an emptied one stays (Hive keeps partitions on
-    * DML). A session table (temp view) gets [[rebuild]] of the same
-    * row transform. */
+    * DML; a renamed one leaves) and, with no directory left, is kept as
+    * a metadata-only partition so it survives a restart. A session
+    * table (temp view) gets [[rebuild]] of the same row transform. */
   private def commit(table: String, change: MergeInto.Change): Unit =
     catalogTable(table) match {
       case Some(ct) =>
         val format = ct.provider.getOrElse("parquet").toLowerCase
         require(format == "parquet" || format == "orc",
           s"row-level rewrite of a $format table: $table")
-        addCatalogPartitions(ct, MergeInto.commit(spark.table(table),
-          ct.location.toString, change, ct.partitionColumnNames, format))
+        val (kept, emptied) = MergeInto.commit(spark.table(table),
+          ct.location.toString, change, ct.partitionColumnNames, format)
+          .partition(_._2)
+        addCatalogPartitions(ct, kept.map(_._1))
+        val cat = spark.sessionState.catalog
+        if (!change.isInstanceOf[MergeInto.MovePartition])
+          emptied.map(_._1).filter(s =>
+            cat.listPartitions(ct.identifier, Some(s)).nonEmpty).foreach(s =>
+            meta.addedParts.getOrElseUpdate(meta.resolveLc(table),
+              scala.collection.mutable.LinkedHashSet()) +=
+              ct.partitionColumnNames.map(c => c -> s(c)))
         spark.catalog.refreshTable(table)
       case None =>
         rebuild(table, MergeInto.transform(spark.table(table), change))
@@ -3014,28 +3054,10 @@ class HiveStatements(val spark: SparkSession) {
         ql.startsWith("create role ") || ql.startsWith("drop role ") ||
         ql.startsWith("set role ")) &&
         auth.executeStatement(q, dialect.currentDb)) return true
-    if (ql.startsWith("update ")) q match {
-      case updateRe(t, sets, w) =>
-        commit(t.split('.').last, MergeInto.Update(
-          Option(w).map(expr).getOrElse(lit(true)),
-          splitTop(sets, ',').map { a =>
-            val kv = a.split("=", 2)
-            kv(0).trim.replace("`", "") -> expr(kv(1).trim)
-          }.toMap))
-        true
-      case _ => false
-    } else if (ql.startsWith("delete from")) q match {
-      case deleteRe(t, w) =>
-        commit(t.split('.').last,
-          MergeInto.Delete(Option(w).map(expr).getOrElse(lit(true))))
-        true
-      case _ => false
-    } else if (ql.startsWith("merge into")) parseMerge(q) match {
-      case Some((t, tAlias, src, sAlias, on, clauses)) =>
-        executeMerge(t.split('.').last, Option(tAlias), src,
-          Option(sAlias), on, clauses)
-        true
-      case None => false
+    if (ql.startsWith("update ") || ql.startsWith("delete from") ||
+        ql.startsWith("merge into")) {
+      executeRowLevel(q)
+      true
     } else if (ql.startsWith("create index")) {
       // Hive 2.x index DDL: record the definition (SHOW INDEX serves
       // it); the engine's scans don't consult index tables — Spark's
@@ -3408,81 +3430,72 @@ class HiveStatements(val spark: SparkSession) {
     else false
   }
 
-  /** MERGE INTO: parse the ON equality and the ordered WHEN clause
-    * list, then [[commit]] the merge. */
-  private def executeMerge(table: String, tAlias: Option[String],
-      srcText: String, sAlias: Option[String], on: String,
-      clauseText: String): Unit = {
-    val source =
-      if (srcText.startsWith("("))
-        spark.sql(srcText.stripPrefix("(").stripSuffix(")"))
-      else spark.table(srcText.split('.').last)
-    // rewrite user aliases to MergeInto's canonical t/s prefixes
-    val ta = tAlias.getOrElse(table)
-    val sa = sAlias.getOrElse(srcText)
-    def canon(e: String): String = e
-      .replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(ta) + "\\.",
-        "t.")
-      .replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(sa) + "\\.",
-        "s.")
-    var source2 = source
-    // canonicalize the ON clause's aliases first: the t./s. qualifiers
-    // are AUTHORITATIVE for which side owns each key name — inferring
-    // from the source's column set misfires when the source carries an
-    // unrelated column with the target key's name
-    val onC = canon(on)
-    val key = "(?is)\\s*(\\w+)\\.(\\w+)\\s*=\\s*(\\w+)\\.(\\w+)\\s*".r
-      .findFirstMatchIn(onC) match {
-      case Some(m) if m.group(2).equalsIgnoreCase(m.group(4)) =>
-        m.group(2)
-      case Some(m) =>
-        // differently-named key columns (ON t.a = s.a1): expose the
-        // source key under the target's name; the original column
-        // stays for the WHEN clauses' s.<col> references
-        val (tk, sk) =
-          if (m.group(1).equalsIgnoreCase("t")) (m.group(2), m.group(4))
-          else if (m.group(3).equalsIgnoreCase("t"))
-            (m.group(4), m.group(2))
-          else if (source.columns.exists(_.equalsIgnoreCase(m.group(4))))
-            (m.group(2), m.group(4))
-          else (m.group(4), m.group(2))
-        // ALWAYS rebind: a pre-existing source column under the
-        // target key's name is unrelated — the join must see the ON
-        // clause's source key (withColumn overwrites in place)
-        source2 = source2.withColumn(tk, col(sk))
-        tk
-      case _ => throw new IllegalArgumentException(
-        s"MERGE: ON must be a single same-name key equality, got: $on")
+  /** UPDATE, DELETE and MERGE from the plan Spark's stock grammar
+    * parses — not the session parser, which may route the text back
+    * here. Conditions, assignments and clauses keep their literals and
+    * resolve against the sides as the statement names them; [[commit]]
+    * runs the change. A statement that does not parse, or a form
+    * outside Hive's surface, throws before anything runs. */
+  private def executeRowLevel(q: String): Unit = {
+    import org.apache.spark.sql.GraftSqlShim.{column, dataFrame}
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+      UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def outside(form: String) = new IllegalArgumentException(
+      s"$form is outside Hive's row-level DML surface")
+    def assigned(as: Seq[Assignment]): Map[String, Column] = as.map(a =>
+      a.key.asInstanceOf[UnresolvedAttribute].nameParts.last ->
+        column(a.value)).toMap
+    def alias(p: LogicalPlan): String = p match {
+      case a: SubqueryAlias => a.alias
+      case r: UnresolvedRelation => r.multipartIdentifier.last
+      case _ => throw outside("MERGE USING a subquery with no alias")
     }
-    val tCols = spark.table(table).columns.toSeq
-    var matched = Seq.empty[MergeInto.MatchedAction]
-    var notMatched = Seq.empty[MergeInto.InsertAction]
-    whenClauseRe.findAllMatchIn(clauseText).foreach { m =>
-      val not = m.group(1) != null
-      val cond = Option(m.group(2)).map(c => expr(canon(c)))
-      val action = m.group(3).trim
-      val al = action.toLowerCase
-      if (al.startsWith("delete"))
-        matched :+= MergeInto.DeleteAction(cond)
-      else if (al.startsWith("update")) {
-        val sets = splitTop(
-          action.replaceFirst("(?is)update\\s+set\\s+", ""), ',')
-        matched :+= MergeInto.UpdateAction(sets.map { a =>
-          val kv = a.split("=", 2)
-          kv(0).trim.replace("`", "").split('.').last ->
-            expr(canon(kv(1).trim))
-        }.toMap, cond)
-      } else if (al.startsWith("insert") && not) {
-        val vals = "(?is)insert\\s+values\\s*\\((.*)\\)".r
-          .findFirstMatchIn(action).map(x => splitTop(x.group(1), ','))
-          .getOrElse(Nil)
-        notMatched :+= MergeInto.InsertAction(
-          tCols.zip(vals).map { case (c, v) =>
-            c -> expr(canon(v)) }.toMap, cond)
-      }
+    parseDml(q) match {
+      case UpdateTable(r: UnresolvedRelation, set, cond) =>
+        commit(r.multipartIdentifier.last, MergeInto.Update(
+          cond.map(column).getOrElse(lit(true)), assigned(set)))
+      case DeleteFromTable(r: UnresolvedRelation, cond) =>
+        commit(r.multipartIdentifier.last, MergeInto.Delete(column(cond)))
+      case m: MergeIntoTable =>
+        if (m.notMatchedBySourceActions.nonEmpty)
+          throw outside("MERGE WHEN NOT MATCHED BY SOURCE")
+        val table = m.targetTable.collectFirst {
+          case r: UnresolvedRelation => r.multipartIdentifier.last }.get
+        def cond(a: MergeAction) = a.condition.map(column)
+        val matched = m.matchedActions.map {
+          case a: UpdateAction =>
+            MergeInto.UpdateAction(assigned(a.assignments), cond(a))
+          case a: DeleteAction => MergeInto.DeleteAction(cond(a))
+          case _ => throw outside("MERGE UPDATE SET *")
+        }
+        // an INSERT column the statement does not list is NULL
+        lazy val tCols = spark.table(table).columns.toSeq
+        val notMatched = m.notMatchedActions.map {
+          case a: InsertAction =>
+            val vs = assigned(a.assignments)
+              .map { case (c, v) => c.toLowerCase -> v }
+            MergeInto.InsertAction(tCols.map(c =>
+              c -> vs.getOrElse(c.toLowerCase, lit(null))).toMap, cond(a))
+          case _ => throw outside("MERGE INSERT *")
+        }
+        commit(table, MergeInto.Merge(dataFrame(spark, m.sourceTable),
+          column(m.mergeCondition), matched, notMatched,
+          (alias(m.targetTable), alias(m.sourceTable))))
+      case _ => throw outside(
+        "row-level DML: " + q.linesIterator.mkString(" ").take(200))
     }
-    commit(table, MergeInto.Merge(source2, key, matched, notMatched))
   }
+
+  /** UPDATE, DELETE or MERGE text as Spark's stock grammar parses it. */
+  private def parseDml(q: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(q)
+    catch {
+      case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+        throw new IllegalArgumentException(
+          s"row-level DML does not parse: ${e.getMessage}", e)
+    }
 }
 
 object HiveStatements {
@@ -3692,37 +3705,6 @@ object HiveStatements {
       }
     }
 
-  private[graft] val updateRe =
-    "(?is)^update\\s+`?([\\w.]+)`?\\s+set\\s+(.*?)(?:\\s+where\\s+(.*))?$"
-      .r("t", "sets", "w")
-  private[graft] val deleteRe =
-    "(?is)^delete\\s+from\\s+`?([\\w.]+)`?(?:\\s+where\\s+(.*))?$"
-      .r("t", "w")
-  /** MERGE INTO t [[AS] ta] USING src [[AS] sa] ON cond WHEN ... →
-    * (t, ta, src, sa, cond, clauses), absent aliases null; a subquery
-    * source ends at its balanced close paren. */
-  def parseMerge(q: String)
-      : Option[(String, String, String, String, String, String)] =
-    mergeHeadRe.findPrefixMatchOf(q).flatMap { h =>
-      (if (q.startsWith("(", h.end)) balancedBody(q, h.end).map(_._2)
-       else "`?[\\w.]+`?".r.findPrefixMatchOf(q.substring(h.end))
-         .map(h.end + _.end)).flatMap { end =>
-        mergeTailRe.findPrefixMatchOf(q.substring(end)).map(m =>
-          (h.group(1), h.group(2), q.substring(h.end, end), m.group(1),
-            m.group(2), m.group(3)))
-      }
-    }
-
-  private val mergeHeadRe =
-    ("(?is)^merge\\s+into\\s+`?([\\w.]+)`?(?:\\s+as)?" +
-      "(?:\\s+(?!using\\b)(\\w+))?\\s+using\\s+").r
-  private val mergeTailRe =
-    ("(?is)(?:\\s+as)?(?:\\s+(?!on\\b)(\\w+))?\\s+on\\s+(.+?)\\s+" +
-      "(when\\s+.*)$").r
-  private[graft] val whenClauseRe =
-    ("(?is)when\\s+(not\\s+)?matched\\s*(?:and\\s+(.+?))?\\s*then\\s+" +
-      "(update\\s+set\\s+.+?|delete|insert\\s+values\\s*\\(.+?\\))\\s*" +
-      "(?=when\\s+(?:not\\s+)?matched|$)").r
   private[graft] val truncateRe =
     ("(?is)truncate\\s+table\\s+`?([\\w.]+)`?\\s*" +
       "(?:partition\\s*\\(([^)]*)\\))?\\s*" +

@@ -25,10 +25,8 @@ import org.apache.spark.sql.types.CharType
   * `WHEN MATCHED [AND cond] THEN UPDATE SET ... / DELETE` clauses plus
   * `WHEN NOT MATCHED [AND cond] THEN INSERT` clauses, first matching
   * clause wins, and multiple source rows matching one target row raise
-  * a cardinality violation (Hive's enforce.cardinality.check).
-  *
-  * In clause conditions and SET expressions the target row is aliased
-  * `t` and the source row `s` (e.g. `col("s.amount") > col("t.amount")`).
+  * a cardinality violation (Hive's enforce.cardinality.check). The ON
+  * condition is any boolean expression over both sides.
   *
   * Scale: pass `partitionCols` (the table's physical partitioning) and
   * only partitions containing matched or inserted rows are rewritten —
@@ -84,11 +82,19 @@ object MergeInto {
     * holds take the partition values in `to`. */
   case class MovePartition(cond: Column, to: Map[String, Column])
       extends Change
-  /** MERGE INTO target USING `source` ON target.key = source.key, with
-    * ordered matched / not-matched clause lists. */
-  case class Merge(source: DataFrame, key: String,
+  /** MERGE INTO target USING `source` ON `on`, with ordered matched /
+    * not-matched clause lists. `on`, the clause conditions and the
+    * assigned values name the target row by `aliases._1` and the
+    * source row by `aliases._2`. */
+  case class Merge(source: DataFrame, on: Column,
       matched: Seq[MatchedAction],
-      notMatched: Seq[InsertAction] = Seq(InsertAction())) extends Change
+      notMatched: Seq[InsertAction] = Seq(InsertAction()),
+      aliases: (String, String) = ("t", "s")) extends Change {
+    /** Target rows `t` joined with `src` on `on`, each under its alias. */
+    private[MergeInto] def join(t: DataFrame, how: String,
+        src: DataFrame = source): DataFrame =
+      t.alias(aliases._1).join(src.alias(aliases._2), on, how)
+  }
   /** A schema change's rewrite: every row becomes `project` of it.
     * Every partition is affected; partition values stay. */
   case class Reshape(project: DataFrame => DataFrame) extends Change
@@ -109,7 +115,7 @@ object MergeInto {
     * inserted value cast to its column's declared type (Hive's insert
     * cast), so a rewrite never changes a stored type. `whole` is the
     * full target when `t` is a partition-pruned scan of it — MERGE's
-    * cardinality check and not-matched test look at every key. Pure
+    * cardinality check and not-matched test look at every row. Pure
     * (no write); the copy-on-write [[commit]] and session tables both
     * compute through it. */
   def transform(t: DataFrame, change: Change,
@@ -119,9 +125,9 @@ object MergeInto {
     case MovePartition(cond, to) => assign(t, cond, to)
     case Reshape(project) => project(t)
     case m: Merge =>
-      val keys = whole.getOrElse(t).select(col(m.key))
-      cardinalityCheck(keys, m.source, m.key)
-      keptOf(t, m).unionByName(insertsOf(t, keys, m))
+      val all = whole.getOrElse(t)
+      cardinalityCheck(all, m)
+      keptOf(t, m).unionByName(insertsOf(t, all, m))
   }
 
   /** Commits `change` to the table at `path` (read as `target`, in
@@ -129,11 +135,11 @@ object MergeInto {
     * partitioning) only the affected partitions are read and
     * rewritten, in two passes: collect the affected partition tuples
     * from column-pruned scans, then transform the partition-pruned
-    * scan. Returns the specs (column -> rendered value) of the
-    * affected partitions that hold rows afterwards. */
+    * scan. Returns the spec (column -> rendered value) of each affected
+    * partition, and whether it holds rows afterwards. */
   def commit(target: DataFrame, path: String, change: Change,
       partitionCols: Seq[String] = Nil, format: String = "parquet")
-      : Seq[Map[String, String]] = {
+      : Seq[(Map[String, String], Boolean)] = {
     val assigned = (change match {
       case Update(_, set) => Seq(set)
       case m: Merge => m.matched.collect { case UpdateAction(set, _) => set }
@@ -160,12 +166,9 @@ object MergeInto {
       case m: Merge =>
         val anyMatched = m.matched.map(_.cond.getOrElse(lit(true)))
           .reduceOption(_ || _).getOrElse(lit(false))
-        target.alias("t").join(m.source.alias("s"),
-          col(s"t.${m.key}") === col(s"s.${m.key}"), "inner")
-          .filter(anyMatched)
-          .select(partitionCols.map(c => col(s"t.$c").as(c)): _*)
-          .unionByName(insertsOf(target, target.select(col(m.key)), m)
-            .select(pcs: _*))
+        m.join(target, "inner").filter(anyMatched)
+          .select(partitionCols.map(c => col(s"${m.aliases._1}.$c").as(c)): _*)
+          .unionByName(insertsOf(target, target, m).select(pcs: _*))
     }
     // each tuple's raw values (they prune the scan), then the strings
     // the writer names its directories by: Spark's own cast (JVM
@@ -186,37 +189,38 @@ object MergeInto {
   }
 
   /** Hive cardinality check (enforce.cardinality.check): error only
-    * when multiple SOURCE rows match the same TARGET row. `keys` must
-    * be the FULL target key set — a column-pruned scan, never the
-    * partition-pruned one (a duplicate match in an unaffected
-    * partition still violates). Duplicate keys among not-matched
-    * source rows are legal and insert multiple rows. */
-  private def cardinalityCheck(keys: DataFrame, source: DataFrame,
-      key: String): Unit = {
-    val dups = source.join(keys, Seq(key), "left_semi")
-      .groupBy(col(key)).agg(count(lit(1)).as("__n"))
+    * when multiple SOURCE rows meet `on` for the same TARGET row.
+    * Target rows are told apart by a row id, not by value, so equal
+    * rows each count their own matches. `whole` must be the FULL target
+    * (a duplicate match in an unaffected partition still violates).
+    * Source rows that match nothing may repeat: they insert. */
+  private def cardinalityCheck(whole: DataFrame, m: Merge): Unit = {
+    val dups = m.join(
+        whole.withColumn("__rid", monotonically_increasing_id()), "inner")
+      .groupBy(col("__rid")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).limit(1).count()
     if (dups > 0) throw new IllegalArgumentException(
-      s"MERGE cardinality violation: multiple source rows match one " +
-        s"target row on key '$key'")
+      "MERGE cardinality violation: multiple source rows match one " +
+        "target row")
   }
 
-  /** The NOT MATCHED insert rows. `keys` must be the FULL target key
-    * set (a source row matched only in an unaffected partition is
-    * still matched — not an insert). */
-  private def insertsOf(t: DataFrame, keys: DataFrame, m: Merge)
+  /** The NOT MATCHED insert rows: source rows that meet `on` with no
+    * row of `whole`, which must be the FULL target (a source row
+    * matched only in an unaffected partition is still matched — not an
+    * insert). */
+  private def insertsOf(t: DataFrame, whole: DataFrame, m: Merge)
       : DataFrame = {
+    val (ta, sa) = m.aliases
     val sCols = m.source.columns.toSet
-    val unmatchedSrc = m.source.alias("s")
-      .join(keys.select(col(m.key).as("__tk")),
-        col(s"s.${m.key}") === col("__tk"), "left_anti")
+    val unmatchedSrc = m.source.alias(sa)
+      .join(whole.alias(ta), m.on, "left_anti")
     val (frames, _) = m.notMatched.foldLeft(
         (Seq.empty[DataFrame], lit(false): Column)) {
       case ((acc, prior), ins) =>
         val cond = ins.cond.getOrElse(lit(true)) && !prior
         val rows = unmatchedSrc.filter(cond).select(t.columns.map { c =>
           cvCast(ins.values.getOrElse(c,
-            if (sCols(c)) col(s"s.$c") else lit(null)),
+            if (sCols(c)) col(s"$sa.$c") else lit(null)),
             t.schema(c).dataType).as(c)
         }.toIndexedSeq: _*)
         (acc :+ rows, prior || ins.cond.getOrElse(lit(true)))
@@ -227,9 +231,10 @@ object MergeInto {
   /** The surviving (kept/updated) target rows of the merge over `t` —
     * `t` may be the partition-pruned scan. */
   private def keptOf(t: DataFrame, m: Merge): DataFrame = {
-    val joined = t.alias("t").join(m.source.alias("s"),
-      col(s"t.${m.key}") === col(s"s.${m.key}"), "left")
-    val isMatched = col(s"s.${m.key}").isNotNull
+    val ta = m.aliases._1
+    val joined =
+      m.join(t, "left", m.source.withColumn("__matched", lit(true)))
+    val isMatched = col("__matched").isNotNull
     def armed(a: MatchedAction): Column =
       isMatched && a.cond.getOrElse(lit(true))
     val keepChain = chain(m.matched.map(a =>
@@ -239,9 +244,9 @@ object MergeInto {
         case UpdateAction(set, _) => set.collectFirst {
           case (k, v) if k.equalsIgnoreCase(c) =>
             cvCast(v, t.schema(c).dataType)
-        }.getOrElse(col(s"t.$c"))
-        case _: DeleteAction => col(s"t.$c")
-      })), col(s"t.$c")).as(c)
+        }.getOrElse(col(s"$ta.$c"))
+        case _: DeleteAction => col(s"$ta.$c")
+      })), col(s"$ta.$c")).as(c)
     }.toIndexedSeq: _*)
   }
 
@@ -268,12 +273,12 @@ object MergeInto {
     * caller-collected distinct affected tuples as (column, rendered
     * value) — bounded by partition count, not row count — and the same
     * tuples already pruned the target scan `df` was computed from. The
-    * staging directory never outlives the call. Returns the specs of
-    * the affected partitions that staged rows. */
+    * staging directory never outlives the call. Returns each affected
+    * partition's spec and whether it staged rows. */
   private def rewritePartitions(spark: SparkSession, df: DataFrame,
       path: String, partitionCols: Seq[String],
       specs: Seq[Seq[(String, String)]], format: String)
-      : Seq[Map[String, String]] = {
+      : Seq[(Map[String, String], Boolean)] = {
     if (specs.isEmpty) return Nil // nothing matched or inserted: no-op
     val dst = new Path(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -295,7 +300,7 @@ object MergeInto {
       }.toSet
       // affected partitions that staged nothing were fully emptied:
       // remove their live directories
-      specs.flatMap { spec =>
+      specs.map { spec =>
         val rel = spec.map { case (c, v) =>
           ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")
         val staged = stagedRels.contains(rel)
@@ -309,7 +314,7 @@ object MergeInto {
             parent = parent.getParent
           }
         }
-        Option.when(staged)(spec.toMap)
+        spec.toMap -> staged
       }
     } finally fs.delete(tmp, true)
   }

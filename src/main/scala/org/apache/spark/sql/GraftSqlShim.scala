@@ -17,15 +17,13 @@ object GraftSqlShim {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** Executes a logical plan on the session (commands run eagerly,
-    * exactly once) and returns its result rows. Used by graft's
-    * deferred-persist command wrapper on the Spark Connect path. */
-  def runPlan(session: SparkSession,
+  /** The DataFrame of a (possibly unresolved) logical plan; a command
+    * plan runs eagerly, exactly once. */
+  def dataFrame(session: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Seq[Row] =
+      : DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
-      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      plan).collect().toSeq
+      session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Eagerly converts the Column's node tree to a Catalyst expression.
     * Needed when an expression built from Column API (e.g. a typed UDAF

@@ -335,4 +335,88 @@ class AuthEnforcementSpec extends SparkSpec {
     h.sql("set user.name=hive_test_user")
     fresh("off_t")
   }
+
+  /** Tables for the MERGE privilege cases: user1 may UPDATE and INSERT
+    * into mg_acc2 and read mg_src; mg_acc and mg_secret grant user1
+    * nothing. `body` runs as user1. */
+  private def mergeTables(body: HiveStatements => Unit): Unit =
+    withEnforcement { h =>
+      val tables = Seq("mg_acc", "mg_acc2", "mg_src", "mg_secret")
+      fresh(tables: _*)
+      try {
+        tables.foreach(t =>
+          h.sql(s"create table $t(k int, v string) stored as parquet"))
+        h.sql("insert into mg_acc2 values (1, 'a')")
+        h.sql("insert into mg_src values (1, 'b')")
+        h.sql("grant update on table mg_acc2 to user user1")
+        h.sql("grant insert on table mg_acc2 to user user1")
+        h.sql("grant select on table mg_src to user user1")
+        h.sql("set user.name=user1")
+        body(h)
+      } finally {
+        h.sql("set user.name=hive_test_user")
+        fresh(tables: _*)
+      }
+    }
+
+  test("MERGE into an AS-aliased target is checked") {
+    mergeTables { h =>
+      assert(denialOf(h, "merge into mg_acc as t using mg_src s " +
+        "on t.k = s.k when matched then update set v = s.v").contains(
+        "[UPDATE] on Object [type=TABLE_OR_VIEW, name=default.mg_acc]"))
+    }
+  }
+
+  test("MERGE needs SELECT on every table its USING subquery reads") {
+    mergeTables { h =>
+      assert(denialOf(h, "merge into mg_acc2 t using (select k, v from " +
+        "mg_secret) s on t.k = s.k when matched then update set v = s.v")
+        .contains("[SELECT] on Object [type=TABLE_OR_VIEW, " +
+          "name=default.mg_secret]"))
+    }
+  }
+
+  test("MERGE asks the privileges of its actions, not of words in its " +
+      "literals: an UPDATE setting 'delete me' needs no DELETE") {
+    mergeTables { h =>
+      h.sql("merge into mg_acc2 t using mg_src s on t.k = s.k " +
+        "when matched then update set v = 'delete me' " +
+        "when not matched then insert values (s.k, s.v)")
+      assert(spark.table("mg_acc2").collect().map(_.getString(1)).toSeq ===
+        Seq("delete me"))
+    }
+  }
+
+  test("row-level DML needs SELECT on a table it reads only in a " +
+      "subquery: a MERGE SET or ON, an UPDATE SET, a DELETE WHERE") {
+    mergeTables { h =>
+      h.sql("set user.name=hive_test_user")
+      h.sql("grant delete on table mg_acc2 to user user1")
+      h.sql("grant select on table mg_acc2 to user user1")
+      h.sql("set user.name=user1")
+      for (q <- Seq(
+          "merge into mg_acc2 t using mg_src s on t.k = s.k when matched " +
+            "then update set v = (select max(v) from mg_secret)",
+          "merge into mg_acc2 t using mg_src s on t.k = s.k and t.k in " +
+            "(select k from mg_secret) when matched then delete",
+          "merge into mg_acc2 t using mg_src s on t.k = s.k when matched " +
+            "and exists (select 1 from mg_secret) then delete",
+          "update mg_acc2 set v = (select max(v) from mg_secret)",
+          "delete from mg_acc2 where k in (select k from mg_secret)"))
+        assert(denialOf(h, q).contains("[SELECT] on Object " +
+          "[type=TABLE_OR_VIEW, name=default.mg_secret]"), q)
+      assert(spark.table("mg_acc2").collect().map(_.getString(1)).toSeq ===
+        Seq("a"))
+    }
+  }
+
+  test("MERGE is checked on the text it runs as: a source that Spark's " +
+      "grammar reads only after the dialect rewrite (LIMIT o, n) runs") {
+    mergeTables { h =>
+      h.sql("merge into mg_acc2 t using (select k, v from mg_src " +
+        "limit 0, 1) s on t.k = s.k when matched then update set v = s.v")
+      assert(spark.table("mg_acc2").collect().map(_.getString(1)).toSeq ===
+        Seq("b"))
+    }
+  }
 }

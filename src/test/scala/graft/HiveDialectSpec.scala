@@ -177,4 +177,22 @@ class HiveDialectSpec extends AnyFunSuite {
       assert(spark.sql(dd.rewrite(s"select $c")).head().getString(0) ===
         "ABC", c))
   }
+
+  test("merge-insert-columns lists the MERGE target's columns for a " +
+      "column-less INSERT VALUES, in code only") {
+    spark.sql("SELECT 1 AS k, 'a' AS v, 'x' AS p")
+      .createOrReplaceTempView("hd_merge_t")
+    val dd = d
+    val head = "MERGE INTO hd_merge_t t USING src s ON t.k = s.k WHEN " +
+      "NOT MATCHED "
+    assert(dd.rewrite(head + "THEN INSERT VALUES (s.k, s.v, s.p)") ===
+      head + "THEN INSERT (`k`, `v`, `p`) VALUES (s.k, s.v, s.p)")
+    for (q <- Seq(
+        // the trigger inside a literal
+        "MERGE INTO hd_merge_t t USING src s ON t.k = s.k WHEN MATCHED " +
+          "THEN UPDATE SET v = 'then INSERT VALUES ('",
+        // an explicit column list
+        head + "THEN INSERT (k, v, p) VALUES (s.k, s.v, s.p)"))
+      assert(dd.rewrite(q) === q)
+  }
 }

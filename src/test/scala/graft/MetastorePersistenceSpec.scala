@@ -70,6 +70,64 @@ class MetastorePersistenceSpec extends SparkSpec {
     }
   }
 
+  test("a partition that DELETE empties survives a restart: SHOW " +
+      "PARTITIONS still lists it, as Hive keeps it") {
+    val base = java.nio.file.Files.createTempDirectory("graft_msrs")
+    spark.conf.set("spark.graft.metastore.path", s"$base/metastore.ledger")
+    try {
+      val h1 = new HiveStatements(spark)
+      freshTable("pz_rs")
+      h1.sql("CREATE EXTERNAL TABLE pz_rs (k INT) PARTITIONED BY " +
+        s"(ds STRING) STORED AS PARQUET LOCATION '$base/pz_rs'")
+      h1.sql("INSERT INTO pz_rs PARTITION (ds) VALUES (1, 'a'), (2, 'b'), " +
+        "(3, 'c')")
+      h1.sql("DELETE FROM pz_rs WHERE ds = 'a'")
+      def parts(h: HiveStatements) = h.sql("SHOW PARTITIONS pz_rs").get
+        .collect().map(_.getString(0)).toSeq.sorted
+      assert(parts(h1) === Seq("ds=a", "ds=b", "ds=c"))
+      // the "restart": catalog forgets, files + ledger survive
+      spark.sessionState.catalog.dropTable(
+        org.apache.spark.sql.catalyst.TableIdentifier("pz_rs"),
+        ignoreIfNotExists = false, purge = false)
+      val h2 = new HiveStatements(spark)
+      assert(parts(h2) === Seq("ds=a", "ds=b", "ds=c"))
+      assert(h2.sql("SELECT k FROM pz_rs").get.collect().map(_.getInt(0))
+        .sorted.toSeq === Seq(2, 3))
+    } finally {
+      spark.conf.unset("spark.graft.metastore.path")
+      freshTable("pz_rs")
+    }
+  }
+
+  test("a renamed partition that held rows leaves SHOW PARTITIONS, in " +
+      "the session and after a restart") {
+    val base = java.nio.file.Files.createTempDirectory("graft_msrn")
+    spark.conf.set("spark.graft.metastore.path", s"$base/metastore.ledger")
+    try {
+      val h1 = new HiveStatements(spark)
+      freshTable("pz_rn")
+      h1.sql("CREATE EXTERNAL TABLE pz_rn (k INT) PARTITIONED BY " +
+        s"(ds STRING) STORED AS PARQUET LOCATION '$base/pz_rn'")
+      h1.sql("INSERT INTO pz_rn PARTITION (ds) VALUES (1, 'a'), (2, 'b')")
+      h1.sql("ALTER TABLE pz_rn PARTITION (ds = 'a') RENAME TO " +
+        "PARTITION (ds = 'c')")
+      def parts(h: HiveStatements) = h.sql("SHOW PARTITIONS pz_rn").get
+        .collect().map(_.getString(0)).toSeq.sorted
+      assert(parts(h1) === Seq("ds=b", "ds=c"))
+      spark.sessionState.catalog.dropTable(
+        org.apache.spark.sql.catalyst.TableIdentifier("pz_rn"),
+        ignoreIfNotExists = false, purge = false)
+      val h2 = new HiveStatements(spark)
+      assert(parts(h2) === Seq("ds=b", "ds=c"))
+      assert(h2.sql("SELECT k, ds FROM pz_rn").get.collect()
+        .map(r => (r.getInt(0), r.getString(1))).sorted.toSeq ===
+        Seq((1, "c"), (2, "b")))
+    } finally {
+      spark.conf.unset("spark.graft.metastore.path")
+      freshTable("pz_rn")
+    }
+  }
+
   test("catalog DATA tables re-register from the ledger: a fresh " +
       "dispatcher serves SELECT after the in-memory catalog forgot " +
       "the binding (restart recovery, not just DESCRIBE)") {

@@ -159,18 +159,102 @@ class RowRewriteSpec extends SparkSpec {
       "WHEN MATCHED THEN UPDATE SET n = s.n"))
   }
 
-  test("parseMerge ends a parenthesised source at its balanced close") {
-    val src = "(SELECT c_custkey AS acct, c_name AS name, c_acctbal + 5 " +
-      "AS balance FROM customer WHERE c_custkey % 20 = 3)"
-    val clauses = "WHEN MATCHED THEN UPDATE SET balance = s.balance " +
-      "WHEN NOT MATCHED THEN INSERT VALUES (s.acct, s.name, s.balance)"
-    assert(HiveStatements.parseMerge(s"MERGE INTO accounts t USING $src " +
-      s"s ON t.acct = s.acct $clauses") ===
-      Some(("accounts", "t", src, "s", "t.acct = s.acct", clauses)))
-    assert(HiveStatements.parseMerge("MERGE INTO tm USING (SELECT " +
-      "CAST(2.7 AS DECIMAL(3,1)) AS n) AS s ON tm.k = s.k WHEN MATCHED " +
-      "THEN DELETE").map(_._3) ===
-      Some("(SELECT CAST(2.7 AS DECIMAL(3,1)) AS n)"))
+  // a parenthesised USING subquery ends at its balanced close
+  test("MERGE reads a USING subquery past a ')' inside a literal") {
+    val (c, s) = pair("mrgq", "PARQUET")
+    try {
+      h.sql(s"MERGE INTO $c t USING (SELECT 2 AS k, 99 AS n, 'a) b' AS v, " +
+        "'a' AS p UNION ALL SELECT 4, 40, ')', 'c') s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.n, s.v, s.p)")
+      // an unaliased target, an AS-aliased source
+      h.sql(s"MERGE INTO $c USING (SELECT 3 AS k, ')' AS v) AS s " +
+        s"ON $c.k = s.k WHEN MATCHED THEN DELETE")
+      assert(rowsOf(spark.newSession().table(c)) ===
+        Seq("[1,10,x,a]", "[2,20,a) b,a]", "[4,40,),c]"))
+    } finally {
+      spark.catalog.dropTempView(s)
+      h.sql(s"DROP TABLE IF EXISTS $c")
+    }
+  }
+
+  /** `pz_<name>`: (k INT, v STRING) and a column p, the partition
+    * column when `partitioned`, holding `rows`; `body` runs on it. */
+  private def kvp(name: String, partitioned: Boolean,
+      rows: (Int, String, String)*)(body: String => Unit): Unit = {
+    val t = s"pz_$name"
+    freshTable(t)
+    try {
+      h.sql(s"CREATE TABLE $t (k INT, v STRING" + (if (partitioned)
+        ") PARTITIONED BY (p STRING)" else ", p STRING)") +
+        " STORED AS PARQUET")
+      h.sql(s"INSERT INTO $t" + (if (partitioned) " PARTITION (p)" else "") +
+        rows.map { case (k, v, p) => s"($k, '$v', '$p')" }
+          .mkString(" VALUES ", ", ", ""))
+      body(t)
+    } finally freshTable(t)
+  }
+
+  private def kvpRows(t: String): Seq[String] =
+    rowsOf(spark.newSession().table(t).select("k", "v", "p"))
+
+  for (partitioned <- Seq(true, false)) {
+    val kind = if (partitioned) "partitioned" else "unpartitioned"
+
+    test(s"MERGE keeps every ON conjunct ($kind): one source row " +
+        "updates only the target row meeting the whole ON, and a source " +
+        "row meeting it nowhere inserts") {
+      kvp(s"on_$partitioned", partitioned, (1, "a", "x"), (1, "b", "y")) {
+        t =>
+          h.sql(s"MERGE INTO $t t USING (SELECT 1 AS k, 'q' AS v, 'x' AS p) " +
+            "s ON t.k = s.k AND t.p = s.p WHEN MATCHED THEN UPDATE SET v = s.v")
+          assert(kvpRows(t) === Seq("[1,b,y]", "[1,q,x]"))
+          h.sql(s"MERGE INTO $t t USING (SELECT 1 AS k, 'n' AS v, 'z' AS p) " +
+            "s ON t.k = s.k AND t.p = s.p WHEN MATCHED THEN UPDATE SET " +
+            "v = s.v WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v, s.p)")
+          assert(kvpRows(t) === Seq("[1,b,y]", "[1,n,z]", "[1,q,x]"))
+      }
+    }
+
+    test(s"MERGE keeps string literals that look like its aliases " +
+        s"($kind)") {
+      kvp(s"lit_$partitioned", partitioned, (1, "a", "x")) { t =>
+        h.sql(s"MERGE INTO $t a USING (SELECT 1 AS k) s ON a.k = s.k " +
+          "WHEN MATCHED THEN UPDATE SET v = 'a.b and s.c'")
+        assert(kvpRows(t) === Seq("[1,a.b and s.c,x]"))
+      }
+    }
+
+    test(s"MERGE counts source matches under the whole ON ($kind): two " +
+        "source rows share the target key, one meets the full ON") {
+      kvp(s"card_$partitioned", partitioned, (1, "a", "x")) { t =>
+        h.sql(s"MERGE INTO $t t USING (SELECT 1 AS k, 'q' AS v, 'x' AS p " +
+          "UNION ALL SELECT 1, 'r', 'y') s ON t.k = s.k AND t.p = s.p " +
+          "WHEN MATCHED THEN UPDATE SET v = s.v")
+        assert(kvpRows(t) === Seq("[1,q,x]"))
+      }
+    }
+  }
+
+  test("row-level DML outside Hive's surface throws a named error and " +
+      "changes nothing") {
+    kvp("outside", true, (1, "a", "x")) { t =>
+      val head = s"MERGE INTO $t t USING (SELECT 1 AS k, 'q' AS v, " +
+        "'y' AS p) s ON t.k = s.k "
+      for ((stmt, form) <- Seq(
+          head + "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT " +
+            "MATCHED BY SOURCE THEN DELETE" -> "WHEN NOT MATCHED BY SOURCE",
+          head + "WHEN MATCHED THEN UPDATE SET *" -> "UPDATE SET *",
+          head + "WHEN NOT MATCHED THEN INSERT *" -> "INSERT *",
+          s"UPDATE $t SET v = 'q' WHERE (k = 1" -> "does not parse",
+          s"DELETE FROM $t WHERE k =" -> "does not parse",
+          // Spark's grammar reads WHERE here as a table alias
+          s"DELETE FROM $t WHERE" -> "is outside Hive's row-level DML")) {
+        val e = intercept[IllegalArgumentException](h.sql(stmt))
+        assert(e.getMessage.contains(form), stmt)
+        assert(kvpRows(t) === Seq("[1,a,x]"), stmt)
+      }
+    }
   }
 
   test("IMPORT of a new table creates a partitioned catalog table") {

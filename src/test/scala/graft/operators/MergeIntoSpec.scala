@@ -44,7 +44,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "b2", 200.0), (4L, "d", 40.0))
       .toDF("id", "name", "amount")
-    commit(p, MergeInto.Merge(src, "id", updateAll))
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"), updateAll))
     val got = spark.read.parquet(p).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got === Seq((1L, "a", 10.0), (2L, "b2", 200.0),
@@ -54,7 +54,7 @@ class MergeIntoSpec extends SparkSpec {
   test("MERGE with deleteMatched removes source keys") {
     val p = freshTable()
     val src = Seq((1L, "x", 0.0), (3L, "y", 0.0)).toDF("id", "name", "amount")
-    commit(p, MergeInto.Merge(src, "id",
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"),
       Seq(MergeInto.DeleteAction()), notMatched = Nil))
     val got = spark.read.parquet(p).select("id").as[Long].collect().toSeq
     assert(got === Seq(2L))
@@ -69,7 +69,7 @@ class MergeIntoSpec extends SparkSpec {
     //   UPDATE SET amount = t.amount + s.amount, name = s.name
     // (matched rows hitting neither clause stay untouched)
     // WHEN NOT MATCHED THEN INSERT
-    commit(p, MergeInto.Merge(src, "id",
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"),
       matched = Seq(
         MergeInto.DeleteAction(Some(col("s.amount") === 0)),
         MergeInto.UpdateAction(
@@ -85,7 +85,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((4L, 40.0), (5L, 5.0)).toDF("id", "amount")
     // insert only big rows; name is not a source column -> expr or null
-    commit(p, MergeInto.Merge(src, "id",
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"),
       matched = Nil,
       notMatched = Seq(MergeInto.InsertAction(
         values = Map("name" -> lit("new")),
@@ -100,7 +100,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshTable()
     val src = Seq((2L, "x", 1.0), (2L, "y", 2.0)).toDF("id", "name", "amount")
     val e = intercept[IllegalArgumentException] {
-      commit(p, MergeInto.Merge(src, "id", updateAll))
+      commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"), updateAll))
     }
     assert(e.getMessage.contains("cardinality"))
   }
@@ -110,7 +110,7 @@ class MergeIntoSpec extends SparkSpec {
     // matching the same TARGET row; unmatched duplicates insert.
     val p = freshTable()
     val src = Seq((9L, "x", 1.0), (9L, "y", 2.0)).toDF("id", "name", "amount")
-    commit(p, MergeInto.Merge(src, "id", updateAll))
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"), updateAll))
     val got = spark.read.parquet(p).filter($"id" === 9)
       .select("name").as[String].collect().sorted.toSeq
     assert(got === Seq("x", "y"))
@@ -136,7 +136,7 @@ class MergeIntoSpec extends SparkSpec {
     Thread.sleep(1100)
     val src = Seq((1L, "us", 11.0), (5L, "eu", 50.0))
       .toDF("id", "region", "amount")
-    commit(p, MergeInto.Merge(src, "id",
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"),
       matched = Seq(
         MergeInto.UpdateAction(Map("amount" -> col("s.amount"))))),
       partitionCols = Seq("region"))
@@ -195,7 +195,7 @@ class MergeIntoSpec extends SparkSpec {
     val p = freshPartitioned()
     val src = Seq((3L, "eu", 0.0), (5L, "ap", 50.0))
       .toDF("id", "region", "amount")
-    commit(p, MergeInto.Merge(src, "id",
+    commit(p, MergeInto.Merge(src, col("t.id") === col("s.id"),
       matched = Seq(MergeInto.DeleteAction())),
       partitionCols = Seq("region"))
     assert(!new java.io.File(s"$p/region=eu").exists())
